@@ -50,7 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         new FunctionIdentifier(name),
         new ExpressionInfo(classOf[Ner.type].getName, name),
-        (children: Seq[Expression]) => Ner.expressionBuilder(name)(children)))
+        (children: Seq[Expression]) => Ner.expressionBuilder(name, Ner.ConfPath)(children)))
     }
     kernelBuilders.foreach { case (name, (clazz, builder)) =>
       ext.injectFunction((

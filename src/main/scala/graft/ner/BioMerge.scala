@@ -13,8 +13,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object BioMerge {
 
-  final case class Entity(entity: String, label: String)
-
   /** `label_map` from `src/ner_extension.cpp:97`. */
   val LabelMap: Array[String] =
     Array("O", "MISC", "MISC", "PER", "PER", "ORG", "ORG", "LOC", "LOC")
@@ -52,8 +50,8 @@ object BioMerge {
     *   - an entity's label comes from its *first* token;
     *   - entity flushed on O, on group change, and at end of input.
     */
-  def merge(tokens: IndexedSeq[String], bestLabels: IndexedSeq[Int]): Seq[Entity] = {
-    val entities = new ArrayBuffer[Entity]
+  def merge(tokens: IndexedSeq[String], bestLabels: IndexedSeq[Int]): Seq[NerEntity] = {
+    val entities = new ArrayBuffer[NerEntity]
     var curText = ""
     var curLabel = ""
     var lastGroup = 0
@@ -69,18 +67,18 @@ object BioMerge {
           if (group == lastGroup && (best % 2 == 0 || isSubword)) {
             curText += (if (isSubword) "" else " ") + clean
           } else {
-            if (lastGroup != 0) entities += Entity(curText, curLabel)
+            if (lastGroup != 0) entities += NerEntity(curText, curLabel)
             curText = clean
             curLabel = collapsedLabel(best)
           }
         } else {
-          if (lastGroup != 0) entities += Entity(curText, curLabel)
+          if (lastGroup != 0) entities += NerEntity(curText, curLabel)
         }
         lastGroup = group
       }
       t += 1
     }
-    if (lastGroup != 0) entities += Entity(curText, curLabel)
+    if (lastGroup != 0) entities += NerEntity(curText, curLabel)
     entities.toSeq
   }
 }

@@ -1,6 +1,6 @@
 package graft.ner
 
-/** Dot / axpy kernels behind a monomorphic dispatch: the SIMD variant uses
+/** Dot / matmul kernels behind a monomorphic dispatch: the SIMD variant uses
   * the Java 17 Vector API (`jdk.incubator.vector`, public JDK API — the JVM
   * analogue of ggml's hand-vectorized F32 kernels) when the module is on the
   * runtime (`--add-modules jdk.incubator.vector`, set in build.sbt for all
@@ -10,9 +10,6 @@ package graft.ner
 private[graft] trait DotKernel {
   /** sum_i x(xo+i) * w(wo+i) */
   def dot(x: Array[Float], xo: Int, w: Array[Float], wo: Int, len: Int): Float
-  /** y(yo+i) += a * v(vo+i) */
-  def axpy(a: Float, v: Array[Float], vo: Int, y: Array[Float], yo: Int,
-      len: Int): Unit
   /** One activation row through a TRANSPOSED-weight linear:
     * y(yo+o) = b(o) + sum_i x(xo+i) * wt(wo + i*ldw + o)  for o in [0, out)
     * — `ldw` is the leading dimension of the [in x ldw] transposed panel,
@@ -219,12 +216,6 @@ private[graft] object ScalarKernel extends DotKernel {
     (a0 + a1) + (a2 + a3)
   }
 
-  override def axpy(a: Float, v: Array[Float], vo: Int, y: Array[Float],
-      yo: Int, len: Int): Unit = {
-    var i = 0
-    while (i < len) { y(yo + i) = Math.fma(a, v(vo + i), y(yo + i)); i += 1 }
-  }
-
   override def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
       wo: Int, ldw: Int, out: Int, b: Array[Float], y: Array[Float],
       yo: Int): Unit = {
@@ -289,20 +280,6 @@ private[graft] object SimdKernel extends DotKernel {
     var s = acc.reduceLanes(VectorOperators.ADD)
     while (i < len) { s += x(xo + i) * w(wo + i); i += 1 }
     s
-  }
-
-  override def axpy(a: Float, v: Array[Float], vo: Int, y: Array[Float],
-      yo: Int, len: Int): Unit = {
-    val av = FloatVector.broadcast(sp, a)
-    val upper = sp.loopBound(len)
-    var i = 0
-    while (i < upper) {
-      FloatVector.fromArray(sp, v, vo + i)
-        .fma(av, FloatVector.fromArray(sp, y, yo + i))
-        .intoArray(y, yo + i)
-      i += sp.length
-    }
-    while (i < len) { y(yo + i) += a * v(vo + i); i += 1 }
   }
 
   override def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float],

@@ -12,9 +12,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * round-trip, the entity list is written straight as Catalyst
   * `ArrayData[InternalRow]`.
   *
-  * Semantics are identical to the UDF forms in [[Ner]] (same `evalRow`):
-  * lazy conf-keyed model, `[]` (even for NULL input) with no model, NULL
-  * passthrough with a model, the reference's exact truncate-overflow error.
+  * Rows go through [[Ner.evalWith]] with the model `source` resolves to
+  * (the session conf path, or a broadcast from [[Ner.registerBroadcast]]):
+  * `[]` (even for NULL input) with no model, NULL passthrough with a model,
+  * the reference's exact truncate-overflow error.
+  *
+  * Fidelity note: the reference reads the 2-arg `truncate` flag once per
+  * 2048-row chunk from row 0 (`src/ner_extension.cpp:54-61`) — passing a
+  * boolean *column* there applies row 0's value to the whole chunk. This
+  * expression evaluates the flag per row, which is strictly more precise;
+  * with the literal arguments the reference's tests and docs use, behavior
+  * is identical.
   *
   * Marked [[Nondeterministic]] — the Catalyst analogue of the reference's
   * `FunctionStability::VOLATILE` (`src/ner_extension.cpp:201-203`): results
@@ -22,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * must be blocked. Evaluation falls back to interpreted mode
   * ([[CodegenFallback]]); the surrounding projection still codegens.
   */
-case class NerExtractExpression(text: Expression, truncateExpr: Expression)
+case class NerExtractExpression(text: Expression, truncateExpr: Expression,
+    source: Ner.ModelSource)
     extends Expression with Nondeterministic with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(text, truncateExpr)
@@ -37,7 +46,7 @@ case class NerExtractExpression(text: Expression, truncateExpr: Expression)
     val t = text.eval(input)
     val tr = truncateExpr.eval(input)
     val truncate = tr == null || tr == true // NULL keeps the default, like the reference's row-0 validity check
-    val entities = Ner.evalRow(
+    val entities = Ner.evalWith(Ner.modelFor(source),
       if (t == null) null else t.toString, truncate)
     if (entities == null) null
     else {

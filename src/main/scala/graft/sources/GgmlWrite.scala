@@ -170,14 +170,11 @@ private[sources] class GgmlDataWriter(path: String, schema: StructType,
       "ggml sink: tensor/shape/dtype/payload must be non-null")
     val name = row.getUTF8String(iTensor).toString
     val dims = row.getArray(iShape).toIntArray()
-    val ftype = row.getUTF8String(iDtype).toString match {
-      case "F32" => 0
-      case "F16" => 1
-      case "Q4_0" => 2
-      case other => throw new IllegalArgumentException(
-        s"ggml sink: tensor '$name': unknown dtype '$other' " +
-          "(F32 | F16 | Q4_0)")
-    }
+    val dtype = row.getUTF8String(iDtype).toString
+    val ftype = ModelFormat.ftypeOf(dtype).getOrElse(
+      throw new IllegalArgumentException(
+        s"ggml sink: tensor '$name': unknown dtype '$dtype' " +
+          "(F32 | F16 | Q4_0)"))
     val payload = row.getBinary(iPayload)
     if (out == null) out = new DataOutputStream(new BufferedOutputStream(
       new FileOutputStream(staged)))

@@ -7,7 +7,9 @@ import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import graft.ner.ModelFormat
+import scala.jdk.CollectionConverters._
+
+import graft.ner.{ModelFormat, NerHparams}
 
 /** A8: HF→GGML converter — the Scala port of the reference's
   * `scripts/convert_ner_to_ggml.py:1-92`, operating on a locally
@@ -32,7 +34,7 @@ import graft.ner.ModelFormat
   * num_attention_heads, num_hidden_layers, ftype, num_labels),
   * length-prefixed UTF-8 vocab, then per tensor: (n_dims, name_len,
   * l_type) ints, dims innermost-first, name bytes, data — F16 when
-  * ftype=1 ∧ 2-dim ∧ name ends ".weight", else F32. Name handling
+  * header ftype F16 ∧ 2-dim ∧ name ends ".weight", else F32. Name handling
   * matches the script: strip a leading "bert.", skip
   * `embeddings.position_ids`, squeeze size-1 dims. The emitted file
   * round-trips through [[graft.ner.ModelFormat.load]] (the repo's
@@ -109,7 +111,8 @@ object ConvertHf {
     SafeTensors(slots.toSeq.sortBy(_.begin), read, raf)
   }
 
-  def convert(hfDir: String, outPath: String, ftype: Int = 1): Unit = {
+  def convert(hfDir: String, outPath: String,
+      ftype: Int = ModelFormat.F16): Unit = {
     val cfgNode = new ObjectMapper()
       .readTree(new String(Files.readAllBytes(
         Paths.get(hfDir, "config.json")), StandardCharsets.UTF_8))
@@ -139,21 +142,18 @@ object ConvertHf {
 
     val out = new DataOutputStream(new BufferedOutputStream(
       new FileOutputStream(outPath)))
-    def i32(v: Int): Unit = out.writeInt(Integer.reverseBytes(v))
     try {
-      i32(ModelFormat.Magic)
-      i32(cfg("vocab_size"))
-      i32(cfg("max_position_embeddings"))
-      i32(cfg("hidden_size"))
-      i32(cfg("intermediate_size"))
-      i32(cfg("num_attention_heads"))
-      i32(cfg("num_hidden_layers"))
-      i32(ftype)
-      i32(numLabels)
-      vocab.forEach { w =>
-        val b = w.getBytes(StandardCharsets.UTF_8)
-        i32(b.length); out.write(b)
-      }
+      val hp = NerHparams(
+        nVocab = cfg("vocab_size"),
+        nMaxTokens = cfg("max_position_embeddings"),
+        nEmbd = cfg("hidden_size"),
+        nIntermediate = cfg("intermediate_size"),
+        nHead = cfg("num_attention_heads"),
+        nLayer = cfg("num_hidden_layers"),
+        f16 = ftype,
+        nLabels = numLabels)
+      ModelFormat.writeHeader(out, hp,
+        vocab.iterator.asScala.map(_.getBytes(StandardCharsets.UTF_8)))
       slots.foreach { t =>
         val cleanName =
           if (t.name.startsWith("bert.")) t.name.substring(5) else t.name
@@ -163,17 +163,15 @@ object ConvertHf {
             case s => s
           }
           val data = read(t)
-          val nDims = squeezed.length
-          val f16 = ftype == 1 && nDims == 2 && cleanName.endsWith(".weight")
-          val nameBytes = cleanName.getBytes(StandardCharsets.UTF_8)
-          i32(nDims); i32(nameBytes.length); i32(if (f16) 1 else 0)
           // dims innermost-first (convert_ner_to_ggml.py:86-87)
-          squeezed.reverse.foreach(i32)
-          out.write(nameBytes)
-          if (f16) data.foreach { v =>
-            val h = ModelFormat.floatToF16(v)
-            out.write(h & 0xff); out.write((h >>> 8) & 0xff)
-          } else data.foreach(v => i32(java.lang.Float.floatToIntBits(v)))
+          val dims = squeezed.reverse.toArray
+          if (ftype == ModelFormat.F16 && dims.length == 2 &&
+            cleanName.endsWith(".weight"))
+            ModelFormat.writeTensorRecord(out, cleanName, dims, ModelFormat.F16,
+              ModelFormat.f16Payload(data.map(ModelFormat.floatToF16(_).toShort)))
+          else
+            ModelFormat.writeTensorRecord(out, cleanName, dims, ModelFormat.F32,
+              ModelFormat.f32Payload(data))
         }
       }
     } finally {
@@ -185,7 +183,7 @@ object ConvertHf {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ConvertHf <hf_model_dir> <out.bin> [ftype: 1=f16 (default), 0=f32]")
-    val ftype = if (args.length > 2) args(2).toInt else 1
+    val ftype = if (args.length > 2) args(2).toInt else ModelFormat.F16
     convert(args(0), args(1), ftype)
     println(s"Done! Model saved to ${args(1)}")
   }

@@ -34,17 +34,6 @@ object GraftSqlShim {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Build an evaluable ScalaUDF expression from a public
-    * `UserDefinedFunction` and already-resolved children — the payload of the
-    * arity-dispatching builders registered above.
-    */
-  def udfExpression(
-      f: org.apache.spark.sql.expressions.UserDefinedFunction,
-      children: Seq[Expression]): Expression =
-    org.apache.spark.sql.classic.UserDefinedFunctionUtils.toScalaUDF(
-      f.asInstanceOf[org.apache.spark.sql.expressions.SparkUserDefinedFunction],
-      children)
-
   /** Current value of a session conf key, or None when unset. Works on the
     * driver and inside executor tasks.
     */

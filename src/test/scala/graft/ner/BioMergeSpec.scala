@@ -1,7 +1,7 @@
 package graft.ner
 
 import org.scalatest.funsuite.AnyFunSuite
-import BioMerge.{Entity, merge, argmax}
+import BioMerge.{merge, argmax}
 
 /** Table-driven pins for the reference's BIO state machine
   * (`src/ner_extension.cpp:133-167`). Label indices: O=0, B-MISC=1, I-MISC=2,
@@ -11,61 +11,61 @@ class BioMergeSpec extends AnyFunSuite {
 
   test("B then I merges with a space") {
     assert(merge(Vector("new", "york"), Vector(7, 8)) ==
-      Seq(Entity("new york", "LOC")))
+      Seq(NerEntity("new york", "LOC")))
   }
 
   test("subword merges with no space") {
     assert(merge(Vector("duck", "##db"), Vector(5, 6)) ==
-      Seq(Entity("duckdb", "ORG")))
+      Seq(NerEntity("duckdb", "ORG")))
   }
 
   test("B after B of the same group splits into two entities") {
     assert(merge(Vector("bob", "alice"), Vector(3, 3)) ==
-      Seq(Entity("bob", "PER"), Entity("alice", "PER")))
+      Seq(NerEntity("bob", "PER"), NerEntity("alice", "PER")))
   }
 
   test("a B-tagged subword still continues the current entity") {
     // continuation condition is (even label OR subword)
     assert(merge(Vector("duck", "##db"), Vector(5, 5)) ==
-      Seq(Entity("duckdb", "ORG")))
+      Seq(NerEntity("duckdb", "ORG")))
   }
 
   test("I-tag continuation after an I-tag keeps going") {
     assert(merge(Vector("a", "b", "c"), Vector(3, 4, 4)) ==
-      Seq(Entity("a b c", "PER")))
+      Seq(NerEntity("a b c", "PER")))
   }
 
   test("entity label comes from its first token only") {
     // second token is I-PER(4): same group as B-PER, entity stays labeled PER;
     // starting with I-MISC(2) labels the entity MISC even mid-stream
     assert(merge(Vector("x", "y"), Vector(2, 2)) ==
-      Seq(Entity("x y", "MISC")))
+      Seq(NerEntity("x y", "MISC")))
   }
 
   test("group change flushes and starts a new entity") {
     assert(merge(Vector("bob", "paris"), Vector(3, 7)) ==
-      Seq(Entity("bob", "PER"), Entity("paris", "LOC")))
+      Seq(NerEntity("bob", "PER"), NerEntity("paris", "LOC")))
   }
 
   test("O flushes the current entity") {
     assert(merge(Vector("bob", "went", "home"), Vector(3, 0, 0)) ==
-      Seq(Entity("bob", "PER")))
+      Seq(NerEntity("bob", "PER")))
   }
 
   test("trailing entity is flushed at end of input") {
     assert(merge(Vector("went", "to", "paris"), Vector(0, 0, 7)) ==
-      Seq(Entity("paris", "LOC")))
+      Seq(NerEntity("paris", "LOC")))
   }
 
   test("[CLS] and [SEP] are skipped and do not reset state") {
     // [SEP] between two I-continuations: reference `continue`s without
     // touching last_label_type, so the entity keeps merging
     assert(merge(Vector("[CLS]", "new", "[SEP]", "york", "[SEP]"), Vector(9, 7, 0, 8, 0)) ==
-      Seq(Entity("new york", "LOC")))
+      Seq(NerEntity("new york", "LOC")))
   }
 
   test("I-tag after O starts a fresh entity (no dangling merge)") {
-    assert(merge(Vector("x", "y"), Vector(0, 4)) == Seq(Entity("y", "PER")))
+    assert(merge(Vector("x", "y"), Vector(0, 4)) == Seq(NerEntity("y", "PER")))
   }
 
   test("empty input produces no entities") {

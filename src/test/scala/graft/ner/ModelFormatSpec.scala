@@ -81,6 +81,28 @@ class ModelFormatSpec extends AnyFunSuite {
     for (j <- 0 until 16) assert(data(16 + j) == ((15 - j) - 8) * 2.0f)
   }
 
+  test("a record with an unknown ftype or a ragged Q4_0 block fails load, scan and payloadSize alike") {
+    // (ftype, dims, payload bytes) of each bad record: ftype 3 is not in
+    // the container's table; 40 Q4_0 elements do not fill whole 32-blocks
+    val bad = Seq((3, Array(4), 16), (ModelFormat.Q4_0, Array(40), 18))
+    bad.foreach { case (ftype, dims, nBytes) =>
+      val p = tmp(s"bad-ftype$ftype.bin")
+      TestModels.writeValid(p, weightGen = TestModels.seeded(5))
+      assert(ModelFormat.loadFile(p).isDefined && ModelFormat.scanFile(p).isDefined)
+      val out = new java.io.DataOutputStream(new java.io.FileOutputStream(p, true))
+      try {
+        val name = "encoder.layer.0.output.dense.bias".getBytes("UTF-8")
+        Seq(dims.length, name.length, ftype).foreach(v => out.writeInt(Integer.reverseBytes(v)))
+        dims.foreach(v => out.writeInt(Integer.reverseBytes(v)))
+        out.write(name)
+        out.write(new Array[Byte](nBytes))
+      } finally out.close()
+      assert(ModelFormat.loadFile(p).isEmpty, s"ftype $ftype")
+      assert(ModelFormat.scanFile(p).isEmpty, s"ftype $ftype")
+      assert(ModelFormat.payloadSize(ftype, dims) == -1L, s"ftype $ftype")
+    }
+  }
+
   test("f16 round-trip helper") {
     assert(ModelFormat.f16ToFloat(0x3c00) == 1.0f)
     assert(ModelFormat.f16ToFloat(0xc000) == -2.0f)

@@ -183,6 +183,29 @@ class NerSparkSpec extends SparkTestBase {
     Ner.register(spark) // restore the conf-path variant for other suites
   }
 
+  test("registerBroadcast: the broadcast model is built once per JVM, not per task") {
+    val p = tmp("bcast-once.bin")
+    TestModels.writeValid(p, classifierBias = TestModels.biasFor(5))
+    Ner.registerBroadcast(spark, p)
+    try {
+      val expr = spark.sql("SELECT ner('duckdb is great') AS e").queryExecution
+        .analyzed.expressions
+        .flatMap(_.collect { case e: NerExtractExpression => e }).head
+      // two tasks each deserialize their own copy of the bound expression
+      val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      val copies = Seq.fill(2)(
+        ser.deserialize[NerExtractExpression](ser.serialize(expr)))
+      val resolved = copies.map { c =>
+        c.initialize(0)
+        val out = c.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
+          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        assert(out.numElements() == 3)
+        Ner.modelFor(c.source).get
+      }
+      assert(resolved(0) eq resolved(1))
+    } finally Ner.register(spark)
+  }
+
   test("volatile marking: ner on a literal is not constant-folded") {
     Ner.register(spark)
     unsetPath()
