@@ -33,6 +33,14 @@ object StreamBench {
   private val HourNs = 3600000000000L
   private val HourUs = 3600000000L
 
+  /** Remove a temp directory and everything under it. */
+  private def deleteTree(dir: String): Unit = {
+    val paths = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try paths.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally paths.close()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -57,26 +65,22 @@ object StreamBench {
       (0 until 12).map(j => s"w${(i * 31 + j * 7) % vocab}").mkString(" ")
 
     // each feed is chunked into 4 micro-batches; the driver loop times
-    // query start -> last processAllAvailable
-    def run2[A](name: String, rows: Int)(build: () => (Seq[() => Unit],
-        DataFrame)): (String, Int, Double) = {
+    // query start -> last processAllAvailable. `mode` is the output mode the
+    // operator's spec runs it in: a watermarked aggregation also starts in
+    // Append, but then emits only closed windows, so probing for the first
+    // accepted mode would time different emission semantics.
+    def run2(name: String, rows: Int, mode: OutputMode)(
+        build: () => (Seq[() => Unit], DataFrame)): (String, Int, Double) = {
       def once(): Double = {
         val (feeds, out) = build()
         val ckpt = java.nio.file.Files
           .createTempDirectory(s"graft_sb_$name").toString
-        // operators declare different output semantics
-        // (Append/Update/Complete) — probe in that order
         val t0 = System.nanoTime()
-        val query = Seq(OutputMode.Append(), OutputMode.Update(),
-          OutputMode.Complete()).view.flatMap { m =>
-          try Some(out.writeStream.format("noop")
-            .option("checkpointLocation", s"$ckpt/${m.toString}")
-            .outputMode(m).start())
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        }.headOption.getOrElse(sys.error(s"$name: no output mode accepted"))
+        val query = out.writeStream.format("noop")
+          .option("checkpointLocation", ckpt).outputMode(mode).start()
         try {
           feeds.foreach { feed => feed(); query.processAllAvailable() }
-        } finally query.stop()
+        } finally { query.stop(); deleteTree(ckpt) }
         (System.nanoTime() - t0) / 1e9
       }
       val sec = math.min(once(), once())
@@ -102,46 +106,46 @@ object StreamBench {
         (Base + i.toLong * 1000000L, i.toLong, docText(id, 997))
       }
 
-    results += run2("dedup_fingerprint", docsN) { () =>
+    results += run2("dedup_fingerprint", docsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, String)]
       (feedsOf(in, docRows(docsN, 3)),
         DedupStream.dedupByFingerprint(in.toDF().toDF("ts", "doc_id", "text")))
     }
-    results += run2("topk_tokens", docsN) { () =>
+    results += run2("topk_tokens", docsN, OutputMode.Update()) { () =>
       val in = MemoryStream[(Long, String)]
       val rows = (0 until docsN).map(i => (i.toLong, docText(i, 499)))
       (feedsOf(in, rows),
         TopKStream.attach(in.toDF().toDF("doc_id", "text")).toDF())
     }
-    results += run2("kmv_distinct", docsN) { () =>
+    results += run2("kmv_distinct", docsN, OutputMode.Update()) { () =>
       val in = MemoryStream[(Long, String, String)]
       val rows = (0 until docsN).map(i =>
         (i.toLong, s"src${i % 4}", docText(i, 4999)))
       (feedsOf(in, rows),
         KmvStream.attach(in.toDF().toDF("doc_id", "source", "text")).toDF())
     }
-    results += run2("neardup_minhash", docsN) { () =>
+    results += run2("neardup_minhash", docsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, String)]
       val rows = (0 until docsN).map(i =>
         (i.toLong, Base / 1000L + i.toLong * 1000L, docText(i % (docsN / 2), 997)))
       (feedsOf(in, rows),
         NearDupStream.attach(in.toDF().toDF("doc_id", "ts", "text")).toDF())
     }
-    results += run2("neardup_simhash", docsN) { () =>
+    results += run2("neardup_simhash", docsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, String)]
       val rows = (0 until docsN).map(i =>
         (i.toLong, Base / 1000L + i.toLong * 1000L, docText(i % (docsN / 2), 997)))
       (feedsOf(in, rows),
         NearDupStream.attachSimHash(in.toDF().toDF("doc_id", "ts", "text")).toDF())
     }
-    results += run2("span_screen", docsN) { () =>
+    results += run2("span_screen", docsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, String)]
       val rows = (0 until docsN).map(i =>
         (i.toLong, Base / 1000L + i.toLong * 1000L, docText(i % (docsN / 2), 997)))
       (feedsOf(in, rows),
         SpanScreenStream.attach(in.toDF().toDF("doc_id", "ts", "text")).toDF())
     }
-    results += run2("decontam_screen", docsN) { () =>
+    results += run2("decontam_screen", docsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, String)]
       val evalDocs = (0 until 200).map(i => (i.toLong, docText(i, 997)))
         .toDF("doc_id", "text")
@@ -150,7 +154,7 @@ object StreamBench {
       (feedsOf(in, rows),
         DecontamStream.screen(in.toDF().toDF("doc_id", "text"), evalDocs))
     }
-    results += run2("sample_weighted", rowsN) { () =>
+    results += run2("sample_weighted", rowsN, OutputMode.Update()) { () =>
       val in = MemoryStream[(Long, Double)]
       val rows = (0 until rowsN).map(i =>
         (i.toLong, (i % 17).toDouble / 4.0))
@@ -164,12 +168,12 @@ object StreamBench {
         (Base + (i.toLong * 7919) % (48 * HourNs), (i % 500).toLong,
           (i % 97).toDouble / 3.0))
 
-    results += run2("hourly_aggregate", rowsN) { () =>
+    results += run2("hourly_aggregate", rowsN, OutputMode.Complete()) { () =>
       val in = MemoryStream[(Long, Long, Double)]
       (feedsOf(in, evRows(rowsN)),
         EventsStream.hourlyAggregate(in.toDF().toDF("ts", "user_id", "value")))
     }
-    results += run2("enrich_by_segment", rowsN) { () =>
+    results += run2("enrich_by_segment", rowsN, OutputMode.Complete()) { () =>
       val in = MemoryStream[(Long, Long, Double)]
       val users = (0 until 500).map(i =>
         (i.toLong, if (i % 3 == 0) "gold" else "silver")).toDF("user_id", "segment")
@@ -177,7 +181,7 @@ object StreamBench {
         EventsStream.enrichedBySegment(
           in.toDF().toDF("ts", "user_id", "value"), users))
     }
-    results += run2("enrich_customer", rowsN) { () =>
+    results += run2("enrich_customer", rowsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, Long, String, Double)]
       val customers = spark.read.parquet(s"$sfDir/customer.parquet")
       val rows = (0 until rowsN).map(i =>
@@ -187,13 +191,13 @@ object StreamBench {
         EnrichStream.enrich(in.toDF()
           .toDF("event_id", "ts", "user_id", "event_type", "value"), customers))
     }
-    results += run2("sessionize", rowsN) { () =>
+    results += run2("sessionize", rowsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, Double)]
       (feedsOf(in, evRows(rowsN)),
         SessionizeStream.attach(
           in.toDF().toDF("ts", "user_id", "value")).toDF())
     }
-    results += run2("funnel", rowsN) { () =>
+    results += run2("funnel", rowsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, String)]
       val steps = Seq("view", "cart", "purchase")
       val rows = (0 until rowsN).map(i =>
@@ -201,7 +205,7 @@ object StreamBench {
       (feedsOf(in, rows), FunnelStream.attach(
         in.toDF().toDF("ts", "user_id", "event_type").as[(Long, Long, String)]).toDF())
     }
-    results += run2("watermark_audit", rowsN) { () =>
+    results += run2("watermark_audit", rowsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, String, Long, Long)]
       val rows = (0 until rowsN).map { i =>
         // ~1% late arrivals: ts steps forward, every 100th dips back 2h
@@ -212,7 +216,7 @@ object StreamBench {
       (feedsOf(in, rows), WatermarkAuditStream.attach(
         in.toDF().toDF("user_id", "event_type", "event_id", "ts")).toDF())
     }
-    results += run2("cusum_monitor", rowsN) { () =>
+    results += run2("cusum_monitor", rowsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(String, Long, Long, Double)]
       val rows = (0 until rowsN).map(i =>
         (s"m${i % 8}", i.toLong, Base / 1000L + i.toLong * 100000L,
@@ -224,7 +228,7 @@ object StreamBench {
             (col("us") * 1000).as("ts"), col("value")),
         means, retireUs = 3650L * 86400000000L).toDF())
     }
-    results += run2("sprt_monitor", rowsN) { () =>
+    results += run2("sprt_monitor", rowsN, OutputMode.Update()) { () =>
       val in = MemoryStream[SprtStream.Trial]
       val rows = (0 until rowsN).map(i =>
         SprtStream.Trial(s"arm${i % 4}", if (i % 5 == 0) 1L else 0L))
@@ -232,7 +236,7 @@ object StreamBench {
     }
 
     // ---- two-sided / keyed-join operators ------------------------------
-    results += run2("join_view_click", rowsN) { () =>
+    results += run2("join_view_click", rowsN, OutputMode.Append()) { () =>
       val vIn = MemoryStream[(Long, Long, Long)]
       val cIn = MemoryStream[(Long, Long, Long)]
       val views = (0 until rowsN / 2).map(i =>
@@ -248,7 +252,7 @@ object StreamBench {
       }
       (feeds, out)
     }
-    results += run2("asof_enrich", rowsN) { () =>
+    results += run2("asof_enrich", rowsN, OutputMode.Append()) { () =>
       val fIn = MemoryStream[(Long, Long, Long)]
       val ftIn = MemoryStream[(Long, Long, Double)]
       val facts = (0 until rowsN / 2).map(i =>
@@ -264,7 +268,7 @@ object StreamBench {
       }
       (feeds, out)
     }
-    results += run2("interval_join", rowsN) { () =>
+    results += run2("interval_join", rowsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Int, Long, Long)]
       val rows = (0 until rowsN).map(i =>
         ((i % 300).toLong, i % 2, i.toLong,
@@ -277,7 +281,7 @@ object StreamBench {
         retireUs = 3650L * 86400000000L).toDF()
       (feedsOf(in, rows), out)
     }
-    results += run2("vec_screen", docsN) { () =>
+    results += run2("vec_screen", docsN, OutputMode.Append()) { () =>
       val in = MemoryStream[(Long, Long, Seq[Double])]
       val dim = 16
       val cb = (0 until 8).map(c =>
@@ -290,7 +294,7 @@ object StreamBench {
         in.toDF().toDF("vec_id", "ts", "embedding"), cb).toDF())
     }
     // ExactlyOnceSink.attach returns the STARTED query (foreachBatch sink),
-    // so it gets its own timing loop instead of run2's start probe
+    // so it gets its own timing loop instead of run2's writeStream start
     locally {
       def once(): Double = {
         val in = MemoryStream[(Long, Long, String)]
@@ -305,7 +309,7 @@ object StreamBench {
           in.toDF().toDF("key", "ts_us", "payload"), dir, ckpt)
         try chunks(rows).foreach { c =>
           in.addData(c); query.processAllAvailable()
-        } finally query.stop()
+        } finally { query.stop(); deleteTree(dir); deleteTree(ckpt) }
         (System.nanoTime() - t0) / 1e9
       }
       val sec = math.min(once(), once())

@@ -31,7 +31,7 @@ final class BertEncoder(model: NerModel) {
     model.tensors.get(name).map(_.data) match {
       case Some(t) =>
         // A present-but-mis-shaped tensor is a loader or dimension-ordering
-        // bug: silently substituting zeros here produced plausible-but-wrong
+        // bug: silently zero-filling it here produced plausible-but-wrong
         // logits (round-6 ADVICE) — fail loudly instead.
         require(t.length.toLong == expected,
           s"tensor $name: expected $expected floats, loaded ${t.length}")
@@ -41,7 +41,7 @@ final class BertEncoder(model: NerModel) {
         // tensor simply contributes nothing), but say so once per load so a
         // truncated model can't pass unnoticed
         System.err.println(
-          s"[graft.ner] warning: tensor $name absent — using zeros ($expected floats)")
+          s"[graft.ner] warning: tensor $name absent — zero-filled ($expected floats)")
         new Array[Float](expected.toInt)
     }
   }
@@ -216,11 +216,9 @@ final class BertEncoder(model: NerModel) {
     */
   private final class Scratch {
     var cap = 0
-    var h, q, k, v, kt, vt, att, t1, inter: Array[Float] = null
+    var h, q, k, v, kt, att, t1, inter: Array[Float] = null
     // per-segment attention rows never exceed one document's token cap
     val scoresF = new Array[Float](hp.nMaxTokens)
-    // all-zero bias row for the score matmul (read-only)
-    val zeros = new Array[Float](hp.nMaxTokens)
     def ensure(nTokens: Int): Unit = if (nTokens > cap) {
       cap = Integer.highestOneBit(math.max(nTokens, hp.nMaxTokens) * 2 - 1)
       h = new Array[Float](cap * nEmbd)
@@ -228,7 +226,6 @@ final class BertEncoder(model: NerModel) {
       k = new Array[Float](cap * nEmbd)
       v = new Array[Float](cap * nEmbd)
       kt = new Array[Float](cap * nEmbd)
-      vt = new Array[Float](cap * nEmbd)
       att = new Array[Float](cap * nEmbd)
       t1 = new Array[Float](cap * nEmbd)
       inter = new Array[Float](cap * nInter)
@@ -297,23 +294,18 @@ final class BertEncoder(model: NerModel) {
       val att = s.att
       val scoresF = s.scoresF
       val kern = Kernels.best
-      // repack K and V token-major -> embd-major ([embd][token]): the score
-      // pass then reads one head's K block as an [dHead x n] unit-stride
-      // panel (a matmulT with ldw = n — broadcast-FMA, no reductions) and
-      // the AV pass reads one V lane as a contiguous n-row dot. The
-      // transpose is O(n*embd) — noise against the O(n^2*dHead) attention
-      // math it de-strides.
+      // repack K token-major -> embd-major ([embd][token]): the score pass
+      // then reads one head's K block as a [dHead x n] unit-stride panel (a
+      // matmulT with ldw = n — broadcast-FMA, no reductions). V needs no
+      // repack: token-major V already IS the [n x dHead] panel (ldw = nEmbd)
+      // the softmax.V matmulT reads. The transpose is O(n*embd) — noise
+      // against the O(n^2*dHead) attention math it de-strides.
       val kt = s.kt
-      val vt = s.vt
       var tt = 0
       while (tt < n) {
         val ko = tt * nEmbd
         var e = 0
-        while (e < nEmbd) {
-          kt(e * n + tt) = k(ko + e)
-          vt(e * n + tt) = v(ko + e)
-          e += 1
-        }
+        while (e < nEmbd) { kt(e * n + tt) = k(ko + e); e += 1 }
         tt += 1
       }
       di = 0
@@ -330,15 +322,12 @@ final class BertEncoder(model: NerModel) {
             // transposed K panel; then scale+softmax in f32 through the
             // vector-math kernel (ggml_soft_max semantics)
             kern.matmulT(q, qo, dHead, kt, hOff * n + base, n, segN,
-              s.zeros, scoresF, 0)
+              null, scoresF, 0)
             kern.softmaxScale(scoresF, segN, scale)
-            // AV: one contiguous segN-length dot per head lane over V^T
-            var d = 0
-            while (d < dHead) {
-              att(qo + d) = kern.dot(scoresF, 0, vt, (hOff + d) * n + base,
-                segN)
-              d += 1
-            }
+            // att_row = softmax(scores) . V as ONE matmulT over the head's
+            // token-major V block: segN rows of dHead lanes, ldw = nEmbd
+            kern.matmulT(scoresF, 0, segN, v, base * nEmbd + hOff, nEmbd,
+              dHead, null, att, qo)
             qi += 1
           }
           head += 1

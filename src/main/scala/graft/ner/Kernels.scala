@@ -1,41 +1,44 @@
 package graft.ner
 
-/** Dot / matmul kernels behind a monomorphic dispatch: the SIMD variant uses
-  * the Java 17 Vector API (`jdk.incubator.vector`, public JDK API — the JVM
-  * analogue of ggml's hand-vectorized F32 kernels) when the module is on the
-  * runtime (`--add-modules jdk.incubator.vector`, set in build.sbt for all
-  * forked runs); otherwise the 4-way-unrolled scalar versions. Chosen once
-  * at class-init so the JIT devirtualizes the call sites.
+/** Matmul and activation kernels behind a monomorphic dispatch: the SIMD
+  * variant uses the Java 17 Vector API (`jdk.incubator.vector`, public JDK
+  * API — the JVM analogue of ggml's hand-vectorized F32 kernels) when the
+  * module is on the runtime (`--add-modules jdk.incubator.vector`, set in
+  * build.sbt for all forked runs); otherwise the scalar versions. Chosen
+  * once at class-init so the JIT devirtualizes the call sites.
+  *
+  * The whole F32 path — [[matmulT]], [[gelu]] and [[softmaxScale]] — is
+  * bit-identical between the scalar and SIMD kernels, so an F32 model's
+  * logits do not depend on which kernel the JVM picked. The weight-native
+  * products [[matmulF16]] and [[matmulQ4]] still differ in the last ulps
+  * (their SIMD overrides accumulate lane-wise and reduce once). All three
+  * products take `b == null` as "no bias".
   */
 private[graft] trait DotKernel {
-  /** sum_i x(xo+i) * w(wo+i) */
-  def dot(x: Array[Float], xo: Int, w: Array[Float], wo: Int, len: Int): Float
   /** One activation row through a TRANSPOSED-weight linear:
     * y(yo+o) = b(o) + sum_i x(xo+i) * wt(wo + i*ldw + o)  for o in [0, out)
     * — `ldw` is the leading dimension of the [in x ldw] transposed panel,
-    * `wo` the panel offset (so attention can address one head's K block
-    * inside a full [embd x tokens] transpose).
+    * `wo` the panel offset (so attention can address one head's block
+    * inside a full activation matrix). A null `b` means no bias.
     *
     * The transposed layout turns the row-major dot (one horizontal
     * `reduceLanes` per OUTPUT — the dominant overhead at 64-wide layers)
     * into broadcast-FMA accumulation with no reduction at all. Every
     * implementation MUST accumulate each output element in ascending-i
     * order (one fused multiply-add per i), so scalar and SIMD paths are
-    * bit-identical — a stronger property than [[dot]], whose lane-wise
-    * reduce differs from the scalar order.
+    * bit-identical.
     */
   def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float], wo: Int,
       ldw: Int, out: Int, b: Array[Float], y: Array[Float], yo: Int): Unit
   /** In-place ggml_gelu (tanh approximation in sigmoid form) over
-    * x[0, len), computed in f32 like ggml's `ggml_gelu_f32` — the SIMD
-    * variant routes exp through the JDK's vector math intrinsics (jsvml),
-    * which is where two thirds of the encoder's scalar time went. Per-lane
-    * exp may differ from Math.exp in last ulps across kernels; like the
-    * cross-engine rule, only rounded aggregates of logits are comparable.
+    * x[0, len), computed in f32 like ggml's `ggml_gelu_f32`. Both kernels
+    * evaluate exp through [[ExpF]] in the same per-element op order, so
+    * scalar and SIMD outputs are bit-identical.
     */
   def gelu(x: Array[Float], len: Int): Unit
   /** In-place softmax of (x * scale) over x[0, len) in f32 (max-subtracted,
-    * like `ggml_soft_max`): x := exp(x*scale - max) / sum. */
+    * like `ggml_soft_max`): x := exp(x*scale - max) / sum. Both kernels sum
+    * in ascending-i order, so scalar and SIMD outputs are bit-identical. */
   def softmaxScale(x: Array[Float], len: Int, scale: Float): Unit
 
   /** One activation row through a Q4_0-NATIVE linear (round-7 VERDICT #3 —
@@ -56,8 +59,8 @@ private[graft] trait DotKernel {
     * layout is the file's own, so the quantized path skips [[BertEncoder]]'s
     * load-time transposition as well.
     *
-    * Like [[dot]] (and unlike [[matmulT]]), scalar and SIMD implementations
-    * are NOT bit-identical: the SIMD override decodes nibbles in-register
+    * Unlike [[matmulT]], scalar and SIMD implementations are NOT
+    * bit-identical: the SIMD override decodes nibbles in-register
     * and accumulates lane-wise, so block partials associate differently in
     * last ulps. The kernel is chosen once per JVM, batched-vs-single-doc
     * evaluation stays bit-identical either way (Q4NativeSpec), and the
@@ -197,25 +200,9 @@ private[graft] object ExpF {
 
 private[graft] object ScalarKernel extends DotKernel {
   // Math.fma matches the SIMD path's fused rounding (round-2 ADVICE: mixed
-  // fused/unfused kernels gave environment-dependent last-ulp logits).
-  // Accumulation *order* still differs from the lane-wise SIMD reduce — only
-  // rounded aggregates of encoder outputs are comparable across kernels.
-  override def dot(x: Array[Float], xo: Int, w: Array[Float], wo: Int,
-      len: Int): Float = {
-    val l4 = len - (len & 3)
-    var a0 = 0f; var a1 = 0f; var a2 = 0f; var a3 = 0f
-    var i = 0
-    while (i < l4) {
-      a0 = Math.fma(x(xo + i), w(wo + i), a0)
-      a1 = Math.fma(x(xo + i + 1), w(wo + i + 1), a1)
-      a2 = Math.fma(x(xo + i + 2), w(wo + i + 2), a2)
-      a3 = Math.fma(x(xo + i + 3), w(wo + i + 3), a3)
-      i += 4
-    }
-    while (i < len) { a0 = Math.fma(x(xo + i), w(wo + i), a0); i += 1 }
-    (a0 + a1) + (a2 + a3)
-  }
-
+  // fused/unfused kernels gave environment-dependent last-ulp logits), and
+  // every F32 loop here runs in the order the SIMD kernel reproduces
+  // lane-wise, so the F32 path agrees with it bit for bit.
   override def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
       wo: Int, ldw: Int, out: Int, b: Array[Float], y: Array[Float],
       yo: Int): Unit = {
@@ -223,7 +210,7 @@ private[graft] object ScalarKernel extends DotKernel {
     // produces lane-wise, so the two kernels agree bitwise
     var o = 0
     while (o < out) {
-      var acc = b(o)
+      var acc = if (b != null) b(o) else 0f
       var i = 0
       while (i < in) {
         acc = Math.fma(x(xo + i), wt(wo + i * ldw + o), acc); i += 1
@@ -267,20 +254,9 @@ private[graft] object SimdKernel extends DotKernel {
   import jdk.incubator.vector.{FloatVector, VectorOperators}
   private val sp = FloatVector.SPECIES_PREFERRED
 
-  override def dot(x: Array[Float], xo: Int, w: Array[Float], wo: Int,
-      len: Int): Float = {
-    var acc = FloatVector.zero(sp)
-    val upper = sp.loopBound(len)
-    var i = 0
-    while (i < upper) {
-      acc = FloatVector.fromArray(sp, x, xo + i)
-        .fma(FloatVector.fromArray(sp, w, wo + i), acc)
-      i += sp.length
-    }
-    var s = acc.reduceLanes(VectorOperators.ADD)
-    while (i < len) { s += x(xo + i) * w(wo + i); i += 1 }
-    s
-  }
+  // bias lanes at o, or zero when the product has no bias
+  private def biasVec(b: Array[Float], o: Int): FloatVector =
+    if (b != null) FloatVector.fromArray(sp, b, o) else FloatVector.zero(sp)
 
   override def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
       wo: Int, ldw: Int, out: Int, b: Array[Float], y: Array[Float],
@@ -292,10 +268,10 @@ private[graft] object SimdKernel extends DotKernel {
     // nothing is re-loaded or reduced; each y element accumulates in
     // ascending-i order, matching the scalar kernel bit-for-bit
     while (o + 4 * vl <= out) {
-      var a0 = FloatVector.fromArray(sp, b, o)
-      var a1 = FloatVector.fromArray(sp, b, o + vl)
-      var a2 = FloatVector.fromArray(sp, b, o + 2 * vl)
-      var a3 = FloatVector.fromArray(sp, b, o + 3 * vl)
+      var a0 = biasVec(b, o)
+      var a1 = biasVec(b, o + vl)
+      var a2 = biasVec(b, o + 2 * vl)
+      var a3 = biasVec(b, o + 3 * vl)
       var i = 0
       while (i < in) {
         val xv = FloatVector.broadcast(sp, x(xo + i))
@@ -313,7 +289,7 @@ private[graft] object SimdKernel extends DotKernel {
       o += 4 * vl
     }
     while (o + vl <= out) {
-      var a0 = FloatVector.fromArray(sp, b, o)
+      var a0 = biasVec(b, o)
       var i = 0
       while (i < in) {
         a0 = FloatVector.fromArray(sp, wt, wo + i * ldw + o)
@@ -325,7 +301,7 @@ private[graft] object SimdKernel extends DotKernel {
     }
     // scalar tail (out not a lane multiple): same ascending-i fma chain
     while (o < out) {
-      var acc = b(o)
+      var acc = if (b != null) b(o) else 0f
       var i = 0
       while (i < in) {
         acc = Math.fma(x(xo + i), wt(wo + i * ldw + o), acc); i += 1

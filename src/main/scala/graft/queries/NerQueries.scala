@@ -42,25 +42,25 @@ object NerQueries {
              FROM graft_documents_ner ORDER BY doc_id""")
   }
 
-  /** q26: the WITH-model inference path end-to-end — tokenizer, transformer
-    * forward pass, argmax, BIO merge — against the deterministic in-memory
-    * [[graft.ner.SyntheticModel]] (char-level vocab, seeded weights), run
-    * through `mapPartitions` so the model is resolved once per partition.
-    * Entities are synthetic but deterministic; there is no DuckDB
-    * counterpart for a transformer, so this is a rows-only check by design —
-    * and the bench's measure of real inference throughput.
+  /** The WITH-model inference path end-to-end — tokenizer, transformer
+    * forward pass, argmax, BIO merge — run through `mapPartitions` so the
+    * model is resolved once per partition, batched: the partition's rows
+    * are tokenized and packed into token-budgeted batches so the encoder
+    * streams its weights once per batch, not once per document (round-5
+    * VERDICT #6). Entities are synthetic but deterministic; there is no
+    * DuckDB counterpart for a transformer, so every caller is a rows-only
+    * check by design. `model` runs on the executor: it must name one of
+    * the [[graft.ner.SyntheticModel]] vals, never close over a model value,
+    * which would serialize the whole model into every task.
     */
-  private def withModel(s: SparkSession, d: String): DataFrame = {
+  private def withModelOf(model: () => Ner.Loaded)(s: SparkSession,
+      d: String): DataFrame = {
     import s.implicits._
     Tables.parallelize(s, documents(s, d))
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
-        // batched: the partition's rows are tokenized and packed into
-        // token-budgeted batches so the encoder streams its weights once
-        // per batch, not once per document (round-5 VERDICT #6)
-        val loaded = Some(graft.ner.SyntheticModel.loaded)
-        Ner.evalPartition(loaded, rows, truncate = true).map {
+        Ner.evalPartition(Some(model()), rows, truncate = true).map {
           case (id, ents) =>
             (id, ents.length, if (ents.isEmpty) null else ents.head.label)
         }
@@ -69,54 +69,32 @@ object NerQueries {
       .orderBy(col("doc_id"))
   }
 
-  /** q205: q26's inference pipeline against the Q4_0-QUANTIZED twin of the
-    * synthetic model — the quantized-native matmul path
+  /** q26: [[withModelOf]] against the deterministic in-memory F32
+    * [[graft.ner.SyntheticModel]] (char-level vocab, seeded weights) — the
+    * bench's measure of real inference throughput. */
+  private val withModel = withModelOf(() => graft.ner.SyntheticModel.loaded) _
+
+  /** q205: [[withModelOf]] against the Q4_0-QUANTIZED twin of the synthetic
+    * model — the quantized-native matmul path
     * ([[graft.ner.DotKernel.matmulQ4]], round-7 VERDICT #3) exercised
-    * end-to-end under Spark parallelism. Rows-only like q26 (no DuckDB
-    * transformer); its bench time against q26's is the in-situ F32-vs-Q4
-    * throughput readout for a cache-resident model (BASELINE.md records
-    * the single-thread story; the weight-streaming regime is where Q4
-    * wins, which local testdata cannot reach).
+    * end-to-end under Spark parallelism. Its bench time against q26's is
+    * the in-situ F32-vs-Q4 throughput readout for a cache-resident model
+    * (BASELINE.md records the single-thread story; the weight-streaming
+    * regime is where Q4 wins, which local testdata cannot reach).
     */
-  private def withModelQ4(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.parallelize(s, documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val loaded = Some(graft.ner.SyntheticModel.loadedQ4)
-        Ner.evalPartition(loaded, rows, truncate = true).map {
-          case (id, ents) =>
-            (id, ents.length, if (ents.isEmpty) null else ents.head.label)
-        }
-      }
-      .toDF("doc_id", "n_entities", "first_label")
-      .orderBy(col("doc_id"))
-  }
+  private val withModelQ4 =
+    withModelOf(() => graft.ner.SyntheticModel.loadedQ4) _
 
-  /** q208: q26's inference pipeline against the F16 twin of the synthetic
-    * model — the half-native matmul path ([[graft.ner.DotKernel.matmulF16]],
+  /** q208: [[withModelOf]] against the F16 twin of the synthetic model —
+    * the half-native matmul path ([[graft.ner.DotKernel.matmulF16]],
     * round-8 VERDICT #4) exercised end-to-end under Spark parallelism.
-    * Rows-only like q26/q205 (no DuckDB transformer); q26/q208/q205 bench
-    * times together form the F32/F16/Q4 weight-precision profile for a
-    * cache-resident model (BASELINE.md; the weight-streaming regime where
-    * F16 halves traffic is what a bert-base-class model would see).
+    * q26/q208/q205 bench times together form the F32/F16/Q4
+    * weight-precision profile for a cache-resident model (BASELINE.md; the
+    * weight-streaming regime where F16 halves traffic is what a
+    * bert-base-class model would see).
     */
-  private def withModelF16(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.parallelize(s, documents(s, d))
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val loaded = Some(graft.ner.SyntheticModel.loadedF16)
-        Ner.evalPartition(loaded, rows, truncate = true).map {
-          case (id, ents) =>
-            (id, ents.length, if (ents.isEmpty) null else ents.head.label)
-        }
-      }
-      .toDF("doc_id", "n_entities", "first_label")
-      .orderBy(col("doc_id"))
-  }
+  private val withModelF16 =
+    withModelOf(() => graft.ner.SyntheticModel.loadedF16) _
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q24_ner_flagship", flagship, Some(oFlagship)),

@@ -140,6 +140,61 @@ class KernelPropertiesSpec extends AnyFunSuite {
     })
   }
 
+  test("F32 path: every kernel is bit-identical on matmulT, gelu, softmaxScale") {
+    // the F32 encoder runs only these three kernels, so this is what makes
+    // its logits independent of which kernel the JVM picked. Shapes hit
+    // every SIMD code path: out covers the 4-vector tile, the single-vector
+    // loop and the scalar tail; ldw > out, nonzero offsets, with and
+    // without bias; gelu/softmax lengths leave a scalar tail.
+    val lanes =
+      if (Kernels.all.size > 1) jdk.incubator.vector.FloatVector.SPECIES_PREFERRED.length
+      else 8
+    def ragged(n: Int): Int = if (n % lanes == 0) n + 1 else n
+    def bits(a: Array[Float]): Seq[Int] =
+      a.toSeq.map(java.lang.Float.floatToRawIntBits)
+    def sameAcrossKernels(run: DotKernel => Array[Float]): Boolean =
+      Kernels.all.map(k => bits(run(k))).distinct.size == 1
+
+    val genMatmul = for {
+      in <- Gen.choose(1, 70)
+      out <- Gen.choose(4 * lanes + 1, 6 * lanes).map(ragged)
+      pad <- Gen.choose(1, 9)
+      xo <- Gen.choose(1, 7)
+      wo <- Gen.choose(1, 7)
+      yo <- Gen.choose(1, 7)
+      withBias <- Gen.oneOf(true, false)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (in, out, out + pad, xo, wo, yo, withBias, seed)
+    holds("matmulT bit-identity")(Prop.forAll(genMatmul) {
+      case (in, out, ldw, xo, wo, yo, withBias, seed) =>
+        val r = new scala.util.Random(seed)
+        val x = Array.fill(xo + in)(r.nextGaussian().toFloat)
+        val wt = Array.fill(wo + in * ldw)(r.nextGaussian().toFloat * 0.1f)
+        val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
+        sameAcrossKernels { k =>
+          val y = new Array[Float](yo + out)
+          k.matmulT(x, xo, in, wt, wo, ldw, out, b, y, yo)
+          y
+        }
+    })
+
+    val genVec = for {
+      len <- Gen.choose(1, 5 * lanes).map(ragged)
+      scale <- Gen.choose(0.01f, 4f)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (len, scale, seed)
+    holds("gelu/softmaxScale bit-identity")(Prop.forAll(genVec) {
+      case (len, scale, seed) =>
+        val r = new scala.util.Random(seed)
+        val x = Array.fill(len)(r.nextGaussian().toFloat * 4f)
+        sameAcrossKernels { k =>
+          val y = x.clone(); k.gelu(y, len); y
+        } && sameAcrossKernels { k =>
+          val y = x.clone(); k.softmaxScale(y, len, scale); y
+        }
+    })
+  }
+
   test("f16 widening is strictly monotone on finite positive halves") {
     holds("f16") {
       Prop.forAll(Gen.choose(0x0000, 0x7bfe)) { bits =>
