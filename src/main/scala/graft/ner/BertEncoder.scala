@@ -147,32 +147,23 @@ final class BertEncoder(model: NerModel) {
     )
   }
 
-  /** y[n x out] = x[n x in] * W^T + b, into a caller-provided buffer. `w`
-    * is the TRANSPOSED `[in, out]` layout built by [[reqT]]; each row goes
-    * through [[DotKernel.matmulT]] — broadcast-FMA over unit-stride weight
-    * lanes, no horizontal reductions (f32 fused accumulation either way,
-    * like ggml's `ggml_vec_dot_f32`).
+  /** y[n x out] = x[n x in] * W^T + b, into a caller-provided buffer: ONE
+    * kernel call per weight matrix with all n rows as the row block
+    * ([[DotKernel.matmulT]] on the TRANSPOSED `[in, out]` panel built by
+    * [[reqT]], [[DotKernel.matmulQ4]] / [[DotKernel.matmulF16]] on the raw
+    * stored rows), so the kernel's register tiles read each weight once per
+    * block of rows instead of once per token — the reference's one ggml
+    * `mul_mat` over all tokens (`src/ner_model.cpp:315-425`). Every kernel
+    * keeps each output's accumulation order independent of the row count,
+    * so batching never changes a bit.
     */
   private def linear(x: Array[Float], n: Int, in: Int, out: Int,
       w: LinW, b: Array[Float], y: Array[Float]): Array[Float] = {
     val kern = Kernels.best
-    var r = 0
     w match {
-      case dw: DenseW =>
-        while (r < n) {
-          kern.matmulT(x, r * in, in, dw.wt, 0, out, out, b, y, r * out)
-          r += 1
-        }
-      case qw: Q4W =>
-        while (r < n) {
-          kern.matmulQ4(x, r * in, in, qw.raw, out, b, y, r * out)
-          r += 1
-        }
-      case hw: F16W =>
-        while (r < n) {
-          kern.matmulF16(x, r * in, in, hw.raw, out, b, y, r * out)
-          r += 1
-        }
+      case dw: DenseW => kern.matmulT(x, 0, n, in, dw.wt, 0, out, out, b, y, 0)
+      case qw: Q4W => kern.matmulQ4(x, 0, n, in, qw.raw, out, b, y, 0)
+      case hw: F16W => kern.matmulF16(x, 0, n, in, hw.raw, out, b, y, 0)
     }
     y
   }
@@ -321,13 +312,13 @@ final class BertEncoder(model: NerModel) {
             // scores[t] = q_row . k_row_t as ONE matmulT over the head's
             // transposed K panel; then scale+softmax in f32 through the
             // vector-math kernel (ggml_soft_max semantics)
-            kern.matmulT(q, qo, dHead, kt, hOff * n + base, n, segN,
+            kern.matmulT(q, qo, 1, dHead, kt, hOff * n + base, n, segN,
               null, scoresF, 0)
             kern.softmaxScale(scoresF, segN, scale)
             // att_row = softmax(scores) . V as ONE matmulT over the head's
             // token-major V block: segN rows of dHead lanes, ldw = nEmbd
-            kern.matmulT(scoresF, 0, segN, v, base * nEmbd + hOff, nEmbd,
-              dHead, null, att, qo)
+            kern.matmulT(scoresF, 0, 1, segN, v, base * nEmbd + hOff,
+              nEmbd, dHead, null, att, qo)
             qi += 1
           }
           head += 1

@@ -12,24 +12,34 @@ package graft.ner
   * logits do not depend on which kernel the JVM picked. The weight-native
   * products [[matmulF16]] and [[matmulQ4]] still differ in the last ulps
   * (their SIMD overrides accumulate lane-wise and reduce once). All three
-  * products take `b == null` as "no bias".
+  * products take a block of `rows` activation rows (the encoder makes ONE
+  * call per weight matrix, so register tiles read each weight once per
+  * tile of rows), keep every output element's accumulation order
+  * independent of `rows` and of the tile it lands in, and take
+  * `b == null` as "no bias".
   */
 private[graft] trait DotKernel {
-  /** One activation row through a TRANSPOSED-weight linear:
-    * y(yo+o) = b(o) + sum_i x(xo+i) * wt(wo + i*ldw + o)  for o in [0, out)
-    * — `ldw` is the leading dimension of the [in x ldw] transposed panel,
-    * `wo` the panel offset (so attention can address one head's block
-    * inside a full activation matrix). A null `b` means no bias.
+  /** A block of `rows` activation rows through a TRANSPOSED-weight linear:
+    * y(yo + r*out + o) = b(o) + sum_i x(xo + r*in + i) * wt(wo + i*ldw + o)
+    * for r in [0, rows), o in [0, out) — activation rows are `in` apart,
+    * output rows `out` apart; `ldw` is the leading dimension of the
+    * [in x ldw] transposed panel, `wo` the panel offset (so attention can
+    * address one head's block inside a full activation matrix with a
+    * `rows = 1` call). A null `b` means no bias.
     *
     * The transposed layout turns the row-major dot (one horizontal
     * `reduceLanes` per OUTPUT — the dominant overhead at 64-wide layers)
-    * into broadcast-FMA accumulation with no reduction at all. Every
-    * implementation MUST accumulate each output element in ascending-i
-    * order (one fused multiply-add per i), so scalar and SIMD paths are
-    * bit-identical.
+    * into broadcast-FMA accumulation with no reduction at all; the row
+    * block lets one weight-vector load feed every row of a register tile.
+    *
+    * Accumulation contract (every tile shape, every `rows`): each output
+    * element is ONE fused multiply-add chain over ascending i, started at
+    * its bias (or 0). So a `rows`-row call equals `rows` one-row calls bit
+    * for bit, and the scalar and SIMD kernels agree bit for bit.
     */
-  def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float], wo: Int,
-      ldw: Int, out: Int, b: Array[Float], y: Array[Float], yo: Int): Unit
+  def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
+      y: Array[Float], yo: Int): Unit
   /** In-place ggml_gelu (tanh approximation in sigmoid form) over
     * x[0, len), computed in f32 like ggml's `ggml_gelu_f32`. Both kernels
     * evaluate exp through [[ExpF]] in the same per-element op order, so
@@ -41,13 +51,48 @@ private[graft] trait DotKernel {
     * in ascending-i order, so scalar and SIMD outputs are bit-identical. */
   def softmaxScale(x: Array[Float], len: Int, scale: Float): Unit
 
-  /** One activation row through a Q4_0-NATIVE linear (round-7 VERDICT #3 —
-    * the reference evaluates quantized weights in ggml rather than
-    * dequantizing the model to F32, `src/ner_model.cpp:194`):
-    * y(yo+o) = b(o) + sum_j w[o][j] * x(xo+j) for o in [0, out), where w is
-    * the AS-STORED row-major ggml Q4_0 weight (`in` must be a multiple of
-    * 32; per row, in/32 blocks of 18 bytes = f16 scale + 16 nibble bytes,
-    * low nibbles first; value = (q - 8) * d).
+  /** Outputs [o0, out) of ONE activation row through [[matmulT]], each
+    * one ascending-i fma chain from its bias: the scalar kernel's per-row
+    * body and the SIMD kernel's tail past its last full vector. */
+  protected final def matmulTChains(x: Array[Float], xo: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, o0: Int, out: Int,
+      b: Array[Float], y: Array[Float], yo: Int): Unit = {
+    var o = o0
+    while (o < out) {
+      var acc = if (b != null) b(o) else 0f
+      var i = 0
+      while (i < in) {
+        acc = Math.fma(x(xo + i), wt(wo + i * ldw + o), acc); i += 1
+      }
+      y(yo + o) = acc
+      o += 1
+    }
+  }
+
+  /** acc0 + the halves [j0, in) of the F16 weight row at `rowOff` times
+    * x(xr + j), as one ascending-j fma chain: the scalar kernel's whole
+    * row and the SIMD kernel's `in % 16` tail. */
+  protected final def f16Chain(acc0: Float, x: Array[Float], xr: Int,
+      wh: Array[Short], rowOff: Int, j0: Int, in: Int): Float = {
+    val lut = F16Lut.table
+    var acc = acc0
+    var j = j0
+    while (j < in) {
+      acc = Math.fma(lut(wh(rowOff + j) & 0xffff), x(xr + j), acc)
+      j += 1
+    }
+    acc
+  }
+
+  /** A block of `rows` activation rows through a Q4_0-NATIVE linear
+    * (round-7 VERDICT #3 — the reference evaluates quantized weights in
+    * ggml rather than dequantizing the model to F32,
+    * `src/ner_model.cpp:194`):
+    * y(yo + r*out + o) = b(o) + sum_j w[o][j] * x(xo + r*in + j) for
+    * r in [0, rows), o in [0, out), where w is the AS-STORED row-major ggml
+    * Q4_0 weight (`in` must be a multiple of 32; per row, in/32 blocks of
+    * 18 bytes = f16 scale + 16 nibble bytes, low nibbles first;
+    * value = (q - 8) * d).
     *
     * Evaluation never materializes the F32 weight row: each block's 32
     * products accumulate into a block partial that is then scaled once by
@@ -55,83 +100,103 @@ private[graft] trait DotKernel {
     * ALSO numerically kinder than the dequantized dot (the unscaled partial
     * stays small). Memory traffic per output is 18 bytes per 32 weights vs
     * 128 — the weight side of the matmul reads 7.1x less than F32, which is
-    * the whole point on weight-streaming (bert-base-class) models. Row
-    * layout is the file's own, so the quantized path skips [[BertEncoder]]'s
-    * load-time transposition as well.
+    * the whole point on weight-streaming (bert-base-class) models; the row
+    * block decodes each block once for all its rows. Row layout is the
+    * file's own, so the quantized path skips [[BertEncoder]]'s load-time
+    * transposition as well.
     *
-    * Unlike [[matmulT]], scalar and SIMD implementations are NOT
-    * bit-identical: the SIMD override decodes nibbles in-register
-    * and accumulates lane-wise, so block partials associate differently in
-    * last ulps. The kernel is chosen once per JVM, batched-vs-single-doc
-    * evaluation stays bit-identical either way (Q4NativeSpec), and the
-    * model's oracle surface (q26) is rows-only by design.
+    * Accumulation contract (every tile shape, every `rows`): per output
+    * element, the scalar kernel runs one chain over blocks (block partial
+    * in ascending j, then `acc += d * s`) started at the bias; the SIMD
+    * kernel accumulates lane-wise over blocks (block partial per lane, then
+    * one fma by the block scale) and adds the bias to ONE final
+    * `reduceLanes`. A `rows`-row call therefore equals `rows` one-row calls
+    * bit for bit. Scalar and SIMD are NOT bit-identical to each other (the
+    * lane-wise association differs in last ulps); the kernel is chosen once
+    * per JVM, batched-vs-single-doc evaluation stays bit-identical either
+    * way (Q4NativeSpec), and the model's oracle surface (q26) is rows-only
+    * by design.
     */
-  def matmulQ4(x: Array[Float], xo: Int, in: Int, wq: Array[Byte],
-      out: Int, b: Array[Float], y: Array[Float], yo: Int): Unit = {
+  def matmulQ4(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wq: Array[Byte], out: Int, b: Array[Float], y: Array[Float],
+      yo: Int): Unit = {
     val blocksPerRow = in / 32
-    var o = 0
-    while (o < out) {
-      var acc = if (b != null) b(o) else 0f
-      val rowOff = o * blocksPerRow * 18
-      var blk = 0
-      while (blk < blocksPerRow) {
-        val off = rowOff + blk * 18
-        val d = ModelFormat.f16ToFloat(
-          ((wq(off + 1) & 0xff) << 8) | (wq(off) & 0xff))
-        val xb = xo + blk * 32
-        var s = 0f
-        var j = 0
-        while (j < 16) {
-          val q = wq(off + 2 + j) & 0xff
-          s += ((q & 0xf) - 8) * x(xb + j)
-          s += ((q >>> 4) - 8) * x(xb + 16 + j)
-          j += 1
+    var r = 0
+    while (r < rows) {
+      val xr = xo + r * in
+      val yr = yo + r * out
+      var o = 0
+      while (o < out) {
+        var acc = if (b != null) b(o) else 0f
+        val rowOff = o * blocksPerRow * 18
+        var blk = 0
+        while (blk < blocksPerRow) {
+          val off = rowOff + blk * 18
+          val d = ModelFormat.f16ToFloat(
+            ((wq(off + 1) & 0xff) << 8) | (wq(off) & 0xff))
+          val xb = xr + blk * 32
+          var s = 0f
+          var j = 0
+          while (j < 16) {
+            val q = wq(off + 2 + j) & 0xff
+            s += ((q & 0xf) - 8) * x(xb + j)
+            s += ((q >>> 4) - 8) * x(xb + 16 + j)
+            j += 1
+          }
+          acc += d * s
+          blk += 1
         }
-        acc += d * s
-        blk += 1
+        y(yr + o) = acc
+        o += 1
       }
-      y(yo + o) = acc
-      o += 1
+      r += 1
     }
   }
 
-  /** One activation row through an F16-NATIVE linear (round-8 VERDICT #4 —
-    * the symmetric completion of [[matmulQ4]]: the reference evaluates F16
-    * weights in ggml without widening the model to F32,
-    * `src/ner_model.cpp:194`):
-    * y(yo+o) = b(o) + sum_j w[o][j] * x(xo+j) for o in [0, out), where `wh`
-    * is the AS-STORED row-major half-precision weight (raw IEEE 754 binary16
-    * bit patterns in short lanes).
+  /** A block of `rows` activation rows through an F16-NATIVE linear
+    * (round-8 VERDICT #4 — the symmetric completion of [[matmulQ4]]: the
+    * reference evaluates F16 weights in ggml without widening the model to
+    * F32, `src/ner_model.cpp:194`):
+    * y(yo + r*out + o) = b(o) + sum_j w[o][j] * x(xo + r*in + j) for
+    * r in [0, rows), o in [0, out), where `wh` is the AS-STORED row-major
+    * half-precision weight (raw IEEE 754 binary16 bit patterns in short
+    * lanes).
     *
     * Evaluation never materializes the F32 weight row: each half widens in
     * a register (a table lookup here; a bit-shift + 2^112 exponent rescale
     * in the SIMD override — exact for every finite half including
     * subnormals and signed zeros, since a power-of-two multiply is exact)
-    * and feeds a fused MAC. Weight-side memory traffic is half of F32 —
-    * the other weight-streaming lever on bert-base-class models. Row layout
-    * is the file's own, so the F16 path skips [[BertEncoder]]'s load-time
+    * and feeds a fused MAC; the row block widens each half once for all
+    * its rows. Weight-side memory traffic is half of F32 — the other
+    * weight-streaming lever on bert-base-class models. Row layout is the
+    * file's own, so the F16 path skips [[BertEncoder]]'s load-time
     * transposition as well.
     *
-    * Like [[matmulQ4]], scalar and SIMD implementations are NOT
-    * bit-identical (per-output running fma chain vs lane-wise accumulate +
-    * one reduce); additionally, half-precision Inf/NaN weight values decode
-    * to large FINITE floats under the SIMD rescale — real model weights
-    * never carry them, and the scalar path preserves them.
+    * Accumulation contract (every tile shape, every `rows`): per output
+    * element, the scalar kernel runs one fma chain over ascending j started
+    * at the bias; the SIMD kernel accumulates lane-wise over the 16-half
+    * chunks, adds the bias to ONE `reduceLanes`, then runs the scalar fma
+    * chain over the `in % 16` tail. A `rows`-row call therefore equals
+    * `rows` one-row calls bit for bit. Like [[matmulQ4]], scalar and SIMD
+    * are NOT bit-identical to each other; additionally, half-precision
+    * Inf/NaN weight values decode to large FINITE floats under the SIMD
+    * rescale — real model weights never carry them, and the scalar path
+    * preserves them.
     */
-  def matmulF16(x: Array[Float], xo: Int, in: Int, wh: Array[Short],
-      out: Int, b: Array[Float], y: Array[Float], yo: Int): Unit = {
-    val lut = F16Lut.table
-    var o = 0
-    while (o < out) {
-      var acc = if (b != null) b(o) else 0f
-      val rowOff = o * in
-      var j = 0
-      while (j < in) {
-        acc = Math.fma(lut(wh(rowOff + j) & 0xffff), x(xo + j), acc)
-        j += 1
+  def matmulF16(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wh: Array[Short], out: Int, b: Array[Float], y: Array[Float],
+      yo: Int): Unit = {
+    var r = 0
+    while (r < rows) {
+      val xr = xo + r * in
+      val yr = yo + r * out
+      var o = 0
+      while (o < out) {
+        y(yr + o) = f16Chain(if (b != null) b(o) else 0f, x, xr, wh, o * in,
+          0, in)
+        o += 1
       }
-      y(yo + o) = acc
-      o += 1
+      r += 1
     }
   }
 }
@@ -203,20 +268,16 @@ private[graft] object ScalarKernel extends DotKernel {
   // fused/unfused kernels gave environment-dependent last-ulp logits), and
   // every F32 loop here runs in the order the SIMD kernel reproduces
   // lane-wise, so the F32 path agrees with it bit for bit.
-  override def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
-      wo: Int, ldw: Int, out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
+  override def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
+      y: Array[Float], yo: Int): Unit = {
     // per-output ascending-i fma chain — the exact order the SIMD tile path
     // produces lane-wise, so the two kernels agree bitwise
-    var o = 0
-    while (o < out) {
-      var acc = if (b != null) b(o) else 0f
-      var i = 0
-      while (i < in) {
-        acc = Math.fma(x(xo + i), wt(wo + i * ldw + o), acc); i += 1
-      }
-      y(yo + o) = acc
-      o += 1
+    var r = 0
+    while (r < rows) {
+      matmulTChains(x, xo + r * in, in, wt, wo, ldw, 0, out, b, y,
+        yo + r * out)
+      r += 1
     }
   }
 
@@ -258,15 +319,29 @@ private[graft] object SimdKernel extends DotKernel {
   private def biasVec(b: Array[Float], o: Int): FloatVector =
     if (b != null) FloatVector.fromArray(sp, b, o) else FloatVector.zero(sp)
 
-  override def matmulT(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
+  override def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
+      y: Array[Float], yo: Int): Unit = {
+    var r = 0
+    while (r < rows) {
+      val rb = math.min(4, rows - r)
+      if (rb == 1)
+        matmulT1(x, xo + r * in, in, wt, wo, ldw, out, b, y, yo + r * out)
+      else
+        matmulT4(x, xo + r * in, rb, in, wt, wo, ldw, out, b, y, yo + r * out)
+      r += rb
+    }
+  }
+
+  // one row: 4-vector output tile — the whole tile lives in registers
+  // across the i loop (one broadcast of x(i) feeds 4 FMAs on consecutive wt
+  // lanes), so nothing is re-loaded or reduced; each y element accumulates
+  // in ascending-i order, matching the scalar kernel bit-for-bit
+  private def matmulT1(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
       wo: Int, ldw: Int, out: Int, b: Array[Float], y: Array[Float],
       yo: Int): Unit = {
     val vl = sp.length
     var o = 0
-    // 4-vector output tile: the whole tile lives in registers across the i
-    // loop (one broadcast of x(i) feeds 4 FMAs on consecutive wt lanes), so
-    // nothing is re-loaded or reduced; each y element accumulates in
-    // ascending-i order, matching the scalar kernel bit-for-bit
     while (o + 4 * vl <= out) {
       var a0 = biasVec(b, o)
       var a1 = biasVec(b, o + vl)
@@ -299,15 +374,78 @@ private[graft] object SimdKernel extends DotKernel {
       a0.intoArray(y, yo + o)
       o += vl
     }
-    // scalar tail (out not a lane multiple): same ascending-i fma chain
-    while (o < out) {
-      var acc = if (b != null) b(o) else 0f
+    matmulTChains(x, xo, in, wt, wo, ldw, o, out, b, y, yo)
+  }
+
+  // 2-4 rows: 4-row x 2-vector register tile — each weight-vector load
+  // feeds 4 FMAs (one per row) and 8 independent accumulators hide the FMA
+  // latency. A 2- or 3-row block runs the same tile with its missing rows
+  // aliased to the block's last row (computed, never stored). Each y
+  // element still accumulates in ascending-i order.
+  private def matmulT4(x: Array[Float], xo: Int, rb: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
+      y: Array[Float], yo: Int): Unit = {
+    val vl = sp.length
+    val x1 = xo + in
+    val x2 = xo + math.min(2, rb - 1) * in
+    val x3 = xo + math.min(3, rb - 1) * in
+    var o = 0
+    while (o + 2 * vl <= out) {
+      var a00 = biasVec(b, o)
+      var a01 = biasVec(b, o + vl)
+      var a10 = a00; var a11 = a01
+      var a20 = a00; var a21 = a01
+      var a30 = a00; var a31 = a01
       var i = 0
       while (i < in) {
-        acc = Math.fma(x(xo + i), wt(wo + i * ldw + o), acc); i += 1
+        val w = wo + i * ldw + o
+        val w0 = FloatVector.fromArray(sp, wt, w)
+        val w1 = FloatVector.fromArray(sp, wt, w + vl)
+        val xv0 = FloatVector.broadcast(sp, x(xo + i))
+        a00 = w0.fma(xv0, a00); a01 = w1.fma(xv0, a01)
+        val xv1 = FloatVector.broadcast(sp, x(x1 + i))
+        a10 = w0.fma(xv1, a10); a11 = w1.fma(xv1, a11)
+        val xv2 = FloatVector.broadcast(sp, x(x2 + i))
+        a20 = w0.fma(xv2, a20); a21 = w1.fma(xv2, a21)
+        val xv3 = FloatVector.broadcast(sp, x(x3 + i))
+        a30 = w0.fma(xv3, a30); a31 = w1.fma(xv3, a31)
+        i += 1
       }
-      y(yo + o) = acc
-      o += 1
+      a00.intoArray(y, yo + o); a01.intoArray(y, yo + o + vl)
+      a10.intoArray(y, yo + out + o); a11.intoArray(y, yo + out + o + vl)
+      if (rb > 2) {
+        a20.intoArray(y, yo + 2 * out + o)
+        a21.intoArray(y, yo + 2 * out + o + vl)
+      }
+      if (rb > 3) {
+        a30.intoArray(y, yo + 3 * out + o)
+        a31.intoArray(y, yo + 3 * out + o + vl)
+      }
+      o += 2 * vl
+    }
+    if (o + vl <= out) {
+      var a0 = biasVec(b, o)
+      var a1 = a0; var a2 = a0; var a3 = a0
+      var i = 0
+      while (i < in) {
+        val w0 = FloatVector.fromArray(sp, wt, wo + i * ldw + o)
+        a0 = w0.fma(FloatVector.broadcast(sp, x(xo + i)), a0)
+        a1 = w0.fma(FloatVector.broadcast(sp, x(x1 + i)), a1)
+        a2 = w0.fma(FloatVector.broadcast(sp, x(x2 + i)), a2)
+        a3 = w0.fma(FloatVector.broadcast(sp, x(x3 + i)), a3)
+        i += 1
+      }
+      a0.intoArray(y, yo + o)
+      a1.intoArray(y, yo + out + o)
+      if (rb > 2) a2.intoArray(y, yo + 2 * out + o)
+      if (rb > 3) a3.intoArray(y, yo + 3 * out + o)
+      o += vl
+    }
+    var r = 0
+    while (r < rb) {
+      matmulTChains(x, xo + r * in, in, wt, wo, ldw, o, out, b, y,
+        yo + r * out)
+      r += 1
     }
   }
 
@@ -428,42 +566,73 @@ private[graft] object SimdKernel extends DotKernel {
   // walk — one lookup per 32 MACs
   private val f16Table: Array[Float] = F16Lut.table
 
-  override def matmulQ4(x: Array[Float], xo: Int, in: Int, wq: Array[Byte],
-      out: Int, b: Array[Float], y: Array[Float], yo: Int): Unit = {
+  override def matmulQ4(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wq: Array[Byte], out: Int, b: Array[Float], y: Array[Float],
+      yo: Int): Unit = {
+    var r = 0
+    while (r < rows) {
+      val rb = math.min(4, rows - r)
+      matmulQ4x4(x, xo + r * in, rb, in, wq, out, b, y, yo + r * out)
+      r += rb
+    }
+  }
+
+  // 1-4 rows: each block is decoded once and FMA'd into one block partial
+  // per row; per row that is the contract's order (block partial per lane,
+  // one fma by the block scale, one final reduce). A block of fewer than 4
+  // rows aliases its missing rows to its last row (computed, never stored).
+  private def matmulQ4x4(x: Array[Float], xo: Int, rb: Int, in: Int,
+      wq: Array[Byte], out: Int, b: Array[Float], y: Array[Float],
+      yo: Int): Unit = {
     val blocksPerRow = in / 32
+    val x1 = xo + math.min(1, rb - 1) * in
+    val x2 = xo + math.min(2, rb - 1) * in
+    val x3 = xo + math.min(3, rb - 1) * in
     var o = 0
     while (o < out) {
       val rowOff = o * blocksPerRow * 18
-      var vacc = FloatVector.zero(qsp)
+      var v0 = FloatVector.zero(qsp)
+      var v1 = v0; var v2 = v0; var v3 = v0
       var blk = 0
       while (blk < blocksPerRow) {
         val off = rowOff + blk * 18
         val d = f16Table(((wq(off + 1) & 0xff) << 8) | (wq(off) & 0xff))
         val bv = jdk.incubator.vector.ByteVector.fromArray(b128, wq, off + 2)
-        // low nibbles = values 0..15 of the block, high nibbles = 16..31;
-        // (q & 0xf) - 8 and (q >>> 4) - 8 stay in byte lanes, then widen
-        // byte -> float in qsp-lane parts per nibble half
         val lo = bv.and(vNibble).sub(vEight)
         val hi = bv.lanewise(VectorOperators.LSHR, 4).sub(vEight)
-        val xb = xo + blk * 32
-        var t = FloatVector.zero(qsp)
+        val xb = blk * 32
+        var t0 = FloatVector.zero(qsp)
+        var t1 = t0; var t2 = t0; var t3 = t0
         var p = 0
         while (p < qParts) {
           val wlo = lo.convertShape(VectorOperators.B2F, qsp, p)
             .asInstanceOf[FloatVector]
           val whi = hi.convertShape(VectorOperators.B2F, qsp, p)
             .asInstanceOf[FloatVector]
-          val lane = p * qsp.length
-          t = wlo.fma(FloatVector.fromArray(qsp, x, xb + lane), t)
-          t = whi.fma(FloatVector.fromArray(qsp, x, xb + 16 + lane), t)
+          val jl = xb + p * qsp.length
+          val jh = jl + 16
+          t0 = wlo.fma(FloatVector.fromArray(qsp, x, xo + jl), t0)
+          t0 = whi.fma(FloatVector.fromArray(qsp, x, xo + jh), t0)
+          t1 = wlo.fma(FloatVector.fromArray(qsp, x, x1 + jl), t1)
+          t1 = whi.fma(FloatVector.fromArray(qsp, x, x1 + jh), t1)
+          t2 = wlo.fma(FloatVector.fromArray(qsp, x, x2 + jl), t2)
+          t2 = whi.fma(FloatVector.fromArray(qsp, x, x2 + jh), t2)
+          t3 = wlo.fma(FloatVector.fromArray(qsp, x, x3 + jl), t3)
+          t3 = whi.fma(FloatVector.fromArray(qsp, x, x3 + jh), t3)
           p += 1
         }
-        // block partial scaled once by the block's f16 scale
-        vacc = t.fma(FloatVector.broadcast(qsp, d), vacc)
+        val dv = FloatVector.broadcast(qsp, d)
+        v0 = t0.fma(dv, v0)
+        v1 = t1.fma(dv, v1)
+        v2 = t2.fma(dv, v2)
+        v3 = t3.fma(dv, v3)
         blk += 1
       }
-      y(yo + o) = (if (b != null) b(o) else 0f) +
-        vacc.reduceLanes(VectorOperators.ADD)
+      val bo = if (b != null) b(o) else 0f
+      y(yo + o) = bo + v0.reduceLanes(VectorOperators.ADD)
+      if (rb > 1) y(yo + out + o) = bo + v1.reduceLanes(VectorOperators.ADD)
+      if (rb > 2) y(yo + 2 * out + o) = bo + v2.reduceLanes(VectorOperators.ADD)
+      if (rb > 3) y(yo + 3 * out + o) = bo + v3.reduceLanes(VectorOperators.ADD)
       o += 1
     }
   }
@@ -488,43 +657,74 @@ private[graft] object SimdKernel extends DotKernel {
   private val vF16Scale =
     FloatVector.broadcast(qsp, java.lang.Float.intBitsToFloat(0x77800000))
 
-  override def matmulF16(x: Array[Float], xo: Int, in: Int,
+  override def matmulF16(x: Array[Float], xo: Int, rows: Int, in: Int,
       wh: Array[Short], out: Int, b: Array[Float], y: Array[Float],
       yo: Int): Unit = {
-    val nv = in & ~15 // 16-half stride bound; scalar tail below
+    var r = 0
+    while (r < rows) {
+      val rb = math.min(4, rows - r)
+      matmulF16x4(x, xo + r * in, rb, in, wh, out, b, y, yo + r * out)
+      r += rb
+    }
+  }
+
+  // part p (qsp lanes) of 16 raw halves, widened to floats
+  private def widenF16(hv: jdk.incubator.vector.ShortVector,
+      p: Int): FloatVector = {
+    // signed S2I, not ZERO_EXTEND_S2I: this JDK's zero-extend convertShape
+    // throws ("cannot be represented in ETYPE int") on the 256->512
+    // expansion slow path; the sign bits the widening drags in are cleared
+    // by the two masks below anyway
+    val iv = hv.convertShape(VectorOperators.S2I, iqsp, p)
+      .asInstanceOf[jdk.incubator.vector.IntVector]
+    iv.and(vF16Sign).lanewise(VectorOperators.LSHL, 16)
+      .or(iv.and(vF16Mag).lanewise(VectorOperators.LSHL, 13))
+      .viewAsFloatingLanes().asInstanceOf[FloatVector]
+      .mul(vF16Scale)
+  }
+
+  // 1-4 rows: each 16-half chunk is widened once and FMA'd into one
+  // lane-wise accumulator per row; per row that is one lane-wise chain over
+  // the chunks, one reduce, then the scalar fma chain over the in % 16
+  // tail. A block of fewer than 4 rows aliases its missing rows to its last
+  // row (computed, never stored).
+  private def matmulF16x4(x: Array[Float], xo: Int, rb: Int, in: Int,
+      wh: Array[Short], out: Int, b: Array[Float], y: Array[Float],
+      yo: Int): Unit = {
+    val nv = in & ~15
+    val x1 = xo + math.min(1, rb - 1) * in
+    val x2 = xo + math.min(2, rb - 1) * in
+    val x3 = xo + math.min(3, rb - 1) * in
     var o = 0
     while (o < out) {
       val rowOff = o * in
-      var vacc = FloatVector.zero(qsp)
+      var v0 = FloatVector.zero(qsp)
+      var v1 = v0; var v2 = v0; var v3 = v0
       var j = 0
       while (j < nv) {
         val hv = jdk.incubator.vector.ShortVector.fromArray(s256, wh,
           rowOff + j)
         var p = 0
         while (p < qParts) {
-          // signed S2I, not ZERO_EXTEND_S2I: this JDK's zero-extend
-          // convertShape throws ("cannot be represented in ETYPE int") on
-          // the 256->512 expansion slow path; the sign bits the widening
-          // drags in are cleared by the two masks below anyway
-          val iv = hv.convertShape(VectorOperators.S2I, iqsp, p)
-            .asInstanceOf[jdk.incubator.vector.IntVector]
-          val f = iv.and(vF16Sign).lanewise(VectorOperators.LSHL, 16)
-            .or(iv.and(vF16Mag).lanewise(VectorOperators.LSHL, 13))
-            .viewAsFloatingLanes().asInstanceOf[FloatVector]
-            .mul(vF16Scale)
-          vacc = f.fma(
-            FloatVector.fromArray(qsp, x, xo + j + p * qsp.length), vacc)
+          val f = widenF16(hv, p)
+          val jp = j + p * qsp.length
+          v0 = f.fma(FloatVector.fromArray(qsp, x, xo + jp), v0)
+          v1 = f.fma(FloatVector.fromArray(qsp, x, x1 + jp), v1)
+          v2 = f.fma(FloatVector.fromArray(qsp, x, x2 + jp), v2)
+          v3 = f.fma(FloatVector.fromArray(qsp, x, x3 + jp), v3)
           p += 1
         }
         j += 16
       }
-      var acc = (if (b != null) b(o) else 0f) +
-        vacc.reduceLanes(VectorOperators.ADD)
-      while (j < in) {
-        acc = Math.fma(f16Table(wh(rowOff + j) & 0xffff), x(xo + j), acc)
-        j += 1
-      }
-      y(yo + o) = acc
+      val bo = if (b != null) b(o) else 0f
+      y(yo + o) = f16Chain(bo + v0.reduceLanes(VectorOperators.ADD),
+        x, xo, wh, rowOff, nv, in)
+      if (rb > 1) y(yo + out + o) = f16Chain(
+        bo + v1.reduceLanes(VectorOperators.ADD), x, x1, wh, rowOff, nv, in)
+      if (rb > 2) y(yo + 2 * out + o) = f16Chain(
+        bo + v2.reduceLanes(VectorOperators.ADD), x, x2, wh, rowOff, nv, in)
+      if (rb > 3) y(yo + 3 * out + o) = f16Chain(
+        bo + v3.reduceLanes(VectorOperators.ADD), x, x3, wh, rowOff, nv, in)
       o += 1
     }
   }

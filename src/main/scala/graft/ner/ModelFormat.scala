@@ -28,7 +28,8 @@ final case class NerHparams(
   * half-precision shorts in [[f16raw]] (round-8 VERDICT #4 — previously
   * widened at load) and Q4_0 tensors their RAW ggml blocks in [[q4]]; both
   * decode lazily. The encoder's linear layers consume the raw forms
-  * directly ([[DotKernel.matmulF16]] / [[DotKernel.matmulQ4]] — the
+  * directly, one row-block call per weight matrix
+  * ([[DotKernel.matmulF16]] / [[DotKernel.matmulQ4]] — the
   * reference evaluates F16 and quantized weights in ggml the same way,
   * `src/ner_model.cpp:194`), so a compact linear weight never materializes
   * its 2x/8x-larger F32 form unless some non-matmul consumer (embedding
@@ -349,9 +350,10 @@ object ModelFormat {
           case F16 =>
             // F16: kept as raw half-precision shorts (round-8 VERDICT
             // #4, symmetric with the Q4_0 treatment below): the
-            // encoder's linears evaluate them natively via
-            // [[DotKernel.matmulF16]] — in-register widening, half the
-            // weight-side memory traffic of F32, like the reference's
+            // encoder's linears evaluate them natively via the row-block
+            // [[DotKernel.matmulF16]] — in-register widening once per
+            // block of rows, half the weight-side memory traffic of F32,
+            // like the reference's
             // ggml F16 eval (`src/ner_model.cpp:194`). Non-matmul
             // consumers widen lazily through [[NerTensor.data]].
             val data = new Array[Short](numel.toInt)
@@ -364,7 +366,8 @@ object ModelFormat {
             // first 16 values from low nibbles, next 16 from high;
             // value = (q - 8) * d. The raw blocks are KEPT (round-7
             // VERDICT #3): the encoder's linears evaluate them natively
-            // via [[DotKernel.matmulQ4]], like the reference's ggml eval
+            // via the row-block [[DotKernel.matmulQ4]] (each block decoded
+            // once per block of rows), like the reference's ggml eval
             // of quantized weights — dequantization happens lazily and
             // only for non-matmul consumers (see [[NerTensor.data]]).
             tensors += t.name ->
@@ -588,8 +591,9 @@ object ModelFormat {
 
   /** Dequantize ggml Q4_0 blocks (18 bytes per 32 values: f16 scale + 16
     * nibble bytes, low nibbles first) into an F32 array — the lazy
-    * [[NerTensor.data]] path for quantized tensors, and the semantics the
-    * quantized-native matmul ([[DotKernel.matmulQ4]]) must agree with.
+    * [[NerTensor.data]] path for quantized tensors, and the semantics every
+    * row of the quantized-native row-block matmul ([[DotKernel.matmulQ4]])
+    * must agree with.
     */
   def dequantQ4(raw: Array[Byte], numel: Int): Array[Float] = {
     val data = new Array[Float](numel)
@@ -611,8 +615,9 @@ object ModelFormat {
   }
 
   /** Widen a raw F16 tensor payload to F32 — the lazy [[NerTensor.data]]
-    * path for half-precision tensors, and the semantics the F16-native
-    * matmul ([[DotKernel.matmulF16]]) must agree with. */
+    * path for half-precision tensors, and the semantics every row of the
+    * F16-native row-block matmul ([[DotKernel.matmulF16]]) must agree
+    * with. */
   def widenF16(raw: Array[Short]): Array[Float] = {
     val out = new Array[Float](raw.length)
     var i = 0

@@ -75,7 +75,7 @@ object NerQueries {
   private val withModel = withModelOf(() => graft.ner.SyntheticModel.loaded) _
 
   /** q205: [[withModelOf]] against the Q4_0-QUANTIZED twin of the synthetic
-    * model — the quantized-native matmul path
+    * model — the quantized-native row-block matmul path
     * ([[graft.ner.DotKernel.matmulQ4]], round-7 VERDICT #3) exercised
     * end-to-end under Spark parallelism. Its bench time against q26's is
     * the in-situ F32-vs-Q4 throughput readout for a cache-resident model
@@ -86,8 +86,9 @@ object NerQueries {
     withModelOf(() => graft.ner.SyntheticModel.loadedQ4) _
 
   /** q208: [[withModelOf]] against the F16 twin of the synthetic model —
-    * the half-native matmul path ([[graft.ner.DotKernel.matmulF16]],
-    * round-8 VERDICT #4) exercised end-to-end under Spark parallelism.
+    * the half-native row-block matmul path
+    * ([[graft.ner.DotKernel.matmulF16]], round-8 VERDICT #4) exercised
+    * end-to-end under Spark parallelism.
     * q26/q208/q205 bench times together form the F32/F16/Q4
     * weight-precision profile for a cache-resident model (BASELINE.md; the
     * weight-streaming regime where F16 halves traffic is what a

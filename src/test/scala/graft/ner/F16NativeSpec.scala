@@ -66,7 +66,7 @@ class F16NativeSpec extends AnyFunSuite {
         val exp = (h >>> 10) & 0x1f
         if (exp != 0x1f) { // finite halves only (Inf/NaN scaladoc'd apart)
           row(0) = h.toShort
-          kern.matmulF16(x, 0, 16, row, 1, null, y, 0)
+          kern.matmulF16(x, 0, 1, 16, row, 1, null, y, 0)
           val want = ModelFormat.f16ToFloat(h)
           assert((want == 0f && y(0) == 0f) ||
             java.lang.Float.floatToIntBits(y(0)) ==
@@ -116,12 +116,9 @@ class F16NativeSpec extends AnyFunSuite {
     val (f16Path, _) = writePair()
     val m = ModelFormat.loadFile(f16Path).get
     val enc = new BertEncoder(m)
-    val docs = Array(Array(1, 3, 4, 2), Array(1, 10, 11, 12, 2))
-    val batched = enc.evalBatch(docs)
-    docs.indices.foreach { d =>
-      assert(batched(d).sameElements(enc.eval(docs(d))),
-        s"doc $d: batched F16 eval differs from single-doc")
-    }
+    val bad = TestModels.batchedVsSingleMismatches(enc,
+      TestModels.TileStraddlingDocs)
+    assert(bad.isEmpty, s"F16: (split, doc) pairs that diverge: $bad")
   }
 
   test("F16 tensor survives Java serialization and lazily re-widens") {

@@ -131,7 +131,7 @@ class KernelPropertiesSpec extends AnyFunSuite {
         }
         Kernels.all.forall { k =>
           val y = new Array[Float](out)
-          k.matmulQ4(x, 0, in, wq, out, b, y, 0)
+          k.matmulQ4(x, 0, 1, in, wq, out, b, y, 0)
           (0 until out).forall { o =>
             val tol = 1e-4 * math.max(1.0, math.abs(expect(o)))
             math.abs(y(o) - expect(o)) <= tol
@@ -140,22 +140,27 @@ class KernelPropertiesSpec extends AnyFunSuite {
     })
   }
 
+  // float lanes of the SIMD kernel (8 stands in when only scalar runs)
+  private val lanes =
+    if (Kernels.all.size > 1) jdk.incubator.vector.FloatVector.SPECIES_PREFERRED.length
+    else 8
+  private def bits(a: Array[Float]): Seq[Int] =
+    a.toSeq.map(java.lang.Float.floatToRawIntBits)
+
   test("F32 path: every kernel is bit-identical on matmulT, gelu, softmaxScale") {
     // the F32 encoder runs only these three kernels, so this is what makes
     // its logits independent of which kernel the JVM picked. Shapes hit
-    // every SIMD code path: out covers the 4-vector tile, the single-vector
-    // loop and the scalar tail; ldw > out, nonzero offsets, with and
-    // without bias; gelu/softmax lengths leave a scalar tail.
-    val lanes =
-      if (Kernels.all.size > 1) jdk.incubator.vector.FloatVector.SPECIES_PREFERRED.length
-      else 8
+    // every SIMD code path: rows cover the one-row path, full 4-row tiles
+    // and 2-/3-row remainders; out covers the 4-vector (one row) and
+    // 2-vector (row tile) loops, the single-vector loop and the scalar
+    // tail; ldw > out, nonzero offsets, with and without bias; gelu/softmax
+    // lengths leave a scalar tail.
     def ragged(n: Int): Int = if (n % lanes == 0) n + 1 else n
-    def bits(a: Array[Float]): Seq[Int] =
-      a.toSeq.map(java.lang.Float.floatToRawIntBits)
     def sameAcrossKernels(run: DotKernel => Array[Float]): Boolean =
       Kernels.all.map(k => bits(run(k))).distinct.size == 1
 
     val genMatmul = for {
+      rows <- Gen.choose(1, 9)
       in <- Gen.choose(1, 70)
       out <- Gen.choose(4 * lanes + 1, 6 * lanes).map(ragged)
       pad <- Gen.choose(1, 9)
@@ -164,16 +169,16 @@ class KernelPropertiesSpec extends AnyFunSuite {
       yo <- Gen.choose(1, 7)
       withBias <- Gen.oneOf(true, false)
       seed <- Gen.choose(0L, Long.MaxValue)
-    } yield (in, out, out + pad, xo, wo, yo, withBias, seed)
+    } yield (rows, in, out, out + pad, xo, wo, yo, withBias, seed)
     holds("matmulT bit-identity")(Prop.forAll(genMatmul) {
-      case (in, out, ldw, xo, wo, yo, withBias, seed) =>
+      case (rows, in, out, ldw, xo, wo, yo, withBias, seed) =>
         val r = new scala.util.Random(seed)
-        val x = Array.fill(xo + in)(r.nextGaussian().toFloat)
+        val x = Array.fill(xo + rows * in)(r.nextGaussian().toFloat)
         val wt = Array.fill(wo + in * ldw)(r.nextGaussian().toFloat * 0.1f)
         val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
         sameAcrossKernels { k =>
-          val y = new Array[Float](yo + out)
-          k.matmulT(x, xo, in, wt, wo, ldw, out, b, y, yo)
+          val y = new Array[Float](yo + rows * out)
+          k.matmulT(x, xo, rows, in, wt, wo, ldw, out, b, y, yo)
           y
         }
     })
@@ -191,6 +196,66 @@ class KernelPropertiesSpec extends AnyFunSuite {
           val y = x.clone(); k.gelu(y, len); y
         } && sameAcrossKernels { k =>
           val y = x.clone(); k.softmaxScale(y, len, scale); y
+        }
+    })
+  }
+
+  test("row blocks: one rows-row call equals rows one-row calls bit for bit") {
+    // the encoder calls each linear once per weight matrix with every token
+    // as the row block; batching may not change a bit, so each kernel's
+    // register tiles must keep every output's one-row accumulation order.
+    // rows 1-9 hit the one-row path, full 4-row tiles and every remainder;
+    // F16 `in` is never a multiple of 16 (scalar tail after the reduce);
+    // odd `out`; nonzero offsets; bias or none. y starts as a sentinel so
+    // a store outside the block's rows (e.g. an aliased tile row) shows.
+    val genCase = for {
+      rows <- Gen.choose(1, 9)
+      form <- Gen.oneOf("F32", "F16", "Q4_0")
+      k16 <- Gen.choose(0, 5)
+      tail <- Gen.choose(1, 15)
+      blocks <- Gen.choose(1, 4)
+      inF32 <- Gen.choose(1, 70)
+      out <- Gen.choose(0, 3 * lanes).map(2 * _ + 1)
+      pad <- Gen.choose(0, 9)
+      xo <- Gen.choose(1, 7)
+      wo <- Gen.choose(1, 7)
+      yo <- Gen.choose(1, 7)
+      withBias <- Gen.oneOf(true, false)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield {
+      val in = form match {
+        case "F32" => inF32
+        case "F16" => 16 * k16 + tail
+        case _ => 32 * blocks
+      }
+      (rows, form, in, out, out + pad, xo, wo, yo, withBias, seed)
+    }
+    holds("row-block bit-identity")(Prop.forAll(genCase) {
+      case (rows, form, in, out, ldw, xo, wo, yo, withBias, seed) =>
+        val r = new scala.util.Random(seed)
+        val x = Array.fill(xo + rows * in)(r.nextGaussian().toFloat)
+        val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
+        val w = Array.fill(out * in)(r.nextGaussian().toFloat * 0.1f)
+        // (k, x offset, rows, y, y offset) => one product call
+        val call: (DotKernel, Int, Int, Array[Float], Int) => Unit = form match {
+          case "F32" =>
+            val wt = Array.fill(wo + in * ldw)(r.nextGaussian().toFloat * 0.1f)
+            (k, xr, n, y, yr) => k.matmulT(x, xr, n, in, wt, wo, ldw, out, b, y, yr)
+          case "F16" =>
+            val wh = w.map(v => ModelFormat.floatToF16(v).toShort)
+            (k, xr, n, y, yr) => k.matmulF16(x, xr, n, in, wh, out, b, y, yr)
+          case _ =>
+            val wq = ModelFormat.quantizeQ4(w)
+            (k, xr, n, y, yr) => k.matmulQ4(x, xr, n, in, wq, out, b, y, yr)
+        }
+        Kernels.all.forall { k =>
+          val block = Array.fill(yo + rows * out + 3)(-7f)
+          call(k, xo, rows, block, yo)
+          val single = Array.fill(yo + rows * out + 3)(-7f)
+          (0 until rows).foreach { i =>
+            call(k, xo + i * in, 1, single, yo + i * out)
+          }
+          bits(block) == bits(single)
         }
     })
   }

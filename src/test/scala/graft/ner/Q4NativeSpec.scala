@@ -117,11 +117,8 @@ class Q4NativeSpec extends AnyFunSuite {
     val (q4Path, _) = writePair()
     val m = ModelFormat.loadFile(q4Path).get
     val enc = new BertEncoder(m)
-    val docs = Array(Array(1, 3, 4, 2), Array(1, 10, 11, 12, 2))
-    val batched = enc.evalBatch(docs)
-    docs.indices.foreach { d =>
-      assert(batched(d).sameElements(enc.eval(docs(d))),
-        s"doc $d: batched Q4 eval differs from single-doc")
-    }
+    val bad = TestModels.batchedVsSingleMismatches(enc,
+      TestModels.TileStraddlingDocs)
+    assert(bad.isEmpty, s"Q4: (split, doc) pairs that diverge: $bad")
   }
 }

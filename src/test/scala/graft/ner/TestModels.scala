@@ -71,6 +71,30 @@ object TestModels {
     "[PAD]", "[CLS]", "[SEP]", "duck", "##db", "is", "great", "new", "york",
     "bob", "the", "a", "##s", "spark", "data")
 
+  /** Documents of 2-5 token ids (all inside [[DefaultVocab]]) whose running
+    * offsets in one batch straddle the linear kernels' 4-row register
+    * tiles: 2, 3, 5, 4, 5, 3, 5, 2 tokens. */
+  val TileStraddlingDocs: Array[Array[Int]] = Array(
+    Array(1, 2), Array(1, 3, 2), Array(1, 3, 4, 5, 2), Array(1, 7, 8, 2),
+    Array(1, 10, 11, 12, 2), Array(1, 13, 2), Array(1, 9, 14, 6, 2),
+    Array(1, 2))
+
+  /** Every (split, doc) whose logits from batches of `split` consecutive
+    * documents differ in any bit from per-document [[BertEncoder.eval]],
+    * for each split from 1 to all documents in one batch (doc -1: the
+    * split lost or added documents). */
+  def batchedVsSingleMismatches(enc: BertEncoder,
+      docs: Array[Array[Int]]): Seq[(Int, Int)] = {
+    val singles = docs.map(enc.eval)
+    (1 to docs.length).flatMap { split =>
+      val batched = docs.grouped(split).flatMap(enc.evalBatch).toSeq
+      if (batched.length != docs.length) Seq(split -> -1)
+      else docs.indices
+        .filterNot(i => java.util.Arrays.equals(batched(i), singles(i)))
+        .map(split -> _)
+    }
+  }
+
   /** Write a structurally-valid model. `weightGen` supplies every tensor
     * value except `classifier.bias`, which is given explicitly so tests can
     * force deterministic argmax outcomes (an all-zero model with a biased
