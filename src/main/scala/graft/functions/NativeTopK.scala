@@ -85,12 +85,18 @@ object NativeTopK {
   }
 
   /** Merge two sorted runs, stop at k — O(k), no re-sort (GroupedTopK.merge
-    * verbatim over the array representation). Mutates and returns `a` only
-    * when `b` is empty; otherwise builds a fresh buffer (merge inputs may
-    * be shared). */
+    * verbatim over the array representation). Returns `a` unchanged when
+    * `b` is empty and `a` holding a copy of `b`'s entries when `a` is empty
+    * (both buffers of one aggregate share `k` and `dedup`); otherwise builds
+    * a fresh buffer. The result never aliases the merge input `b`. */
   def mergeBufs(a: Buf, b: Buf): Buf = {
     if (b.n == 0) return a
-    if (a.n == 0) return b
+    if (a.n == 0) {
+      System.arraycopy(b.scores, 0, a.scores, 0, b.n)
+      System.arraycopy(b.keys, 0, a.keys, 0, b.n)
+      a.n = b.n
+      return a
+    }
     val out = new Buf(a.k, a.dedup || b.dedup)
     var i = 0
     var j = 0

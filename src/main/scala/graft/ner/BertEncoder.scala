@@ -21,36 +21,30 @@ package graft.ner
 final class BertEncoder(model: NerModel) {
   import model.{hparams => hp}
 
-  /** `expected` is Long so adversarial-but-accepted headers can't overflow
-    * Int multiplication at the call sites (the loader's product guards keep
-    * legal sizes within Int range; anything outside falls back to empty).
-    */
-  private def req(name: String, expected: Long): Array[Float] = {
-    require(expected >= 0 && expected <= Int.MaxValue,
-      s"tensor $name: illegal expected size $expected (hparams out of range)")
-    model.tensors.get(name).map(_.data) match {
-      case Some(t) =>
-        // A present-but-mis-shaped tensor is a loader or dimension-ordering
-        // bug: silently zero-filling it here produced plausible-but-wrong
-        // logits (round-6 ADVICE) — fail loudly instead.
-        require(t.length.toLong == expected,
-          s"tensor $name: expected $expected floats, loaded ${t.length}")
-        t
-      case None =>
-        // absent tensor keeps ggml's zero-init-arena semantics (an optional
-        // tensor simply contributes nothing), but say so once per load so a
-        // truncated model can't pass unnoticed
-        System.err.println(
-          s"[graft.ner] warning: tensor $name absent — zero-filled ($expected floats)")
-        new Array[Float](expected.toInt)
-    }
-  }
-
   private val nEmbd = hp.nEmbd
   private val nHead = hp.nHead
   private val dHead = nEmbd / nHead
   private val nInter = hp.nIntermediate
   private val nLabels = hp.nLabels
+
+  /** F32 values of table entry `t`. A present tensor must have the table's
+    * shape ([[ModelFormat.load]] rejects a container where it does not; a
+    * model built in memory fails here). An absent one keeps ggml's
+    * zero-init-arena semantics (an optional tensor simply contributes
+    * nothing), but says so once per build so a truncated model can't pass
+    * unnoticed.
+    */
+  private def req(t: BertTensor): Array[Float] =
+    model.tensors.get(t.name) match {
+      case Some(w) =>
+        require(t.fits(w.dims), s"tensor ${t.name}: dims " +
+          w.dims.mkString("[", ",", "]") + ", table " + t.dims.mkString("[", ",", "]"))
+        w.data
+      case None =>
+        System.err.println(
+          s"[graft.ner] warning: tensor ${t.name} absent — zero-filled (${t.numel} floats)")
+        new Array[Float](t.numel)
+    }
 
   /** HF row-major `[out, in]` -> `[in, out]` for the broadcast-FMA matmul
     * kernel ([[DotKernel.matmulT]]): column access becomes unit-stride, so
@@ -58,8 +52,6 @@ final class BertEncoder(model: NerModel) {
     * happens once per loaded model; the original orientation is not kept.
     */
   private def transposed(w: Array[Float], out: Int, in: Int): Array[Float] = {
-    require(w.length == out * in,
-      s"transposed: weight length ${w.length} != $out x $in")
     val wt = new Array[Float](w.length)
     var o = 0
     while (o < out) {
@@ -70,11 +62,8 @@ final class BertEncoder(model: NerModel) {
     wt
   }
 
-  private def reqT(name: String, out: Int, in: Int): Array[Float] =
-    transposed(req(name, out.toLong * in), out, in)
-
   /** A linear layer's weight in evaluation form: the transposed F32 panel
-    * ([[reqT]]), or — for F16/Q4_0-stored tensors — the RAW on-disk
+    * ([[transposed]]), or — for F16/Q4_0-stored tensors — the RAW on-disk
     * row-major payload (half shorts / ggml blocks), evaluated natively by
     * [[DotKernel.matmulF16]] / [[DotKernel.matmulQ4]] without ever
     * materializing (or transposing) the F32 matrix — the reference's own
@@ -88,69 +77,46 @@ final class BertEncoder(model: NerModel) {
   private final class Q4W(val raw: Array[Byte]) extends LinW
   private final class F16W(val raw: Array[Short]) extends LinW
 
-  private def reqLin(name: String, out: Int, in: Int): LinW =
-    model.tensors.get(name) match {
-      case Some(t) if t.isQ4 && in % 32 == 0 =>
-        require(t.numel == out.toLong * in,
-          s"tensor $name: expected ${out.toLong * in} values, " +
-            s"loaded ${t.numel} (Q4_0)")
-        new Q4W(t.q4)
-      case Some(t) if t.isF16 =>
-        require(t.numel == out.toLong * in,
-          s"tensor $name: expected ${out.toLong * in} values, " +
-            s"loaded ${t.numel} (F16)")
-        new F16W(t.f16raw)
-      case _ => new DenseW(reqT(name, out, in))
+  private def reqLin(t: BertTensor): LinW = {
+    val Array(in, out) = t.dims
+    model.tensors.get(t.name) match {
+      case Some(w) if w.isQ4 && in % 32 == 0 && t.fits(w.dims) => new Q4W(w.q4)
+      case Some(w) if w.isF16 && t.fits(w.dims) => new F16W(w.f16raw)
+      case _ => new DenseW(transposed(req(t), out, in))
     }
+  }
 
-  private val wordEmb = req("embeddings.word_embeddings.weight", hp.nVocab.toLong * nEmbd)
-  private val typeEmb = req("embeddings.token_type_embeddings.weight", 2L * nEmbd)
-  private val posEmb = req("embeddings.position_embeddings.weight", hp.nMaxTokens.toLong * nEmbd)
-  private val lnEw = req("embeddings.LayerNorm.weight", nEmbd)
-  private val lnEb = req("embeddings.LayerNorm.bias", nEmbd)
-  private val clsW = reqLin("classifier.weight", nLabels, nEmbd)
-  private val clsB = req("classifier.bias", nLabels)
+  import BertTensors._
+  private val wordEmb = req(WordEmb.at(hp))
+  private val typeEmb = req(TypeEmb.at(hp))
+  private val posEmb = req(PosEmb.at(hp))
+  private val lnEw = req(EmbLnW.at(hp))
+  private val lnEb = req(EmbLnB.at(hp))
+  private val clsW = reqLin(ClsW.at(hp))
+  private val clsB = req(ClsB.at(hp))
 
   // plain class, not case class: it's a weight holder — the synthesized
   // case-class equals on a nested class also trips the unchecked
   // outer-reference warning
-  private final class Layer(
-      val qw: LinW, val qb: Array[Float],
-      val kw: LinW, val kb: Array[Float],
-      val vw: LinW, val vb: Array[Float],
-      val ow: LinW, val ob: Array[Float],
-      val lnAw: Array[Float], val lnAb: Array[Float],
-      val fiW: LinW, val fiB: Array[Float],
-      val foW: LinW, val foB: Array[Float],
-      val lnOw: Array[Float], val lnOb: Array[Float]
-  )
-
-  private val layers: Array[Layer] = Array.tabulate(hp.nLayer) { i =>
-    val b = s"encoder.layer.$i."
-    new Layer(
-      qw = reqLin(b + "attention.self.query.weight", nEmbd, nEmbd),
-      qb = req(b + "attention.self.query.bias", nEmbd),
-      kw = reqLin(b + "attention.self.key.weight", nEmbd, nEmbd),
-      kb = req(b + "attention.self.key.bias", nEmbd),
-      vw = reqLin(b + "attention.self.value.weight", nEmbd, nEmbd),
-      vb = req(b + "attention.self.value.bias", nEmbd),
-      ow = reqLin(b + "attention.output.dense.weight", nEmbd, nEmbd),
-      ob = req(b + "attention.output.dense.bias", nEmbd),
-      lnAw = req(b + "attention.output.LayerNorm.weight", nEmbd),
-      lnAb = req(b + "attention.output.LayerNorm.bias", nEmbd),
-      fiW = reqLin(b + "intermediate.dense.weight", nInter, nEmbd),
-      fiB = req(b + "intermediate.dense.bias", nInter),
-      foW = reqLin(b + "output.dense.weight", nEmbd, nInter),
-      foB = req(b + "output.dense.bias", nEmbd),
-      lnOw = req(b + "output.LayerNorm.weight", nEmbd),
-      lnOb = req(b + "output.LayerNorm.bias", nEmbd)
-    )
+  private final class Layer(i: Int) {
+    private def lin(s: Spec) = reqLin(s.at(hp, i))
+    private def vec(s: Spec) = req(s.at(hp, i))
+    val qw = lin(QueryW); val qb = vec(QueryB)
+    val kw = lin(KeyW); val kb = vec(KeyB)
+    val vw = lin(ValueW); val vb = vec(ValueB)
+    val ow = lin(AttOutW); val ob = vec(AttOutB)
+    val lnAw = vec(AttLnW); val lnAb = vec(AttLnB)
+    val fiW = lin(InterW); val fiB = vec(InterB)
+    val foW = lin(OutW); val foB = vec(OutB)
+    val lnOw = vec(OutLnW); val lnOb = vec(OutLnB)
   }
+
+  private val layers: Array[Layer] = Array.tabulate(hp.nLayer)(new Layer(_))
 
   /** y[n x out] = x[n x in] * W^T + b, into a caller-provided buffer: ONE
     * kernel call per weight matrix with all n rows as the row block
     * ([[DotKernel.matmulT]] on the TRANSPOSED `[in, out]` panel built by
-    * [[reqT]], [[DotKernel.matmulQ4]] / [[DotKernel.matmulF16]] on the raw
+    * [[transposed]], [[DotKernel.matmulQ4]] / [[DotKernel.matmulF16]] on the raw
     * stored rows), so the kernel's register tiles read each weight once per
     * block of rows instead of once per token — the reference's one ggml
     * `mul_mat` over all tokens (`src/ner_model.cpp:315-425`). Every kernel
@@ -350,4 +316,107 @@ final class BertEncoder(model: NerModel) {
         offs(d + 1) * nLabels)
     }
   }
+}
+
+/** One tensor of a model's directory ([[BertTensors]]): its full name, its
+  * stored dims (innermost first, as ggml stores them) and whether
+  * [[BertEncoder]] evaluates it as a linear `y = W x + b`, whose dims are
+  * `(in, out)` over a row-major `[out][in]` weight.
+  */
+final case class BertTensor(name: String, dims: Array[Int], linear: Boolean) {
+  /** Element count. [[ModelFormat]]'s hparams bounds keep every table
+    * shape within Int range. */
+  def numel: Int = dims.product
+
+  /** Whether stored `dims` have this shape, compared as ggml compares
+    * shapes: a missing trailing dim counts as 1. */
+  def fits(stored: Array[Int]): Boolean =
+    (0 until math.max(dims.length, stored.length))
+      .forall(k => dims.lift(k).getOrElse(1) == stored.lift(k).getOrElse(1))
+}
+
+/** The tensor directory of the BERT token classifier [[BertEncoder]]
+  * evaluates — the one list of tensor names, stored dims and linear roles,
+  * the analogue of the name map the reference builds before it reads a
+  * model (`src/ner_model.cpp:200-273`). [[ModelFormat.load]] keeps exactly
+  * these tensors and rejects a container whose copy of one has other dims;
+  * the encoder binds its weights through them; [[SyntheticModel]] generates
+  * them; the `ggml` source's `linear` column reads them.
+  */
+object BertTensors {
+
+  /** One table row: `name` (for a per-layer tensor, the part after
+    * `encoder.layer.<i>.`), whether it is a linear, and its dims, innermost
+    * first, as functions of the hparams. */
+  final class Spec private (val name: String, val linear: Boolean,
+      dims: Seq[NerHparams => Int]) {
+    /** This row in a model with hparams `hp`: a per-layer row in layer
+      * `layer`, a top-level row with the default -1. */
+    def at(hp: NerHparams, layer: Int = -1): BertTensor =
+      BertTensor(if (layer < 0) name else s"$LayerPrefix$layer.$name",
+        dims.map(_(hp)).toArray, linear)
+  }
+  private object Spec {
+    def apply(name: String)(dims: (NerHparams => Int)*): Spec = new Spec(name, false, dims)
+    def lin(name: String)(in: NerHparams => Int, out: NerHparams => Int): Spec =
+      new Spec(name, true, Seq(in, out))
+  }
+  import Spec.lin
+
+  val WordEmb = Spec("embeddings.word_embeddings.weight")(_.nEmbd, _.nVocab)
+  val TypeEmb = Spec("embeddings.token_type_embeddings.weight")(_.nEmbd, _ => 2)
+  val PosEmb = Spec("embeddings.position_embeddings.weight")(_.nEmbd, _.nMaxTokens)
+  val EmbLnW = Spec("embeddings.LayerNorm.weight")(_.nEmbd)
+  val EmbLnB = Spec("embeddings.LayerNorm.bias")(_.nEmbd)
+  val ClsW = lin("classifier.weight")(_.nEmbd, _.nLabels)
+  val ClsB = Spec("classifier.bias")(_.nLabels)
+
+  val QueryW = lin("attention.self.query.weight")(_.nEmbd, _.nEmbd)
+  val QueryB = Spec("attention.self.query.bias")(_.nEmbd)
+  val KeyW = lin("attention.self.key.weight")(_.nEmbd, _.nEmbd)
+  val KeyB = Spec("attention.self.key.bias")(_.nEmbd)
+  val ValueW = lin("attention.self.value.weight")(_.nEmbd, _.nEmbd)
+  val ValueB = Spec("attention.self.value.bias")(_.nEmbd)
+  val AttOutW = lin("attention.output.dense.weight")(_.nEmbd, _.nEmbd)
+  val AttOutB = Spec("attention.output.dense.bias")(_.nEmbd)
+  val AttLnW = Spec("attention.output.LayerNorm.weight")(_.nEmbd)
+  val AttLnB = Spec("attention.output.LayerNorm.bias")(_.nEmbd)
+  val InterW = lin("intermediate.dense.weight")(_.nEmbd, _.nIntermediate)
+  val InterB = Spec("intermediate.dense.bias")(_.nIntermediate)
+  val OutW = lin("output.dense.weight")(_.nIntermediate, _.nEmbd)
+  val OutB = Spec("output.dense.bias")(_.nEmbd)
+  val OutLnW = Spec("output.LayerNorm.weight")(_.nEmbd)
+  val OutLnB = Spec("output.LayerNorm.bias")(_.nEmbd)
+
+  private val Top = Seq(WordEmb, TypeEmb, PosEmb, EmbLnW, EmbLnB, ClsW, ClsB)
+  private val PerLayer = Seq(QueryW, QueryB, KeyW, KeyB, ValueW, ValueB,
+    AttOutW, AttOutB, AttLnW, AttLnB, InterW, InterB, OutW, OutB, OutLnW, OutLnB)
+  private val LayerPrefix = "encoder.layer."
+
+  /** Every tensor of a model with hparams `hp`. */
+  def all(hp: NerHparams): Seq[BertTensor] =
+    Top.map(_.at(hp)) ++
+      (0 until hp.nLayer).flatMap(i => PerLayer.map(_.at(hp, i)))
+
+  /** The row and layer `name` denotes in a model of `nLayer` layers; the
+    * layer index must be written canonically (`encoder.layer.1.`, not
+    * `encoder.layer.01.`). */
+  private def rowOf(name: String, nLayer: Int): Option[(Spec, Int)] =
+    if (!name.startsWith(LayerPrefix)) Top.find(_.name == name).map(_ -> -1)
+    else {
+      val rest = name.substring(LayerPrefix.length)
+      val dot = rest.indexOf('.')
+      val digits = rest.take(dot)
+      digits.toIntOption.filter(i => i >= 0 && i < nLayer && i.toString == digits)
+        .flatMap(i => PerLayer.find(_.name == rest.substring(dot + 1)).map(_ -> i))
+    }
+
+  /** The table entry named `name` in a model with hparams `hp`, if any. */
+  def find(name: String, hp: NerHparams): Option[BertTensor] =
+    rowOf(name, hp.nLayer).map { case (s, i) => s.at(hp, i) }
+
+  /** Whether `name` is a linear weight of a model with enough layers to
+    * hold it — the answer for any tensor a loaded model kept. */
+  def isLinear(name: String): Boolean =
+    rowOf(name, Int.MaxValue).exists(_._1.linear)
 }

@@ -100,40 +100,19 @@ final case class NerModel(
   * Any malformed input (bad magic — including the reference's own bundled
   * placeholder whose magic bytes are byte-swapped, `default_model.hpp:7-16` —
   * truncation, absurd sizes) yields `None`: the "no model" state, in which the
-  * engine silently returns empty entity lists.
+  * engine silently returns empty entity lists. Two checks keep a hostile
+  * file from costing more than its own size or failing later:
+  *   - bytes left: a record whose payload is longer than the bytes left in
+  *     the input (the file length, or the array length for [[loadBytes]])
+  *     is rejected before anything is allocated for it;
+  *   - dims: [[load]] keeps exactly the tensors of [[BertTensors]], and a
+  *     kept tensor whose stored dims differ from the table's (compared as
+  *     ggml compares shapes) rejects the container — as the reference's
+  *     loader rejects a wrongly shaped tensor — so a loaded model always
+  *     builds an encoder.
   */
 object ModelFormat {
   val Magic = 0x67676d6c
-
-  /** The tensor names the encoder consumes — the analogue of the name map the
-    * reference pre-builds and checks before reading each tensor
-    * (`src/ner_model.cpp:200-273`). Anything else is skipped, not stored.
-    */
-  private def isKnownTensor(name: String, hp: NerHparams): Boolean =
-    name match {
-      case "embeddings.word_embeddings.weight" |
-          "embeddings.token_type_embeddings.weight" |
-          "embeddings.position_embeddings.weight" |
-          "embeddings.LayerNorm.weight" | "embeddings.LayerNorm.bias" |
-          "classifier.weight" | "classifier.bias" => true
-      case n if n.startsWith("encoder.layer.") =>
-        val rest = n.substring("encoder.layer.".length)
-        val dot = rest.indexOf('.')
-        dot > 0 && rest.take(dot).forall(_.isDigit) &&
-          rest.take(dot).toIntOption.exists(i => i >= 0 && i < hp.nLayer) &&
-          LayerSuffixes.contains(rest.substring(dot + 1))
-      case _ => false
-    }
-
-  private val LayerSuffixes: Set[String] = Set(
-    "attention.self.query.weight", "attention.self.query.bias",
-    "attention.self.key.weight", "attention.self.key.bias",
-    "attention.self.value.weight", "attention.self.value.bias",
-    "attention.output.dense.weight", "attention.output.dense.bias",
-    "attention.output.LayerNorm.weight", "attention.output.LayerNorm.bias",
-    "intermediate.dense.weight", "intermediate.dense.bias",
-    "output.dense.weight", "output.dense.bias",
-    "output.LayerNorm.weight", "output.LayerNorm.bias")
 
   /** Little-endian wrapper over DataInputStream. `pos` counts every byte
     * consumed — [[walk]] reports each record's payload offset from it.
@@ -174,8 +153,11 @@ object ModelFormat {
   /** Defensive bounds absent from the reference: a corrupt header would
     * otherwise drive huge allocations. The product guards also keep every
     * weight-matrix element count within Int range, so downstream Int size
-    * arithmetic (BertEncoder) cannot overflow. Checked by [[walk]], so
-    * "scannable" and "loadable" agree on the header.
+    * arithmetic (BertEncoder) cannot overflow. `n_embd` must split evenly
+    * into `n_head` heads, as the reference's attention reshape requires
+    * (otherwise d_head rounds down, to 0 once n_head > n_embd, and the
+    * encoder's head loop runs n_head times per token). Checked by [[walk]],
+    * so "scannable" and "loadable" agree on the header.
     */
   private def validHparams(hp: NerHparams): Boolean = {
     def fits(n: Long): Boolean = n > 0 && n <= Int.MaxValue / 4
@@ -183,7 +165,7 @@ object ModelFormat {
       hp.nEmbd > (1 << 16) || hp.nMaxTokens <= 0 ||
       hp.nMaxTokens > (1 << 16) || hp.nLayer < 0 ||
       hp.nLayer > 1024 || hp.nLabels <= 0 || hp.nLabels > (1 << 16) ||
-      hp.nHead <= 0 || hp.nIntermediate <= 0 ||
+      hp.nHead <= 0 || hp.nEmbd % hp.nHead != 0 || hp.nIntermediate <= 0 ||
       hp.nIntermediate > (1 << 20) ||
       !fits(hp.nVocab.toLong * hp.nEmbd) ||
       !fits(hp.nMaxTokens.toLong * hp.nEmbd) ||
@@ -266,9 +248,10 @@ object ModelFormat {
     * directory entry goes to `record(hparams, meta, reader)`, which either
     * reads the payload from the reader and returns true, or returns false
     * to have the walker skip it. Malformed input, including a record
-    * [[payloadSize]] rejects, yields `None`.
+    * [[payloadSize]] rejects or whose payload runs past the `length` bytes
+    * of the input, yields `None`.
     */
-  private def walk(stream: InputStream)(token: (Int, Array[Byte]) => Unit)(
+  private def walk(stream: InputStream, length: Long)(token: (Int, Array[Byte]) => Unit)(
       record: (NerHparams, TensorMeta, LeReader) => Boolean)
       : Option[NerHparams] = {
     val r = new LeReader(new DataInputStream(stream))
@@ -302,7 +285,7 @@ object ModelFormat {
         if (nameLen < 0 || nameLen > (1 << 16)) return None
         val name = new String(r.readBytes(nameLen), StandardCharsets.UTF_8)
         val payload = payloadSize(ftype, dims)
-        if (payload < 0) return None
+        if (payload < 0 || payload > length - r.pos) return None
         if (!record(hp, TensorMeta(name, dims, ftype, r.pos, payload), r))
           r.skip(payload)
         next = r.tryReadIntLE()
@@ -318,64 +301,54 @@ object ModelFormat {
     val f = new java.io.File(path)
     if (!f.isFile) return None
     val in = new BufferedInputStream(new FileInputStream(f))
-    try load(in)
+    try load(in, f.length)
     finally in.close()
   }
 
   def loadBytes(bytes: Array[Byte]): Option[NerModel] =
-    load(new java.io.ByteArrayInputStream(bytes))
+    load(new java.io.ByteArrayInputStream(bytes), bytes.length)
 
-  def load(stream: InputStream): Option[NerModel] = {
+  /** Read a container of `length` bytes, keeping the [[BertTensors]] it
+    * holds; `None` if it is malformed or a kept tensor has other dims than
+    * the table's. */
+  private def load(stream: InputStream, length: Long): Option[NerModel] = {
     val main = Map.newBuilder[String, Int]
     val sub = Map.newBuilder[String, Int]
     val id2tok = Map.newBuilder[Int, String]
     val tensors = Map.newBuilder[String, NerTensor]
-    walk(stream) { (i, bytes) =>
+    var misshapen = false
+    walk(stream, length) { (i, bytes) =>
       val raw = new String(bytes, StandardCharsets.ISO_8859_1)
       id2tok += i -> new String(bytes, StandardCharsets.UTF_8)
       if (raw.length > 2 && raw.charAt(0) == '#' && raw.charAt(1) == '#')
         sub += raw.substring(2) -> i
       else main += raw -> i
     } { (hp, t, r) =>
-      // the reference seeks past tensors its model map doesn't name
-      // (`src/ner_model.cpp:275-282`); storing them would waste heap
-      val known = isKnownTensor(t.name, hp)
-      if (known) {
-        val numel = t.numel
-        t.ftype match {
-          case F32 =>
-            val data = new Array[Float](numel.toInt)
-            le(r.readBytes(numel.toInt * 4)).asFloatBuffer().get(data)
-            tensors += t.name -> NerTensor(t.dims, data)
-          case F16 =>
-            // F16: kept as raw half-precision shorts (round-8 VERDICT
-            // #4, symmetric with the Q4_0 treatment below): the
-            // encoder's linears evaluate them natively via the row-block
-            // [[DotKernel.matmulF16]] — in-register widening once per
-            // block of rows, half the weight-side memory traffic of F32,
-            // like the reference's
-            // ggml F16 eval (`src/ner_model.cpp:194`). Non-matmul
-            // consumers widen lazily through [[NerTensor.data]].
-            val data = new Array[Short](numel.toInt)
-            le(r.readBytes(numel.toInt * 2)).asShortBuffer().get(data)
-            tensors += t.name -> NerTensor(t.dims, null, f16raw = data)
-          case Q4_0 =>
-            // Q4_0 (`src/ner_model.cpp:278` maps non-F32/F16 ftypes to
-            // GGML_TYPE_Q4_0). ggml block_q4_0 layout (public ggml):
-            // per 32 values, an f16 scale d then 16 bytes of nibbles —
-            // first 16 values from low nibbles, next 16 from high;
-            // value = (q - 8) * d. The raw blocks are KEPT (round-7
-            // VERDICT #3): the encoder's linears evaluate them natively
-            // via the row-block [[DotKernel.matmulQ4]] (each block decoded
-            // once per block of rows), like the reference's ggml eval
-            // of quantized weights — dequantization happens lazily and
-            // only for non-matmul consumers (see [[NerTensor.data]]).
-            tensors += t.name ->
+      BertTensors.find(t.name, hp) match {
+        // the reference seeks past tensors its model map doesn't name
+        // (`src/ner_model.cpp:275-282`); storing them would waste heap
+        case None => false
+        case Some(spec) if !spec.fits(t.dims) => misshapen = true; false
+        case Some(_) =>
+          val numel = t.numel.toInt
+          tensors += t.name -> (t.ftype match {
+            case F32 =>
+              val data = new Array[Float](numel)
+              le(r.readBytes(numel * 4)).asFloatBuffer().get(data)
+              NerTensor(t.dims, data)
+            case F16 =>
+              // raw halves, evaluated natively (see [[NerTensor]])
+              val data = new Array[Short](numel)
+              le(r.readBytes(numel * 2)).asShortBuffer().get(data)
+              NerTensor(t.dims, null, f16raw = data)
+            case Q4_0 =>
+              // raw ggml blocks (`src/ner_model.cpp:278` maps non-F32/F16
+              // ftypes to GGML_TYPE_Q4_0; layout at [[dequantQ4]])
               NerTensor(t.dims, null, r.readBytes(t.payloadBytes.toInt))
-        }
+          })
+          true
       }
-      known
-    }.map(hp => NerModel(hp,
+    }.filterNot(_ => misshapen).map(hp => NerModel(hp,
       NerVocab(main.result(), sub.result(), id2tok.result()), tensors.result()))
   }
 
@@ -390,7 +363,7 @@ object ModelFormat {
     */
   def scanMeta(stream: InputStream): Option[GgmlMeta] = {
     val out = Seq.newBuilder[TensorMeta]
-    walk(stream)((_, _) => ()) { (_, t, _) => out += t; false }
+    walk(stream, Long.MaxValue)((_, _) => ()) { (_, t, _) => out += t; false }
       .map(GgmlMeta(_, out.result()))
   }
 
@@ -451,9 +424,10 @@ object ModelFormat {
     */
   def copyHeader(template: String, out: OutputStream): NerHparams = {
     val vocab = Vector.newBuilder[Array[Byte]]
-    val in = new BufferedInputStream(new FileInputStream(template))
+    val f = new java.io.File(template)
+    val in = new BufferedInputStream(new FileInputStream(f))
     val hp =
-      try walk(in)((_, b) => vocab += b)((_, _, _) => false)
+      try walk(in, f.length)((_, b) => vocab += b)((_, _, _) => false)
       finally in.close()
     require(hp.isDefined, s"not a valid ggml container: $template")
     writeHeader(new DataOutputStream(out), hp.get, vocab.result().iterator)
@@ -504,12 +478,10 @@ object ModelFormat {
     out
   }
 
-  /** The tensor names [[BertEncoder]] evaluates as linear matmuls — the
-    * ones eligible for Q4_0-native evaluation (everything else is consumed
-    * element-wise and stays F32). */
-  def isLinearWeight(name: String): Boolean =
-    name == "classifier.weight" || (name.endsWith(".weight") && (
-      name.contains("attention.self.") || name.contains("dense")))
+  /** Whether [[BertEncoder]] evaluates tensor `name` as a linear matmul
+    * ([[BertTensors.isLinear]]) — the tensors eligible for F16/Q4_0-native
+    * evaluation (everything else is consumed element-wise). */
+  def isLinearWeight(name: String): Boolean = BertTensors.isLinear(name)
 
   /** Quantize an F32 row to ggml Q4_0 blocks — the inverse of [[dequantQ4]]
     * per ggml's public `quantize_row_q4_0_reference`: per 32-value block,

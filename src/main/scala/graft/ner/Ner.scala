@@ -129,34 +129,15 @@ object Ner {
       scala.collection.immutable.ArraySeq.unsafeWrapArray(labels)).toArray
   }
 
-  /** Token budget per encoder batch. Batching trades activation-cache
-    * residency for weight-cache amortization, so the right size depends on
-    * the model (profiled per stage on the synthetic model; the benchmark's
-    * traced run reports the same split): when a
-    * layer's weight panels fit in L2 (bert-tiny class), weights never
-    * leave cache and big batches only evict the activations — per-document
-    * batches win. When weights are L2-resident-impossible (bert-base
-    * class, ~7 MB/layer), streaming them once per multi-document batch is
-    * the win, bounded so scratch stays ~16 MB/thread.
-    */
-  private[graft] def batchTokenBudget(hp: NerHparams): Int = {
-    val layerWeightBytes =
-      4L * (4L * hp.nEmbd * hp.nEmbd + 2L * hp.nEmbd * hp.nIntermediate)
-    if (layerWeightBytes <= (1L << 20)) hp.nMaxTokens
-    else {
-      val perTokenFloats = hp.nIntermediate + 8 * hp.nEmbd
-      math.max(hp.nMaxTokens, (4 << 20) / math.max(perTokenFloats, 1))
-    }
-  }
-
   /** The row evaluator, mirroring the reference row loop
     * (`src/ner_extension.cpp:99-167`): tokenizes each row, applies the
-    * truncate guard, packs rows into token-budgeted batches, runs the
-    * encoder once per batch ([[BertEncoder.evalBatch]] — one matmul stream
-    * per batch instead of per document), then argmax + BIO merge. With no
-    * model every row, NULL included, gets `[]`; with a model NULL maps to
-    * NULL. Results stream lazily so a long partition never materializes
-    * beyond one batch of logits.
+    * truncate guard, packs rows into batches of at most one context window
+    * (`nMaxTokens`) of tokens, runs the encoder once per batch
+    * ([[BertEncoder.evalBatch]] — one matmul stream per batch instead of
+    * per document; batching never changes a logit bit), then argmax + BIO
+    * merge. With no model every row, NULL included, gets `[]`; with a model
+    * NULL maps to NULL. Results stream lazily so a long partition never
+    * materializes beyond one batch of logits.
     */
   private[graft] def evalPartition[A](model: Option[Loaded],
       rows: Iterator[(A, String)], truncate: Boolean)
@@ -165,7 +146,6 @@ object Ner {
       case None => rows.map { case (a, _) => (a, Array.empty[NerEntity]) }
       case Some(Loaded(m, encoder)) =>
         val hp = m.hparams
-        val budget = batchTokenBudget(hp)
         val tokenized = rows.map { case (a, text) =>
           if (text == null) (a, null: Array[Int])
           else {
@@ -176,7 +156,8 @@ object Ner {
             (a, tokens)
           }
         }
-        // group by token budget, preserving order (nulls ride along free)
+        // group into batches of at most one context window of tokens,
+        // preserving order (nulls ride along free)
         val batches = new Iterator[Seq[(A, Array[Int])]] {
           private val it = tokenized.buffered
           def hasNext: Boolean = it.hasNext
@@ -186,7 +167,7 @@ object Ner {
             var continue = true
             while (continue && it.hasNext) {
               val nTok = if (it.head._2 == null) 0 else it.head._2.length
-              if (used > 0 && used + nTok > budget) continue = false
+              if (used > 0 && used + nTok > hp.nMaxTokens) continue = false
               else { buf += it.next(); used += nTok }
             }
             buf.result()

@@ -15,8 +15,8 @@ import scala.util.Random
   * recommended model class (`dslim/bert-base-NER`, ~110 M params —
   * reference TEST.md:26), where a layer's weight panels (~28 MB) can NEVER
   * be cache-resident and every matmul STREAMS weights from DRAM — the
-  * regime the F16/Q4 kernels exist for. `ProfileBase` measures the
-  * F32/F16/Q4 crossover there; BASELINE.md records it.
+  * regime the F16/Q4 kernels exist for. The benchmark's `ner_sql_base`
+  * workload (`perfbench/README.md`) runs its F16 twin end to end.
   */
 object SyntheticModel {
 
@@ -65,99 +65,54 @@ object SyntheticModel {
       if (t.length > 2 && t.startsWith("##")) sub += t.substring(2) -> i
       else main += t -> i
     }
-    val t = Map.newBuilder[String, NerTensor]
-    def add(name: String, dims: Array[Int]): Unit =
-      t += name -> NerTensor(dims, seeded(name, dims.product))
-    add("embeddings.word_embeddings.weight", Array(hp.nEmbd, hp.nVocab))
-    add("embeddings.token_type_embeddings.weight", Array(hp.nEmbd, 2))
-    add("embeddings.position_embeddings.weight", Array(hp.nEmbd, hp.nMaxTokens))
-    add("embeddings.LayerNorm.weight", Array(hp.nEmbd))
-    add("embeddings.LayerNorm.bias", Array(hp.nEmbd))
-    for (i <- 0 until hp.nLayer) {
-      val b = s"encoder.layer.$i."
-      add(b + "attention.self.query.weight", Array(hp.nEmbd, hp.nEmbd))
-      add(b + "attention.self.query.bias", Array(hp.nEmbd))
-      add(b + "attention.self.key.weight", Array(hp.nEmbd, hp.nEmbd))
-      add(b + "attention.self.key.bias", Array(hp.nEmbd))
-      add(b + "attention.self.value.weight", Array(hp.nEmbd, hp.nEmbd))
-      add(b + "attention.self.value.bias", Array(hp.nEmbd))
-      add(b + "attention.output.dense.weight", Array(hp.nEmbd, hp.nEmbd))
-      add(b + "attention.output.dense.bias", Array(hp.nEmbd))
-      add(b + "attention.output.LayerNorm.weight", Array(hp.nEmbd))
-      add(b + "attention.output.LayerNorm.bias", Array(hp.nEmbd))
-      add(b + "intermediate.dense.weight", Array(hp.nEmbd, hp.nIntermediate))
-      add(b + "intermediate.dense.bias", Array(hp.nIntermediate))
-      add(b + "output.dense.weight", Array(hp.nIntermediate, hp.nEmbd))
-      add(b + "output.dense.bias", Array(hp.nEmbd))
-      add(b + "output.LayerNorm.weight", Array(hp.nEmbd))
-      add(b + "output.LayerNorm.bias", Array(hp.nEmbd))
-    }
-    add("classifier.weight", Array(hp.nEmbd, hp.nLabels))
-    add("classifier.bias", Array(hp.nLabels))
-    NerModel(hp, NerVocab(main.result(), sub.result(), id2.result()),
-      t.result())
+    val tensors = BertTensors.all(hp).map(t =>
+      t.name -> NerTensor(t.dims, seeded(t.name, t.numel))).toMap
+    NerModel(hp, NerVocab(main.result(), sub.result(), id2.result()), tensors)
   }
 
-  /** Q4_0-quantized twin: every %32-compatible linear weight re-quantized
-    * to raw ggml blocks, so the encoder takes the quantized-native matmul
-    * path ([[DotKernel.matmulQ4]]) end-to-end. Entities can differ
-    * slightly from the F32 twin's (quantization moves logits) — fine:
-    * these variants exist for kernel exercise and profiling; the
+  /** A twin of `base` whose linear weights are re-encoded by `narrow`, so
+    * the encoder takes that form's native matmul path end-to-end. Entities
+    * can differ slightly from the F32 model's (narrowing moves logits) —
+    * fine: these variants exist for kernel exercise and profiling; the
     * oracle-facing output stays pinned to the F32 model.
     */
-  private def q4Twin(base: NerModel): Ner.Loaded = {
-    val tensors = base.tensors.map { case (name, t) =>
-      if (ModelFormat.isLinearWeight(name) && t.numel % 32 == 0)
-        name -> NerTensor(t.dims, null, ModelFormat.quantizeQ4(t.data))
-      else name -> t
-    }
-    val model = base.copy(tensors = tensors)
-    Ner.Loaded(model, new BertEncoder(model))
-  }
+  private def twin(base: NerModel)(narrow: NerTensor => NerTensor): Ner.Loaded =
+    withEncoder(base.copy(tensors = base.tensors.map { case (name, t) =>
+      name -> (if (ModelFormat.isLinearWeight(name)) narrow(t) else t)
+    }))
 
-  /** F16 twin: every linear weight narrowed to raw IEEE 754 halves, so the
-    * encoder takes the half-native matmul path ([[DotKernel.matmulF16]],
-    * round-8 VERDICT #4) end-to-end. Same logit-movement caveat as
-    * [[q4Twin]].
-    */
-  private def f16Twin(base: NerModel): Ner.Loaded = {
-    val tensors = base.tensors.map { case (name, t) =>
-      if (ModelFormat.isLinearWeight(name))
-        name -> NerTensor(t.dims, null,
-          f16raw = t.data.map(v => ModelFormat.floatToF16(v).toShort))
-      else name -> t
-    }
-    val model = base.copy(tensors = tensors)
+  private def withEncoder(model: NerModel): Ner.Loaded =
     Ner.Loaded(model, new BertEncoder(model))
-  }
+
+  /** Raw IEEE 754 halves, evaluated by [[DotKernel.matmulF16]] (round-8
+    * VERDICT #4). */
+  private def toF16(t: NerTensor): NerTensor =
+    NerTensor(t.dims, null, f16raw = t.data.map(v => ModelFormat.floatToF16(v).toShort))
 
   /** Build the model once per JVM (shared across tasks like a loaded file). */
-  lazy val loaded: Ner.Loaded = {
-    val model = buildModel(Hparams)
-    Ner.Loaded(model, new BertEncoder(model))
-  }
+  lazy val loaded: Ner.Loaded = withEncoder(buildModel(Hparams))
 
-  /** Q4_0-quantized twin of [[loaded]] (all shapes here are
+  /** Q4_0 twin of [[loaded]]: linear weights re-quantized to raw ggml
+    * blocks for [[DotKernel.matmulQ4]] (all shapes here are
     * %32-compatible: embd 64, intermediate 256) — the profile counterpart
     * for the F32 session (numbers in BASELINE.md).
     */
-  lazy val loadedQ4: Ner.Loaded = q4Twin(loaded.model)
+  lazy val loadedQ4: Ner.Loaded = twin(loaded.model)(t =>
+    if (t.numel % 32 == 0) NerTensor(t.dims, null, ModelFormat.quantizeQ4(t.data))
+    else t)
 
   /** F16 twin of [[loaded]] — the third point of the F32/F16/Q4
     * weight-precision profile (numbers in BASELINE.md).
     */
-  lazy val loadedF16: Ner.Loaded = f16Twin(loaded.model)
+  lazy val loadedF16: Ner.Loaded = twin(loaded.model)(toF16)
 
-  /** bert-base-geometry F32 model (~340 MB of weights, built once per
-    * JVM, a few seconds of seeded generation). */
-  lazy val loadedBase: Ner.Loaded = {
-    val model = buildModel(BaseHparams)
-    Ner.Loaded(model, new BertEncoder(model))
-  }
+  /** bert-base-geometry weights (~340 MB as F32, a few seconds of seeded
+    * generation), built once per JVM and shared by the twins below. */
+  private lazy val baseModel: NerModel = buildModel(BaseHparams)
 
-  /** bert-base-geometry Q4_0 twin (embd 768, FFN 3072 — %32-compatible). */
-  lazy val loadedBaseQ4: Ner.Loaded = q4Twin(loadedBase.model)
+  /** bert-base-geometry F32 model. */
+  lazy val loadedBase: Ner.Loaded = withEncoder(baseModel)
 
-  /** bert-base-geometry F16 twin. */
-  lazy val loadedBaseF16: Ner.Loaded = f16Twin(loadedBase.model)
+  /** bert-base-geometry F16 twin (builds no F32 encoder). */
+  lazy val loadedBaseF16: Ner.Loaded = twin(baseModel)(toF16)
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.ner.ModelFormat
+import graft.ner.{BertTensors, ModelFormat}
 
 /** `ggml` — a DataSource V2 relation over the reference's model container:
   * one row per stored tensor, payloads never read.
@@ -26,8 +26,10 @@ import graft.ner.ModelFormat
   *
   * Schema: `file, tensor, ndims, shape ARRAY<INT> (innermost-first, as
   * written), dtype (F32|F16|Q4_0), numel, payload_bytes, data_offset,
-  * linear` (does [[graft.ner.ModelFormat.isLinearWeight]] claim it — i.e.
-  * would the encoder matmul it natively in its stored representation).
+  * linear` (is it a linear weight of the container's model in the tensor
+  * table [[graft.ner.BertTensors]] — i.e. would the encoder matmul it
+  * natively in its stored representation; false for tensors the encoder's
+  * load skips, such as `pooler.*` or layers at or past `n_layer`).
   *
   * This is the model-introspection surface the reference keeps implicit:
   * its loader walks exactly this directory structure and skips unnamed
@@ -232,37 +234,26 @@ private[sources] class GgmlReader(file: String, required: StructType,
     val meta = ModelFormat.scanFile(file).getOrElse(
       throw new IllegalArgumentException(
         s"not a readable ggml model container: $file"))
-    val names = required.fieldNames
+    // one Scala value per column: absorbed filters read it, rows convert it
+    def value(t: ModelFormat.TensorMeta, c: String): Any = c match {
+      case "file" => file
+      case "tensor" => t.name
+      case "ndims" => t.dims.length
+      case "shape" => new GenericArrayData(t.dims)
+      case "dtype" => t.dtype
+      case "numel" => t.numel
+      case "payload_bytes" => t.payloadBytes
+      case "data_offset" => t.dataOffset
+      case "linear" => BertTensors.find(t.name, meta.hparams).exists(_.linear)
+      case "payload" => payloadOf(t.dataOffset, t.payloadBytes)
+    }
     meta.tensors.iterator
-      .filter { t =>
-        def col(c: String): Any = c match {
-          case "file" => file
-          case "tensor" => t.name
-          case "ndims" => t.dims.length
-          case "dtype" => t.dtype
-          case "numel" => t.numel
-          case "payload_bytes" => t.payloadBytes
-          case "data_offset" => t.dataOffset
-          case "linear" => ModelFormat.isLinearWeight(t.name)
-          case other =>
-            throw new IllegalArgumentException(s"unfilterable column: $other")
-        }
-        filters.forall(GgmlTensorSource.eval(_, col))
-      }
+      .filter(t => filters.forall(GgmlTensorSource.eval(_, value(t, _))))
       .map { t =>
-        val vals: Array[Any] = names.map {
-          case "file" => UTF8String.fromString(file)
-          case "tensor" => UTF8String.fromString(t.name)
-          case "ndims" => t.dims.length
-          case "shape" => new GenericArrayData(t.dims)
-          case "dtype" => UTF8String.fromString(t.dtype)
-          case "numel" => t.numel
-          case "payload_bytes" => t.payloadBytes
-          case "data_offset" => t.dataOffset
-          case "linear" => ModelFormat.isLinearWeight(t.name)
-          case "payload" => payloadOf(t.dataOffset, t.payloadBytes)
-        }
-        new GenericInternalRow(vals): InternalRow
+        new GenericInternalRow(required.fieldNames.map(value(t, _) match {
+          case s: String => UTF8String.fromString(s)
+          case v => v
+        })): InternalRow
       }
   }
 

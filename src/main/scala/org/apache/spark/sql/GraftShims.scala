@@ -33,6 +33,8 @@ object GraftShims {
     * retried task could in principle over-count, which for a convergence
     * test errs only toward one extra (idempotent) round — never toward a
     * premature exit, because a true fixpoint round adds zero everywhere.
+    * So the flagged count is an UPPER BOUND, fit only for a nonzero
+    * convergence test: a caller must not use it as an exact row count.
     */
   def localCheckpointAndCount(
       df: DataFrame, flagCol: Option[String] = None): (DataFrame, Long) = {

@@ -56,8 +56,10 @@ class NativeTopKSpec extends AnyFunSuite {
       val want = typed.finish(xs.foldLeft(typed.zero)(typed.reduce))
       for (cut <- Seq(0, 1, 3, xs.size / 2, xs.size)) {
         val (a, b) = xs.splitAt(cut)
-        val m = NativeTopK.mergeBufs(nativeOf(a, k), nativeOf(b, k))
+        val input = nativeOf(b, k)
+        val m = NativeTopK.mergeBufs(nativeOf(a, k), input)
         assert(bits(entriesOf(m)) == bits(want), s"cut=$cut")
+        assert(!(m eq input), s"cut=$cut: the result aliases the merge input")
       }
     }
   }

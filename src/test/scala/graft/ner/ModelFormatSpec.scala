@@ -39,6 +39,13 @@ class ModelFormatSpec extends AnyFunSuite {
     assert(ModelFormat.loadFile(p).isEmpty)
   }
 
+  test("a header whose n_embd does not split into n_head heads yields None") {
+    val p = tmp("heads.bin")
+    TestModels.writeValid(p, nEmbd = 8, nHead = 3, weightGen = TestModels.seeded(9))
+    assert(ModelFormat.loadFile(p).isEmpty)
+    assert(ModelFormat.scanFile(p).isEmpty)
+  }
+
   test("missing file yields None") {
     assert(ModelFormat.loadFile("/tmp/does/not/exist/model.bin").isEmpty)
   }

@@ -127,6 +127,29 @@ class NerSparkSpec extends SparkTestBase {
     unsetPath()
   }
 
+  test("a known tensor with the wrong size or dims is no model: [] for every row") {
+    Ner.register(spark)
+    val sql = "SELECT ner(t) AS e FROM VALUES ('duckdb is great'), ('new york'), " +
+      "(CAST(NULL AS STRING)) AS v(t)"
+    val good = tmp("shaped.bin")
+    TestModels.writeValid(good, classifierBias = TestModels.biasFor(5))
+    setPath(good)
+    assert(nerRows(sql).take(2).forall(_.getSeq[Row](0).nonEmpty))
+    // classifier.bias with 8 values for 9 labels; intermediate.dense.weight
+    // stored [16, 8] instead of [n_embd 8, n_intermediate 16] (same numel)
+    Seq(
+      ("bias8.bin", TestModels.biasFor(5).take(8), "classifier.bias" -> Array(8)),
+      ("swapped.bin", TestModels.biasFor(5),
+        "encoder.layer.0.intermediate.dense.weight" -> Array(16, 8))
+    ).foreach { case (file, bias, dims) =>
+      val p = tmp(file)
+      TestModels.writeValid(p, classifierBias = bias, storedDims = Map(dims))
+      setPath(p)
+      assert(nerRows(sql).forall(r => !r.isNullAt(0) && r.getSeq[Row](0).isEmpty), file)
+    }
+    unsetPath()
+  }
+
   test("truncate=false with over-limit input throws the reference message") {
     Ner.register(spark)
     val p = tmp("small.bin")

@@ -95,10 +95,13 @@ object TestModels {
     }
   }
 
-  /** Write a structurally-valid model. `weightGen` supplies every tensor
-    * value except `classifier.bias`, which is given explicitly so tests can
-    * force deterministic argmax outcomes (an all-zero model with a biased
+  /** Write a structurally-valid model: every [[BertTensors]] entry of its
+    * hparams, in table order. `weightGen` supplies every tensor value except
+    * `classifier.bias`, which is given explicitly so tests can force
+    * deterministic argmax outcomes (an all-zero model with a biased
     * classifier labels every token with `argmax(classifierBias)`).
+    * `storedDims` overrides the dims written for the named tensors (a
+    * hostile container the loader must reject).
     */
   def writeValid(
       path: String,
@@ -113,20 +116,27 @@ object TestModels {
       weightGen: (String, Int) => Array[Float] = zeros,
       extraTensor: Boolean = false,
       q4Linears: Boolean = false,
-      f16Linears: Boolean = false
+      f16Linears: Boolean = false,
+      storedDims: Map[String, Array[Int]] = Map.empty
   ): Unit = {
     require(!(q4Linears && f16Linears), "pick one linear storage type")
+    val hp = NerHparams(vocab.length, nMaxTokens, nEmbd, nIntermediate, nHead,
+      nLayer, if (q4Linears) 2 else if (f16Linears) 1 else 0 /* f16 flag */,
+      nLabels)
     val w = new Writer(path)
     w.i32(ModelFormat.Magic)
-    w.i32(vocab.length).i32(nMaxTokens).i32(nEmbd).i32(nIntermediate)
-    w.i32(nHead).i32(nLayer)
-    w.i32(if (q4Linears) 2 else if (f16Linears) 1 else 0 /* f16 flag */)
-    w.i32(nLabels)
+    w.i32(hp.nVocab).i32(hp.nMaxTokens).i32(hp.nEmbd).i32(hp.nIntermediate)
+    w.i32(hp.nHead).i32(hp.nLayer).i32(hp.f16).i32(hp.nLabels)
     vocab.foreach(w.str)
 
-    def t(name: String, dims: Array[Int]): Unit = {
+    BertTensors.all(hp).foreach { t =>
+      val dims = storedDims.getOrElse(t.name, t.dims)
       val n = dims.product
-      val data = weightGen(name, n)
+      val data =
+        if (t.name == "classifier.bias" && classifierBias != null) {
+          require(classifierBias.length == n)
+          classifierBias
+        } else weightGen(t.name, n)
       // q4Linears/f16Linears: the matmul weights ship compact; everything
       // else stays F32. NOTE this mixed per-tensor layout diverges from the
       // reference's header-driven format: ner_model.cpp sizes known-tensor
@@ -135,43 +145,14 @@ object TestModels {
       // this fixture. The repo loader reads per-tensor ftype (and also
       // handles fully-non-F32 reference files via the same lazy-decode
       // tensors), so the fixture exercises exactly the paths under test.
-      if (q4Linears && isLinearWeight(name) && n % 32 == 0)
-        w.tensorQ4(name, dims, quantizeQ4(data))
-      else if (f16Linears && isLinearWeight(name))
-        w.tensorF16(name, dims, data)
-      else w.tensor(name, dims, data)
-    }
-    t("embeddings.word_embeddings.weight", Array(nEmbd, vocab.length))
-    t("embeddings.token_type_embeddings.weight", Array(nEmbd, 2))
-    t("embeddings.position_embeddings.weight", Array(nEmbd, nMaxTokens))
-    t("embeddings.LayerNorm.weight", Array(nEmbd))
-    t("embeddings.LayerNorm.bias", Array(nEmbd))
-    for (i <- 0 until nLayer) {
-      val b = s"encoder.layer.$i."
-      t(b + "attention.self.query.weight", Array(nEmbd, nEmbd))
-      t(b + "attention.self.query.bias", Array(nEmbd))
-      t(b + "attention.self.key.weight", Array(nEmbd, nEmbd))
-      t(b + "attention.self.key.bias", Array(nEmbd))
-      t(b + "attention.self.value.weight", Array(nEmbd, nEmbd))
-      t(b + "attention.self.value.bias", Array(nEmbd))
-      t(b + "attention.output.dense.weight", Array(nEmbd, nEmbd))
-      t(b + "attention.output.dense.bias", Array(nEmbd))
-      t(b + "attention.output.LayerNorm.weight", Array(nEmbd))
-      t(b + "attention.output.LayerNorm.bias", Array(nEmbd))
-      t(b + "intermediate.dense.weight", Array(nEmbd, nIntermediate))
-      t(b + "intermediate.dense.bias", Array(nIntermediate))
-      t(b + "output.dense.weight", Array(nIntermediate, nEmbd))
-      t(b + "output.dense.bias", Array(nEmbd))
-      t(b + "output.LayerNorm.weight", Array(nEmbd))
-      t(b + "output.LayerNorm.bias", Array(nEmbd))
+      if (q4Linears && t.linear && n % 32 == 0)
+        w.tensorQ4(t.name, dims, quantizeQ4(data))
+      else if (f16Linears && t.linear)
+        w.tensorF16(t.name, dims, data)
+      else w.tensor(t.name, dims, data)
     }
     if (extraTensor)
       w.tensor("some.unknown.tensor", Array(4), Array(1f, 2f, 3f, 4f))
-    t("classifier.weight", Array(nEmbd, nLabels))
-    if (classifierBias != null) {
-      require(classifierBias.length == nLabels)
-      w.tensor("classifier.bias", Array(nLabels), classifierBias)
-    } else t("classifier.bias", Array(nLabels))
     w.close()
   }
 

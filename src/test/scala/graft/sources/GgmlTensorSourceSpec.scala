@@ -111,6 +111,31 @@ class GgmlTensorSourceSpec extends SparkTestBase {
       Seq(("F32", 8L)))
   }
 
+  test("linear follows the tensor table: pooler.* and layers past n_layer are not linear") {
+    val d = Files.createTempDirectory("ggml-linear").toFile
+    d.deleteOnExit()
+    val golden = new java.io.File(d, "golden.bin").toPath
+    val in = getClass.getResourceAsStream("/graft/ner/golden_converter_model.bin")
+    try Files.copy(in, golden) finally in.close()
+    def linearOf(p: String): Map[String, Boolean] =
+      spark.read.format("ggml").load(p).select("tensor", "linear").collect()
+        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    val linear = linearOf(golden.toString)
+    assert(!linear("pooler.dense.weight") && !linear("pooler.dense.bias"))
+    assert(linear.filter(_._2).keySet === Set("classifier.weight") ++
+      Seq("attention.self.query", "attention.self.key", "attention.self.value",
+        "attention.output.dense", "intermediate.dense", "output.dense")
+        .map(s => s"encoder.layer.0.$s.weight"))
+    // a 2-layer model carrying a stray layer-2 linear weight
+    val m = SyntheticModel.loaded.model
+    val stray = "encoder.layer.2.output.dense.weight"
+    val p = s"$d/stray.bin"
+    ModelFormat.write(m.copy(tensors = m.tensors +
+      (stray -> m.tensors("encoder.layer.1.output.dense.weight"))), p)
+    val linear2 = linearOf(p)
+    assert(!linear2(stray) && linear2("encoder.layer.1.output.dense.weight"))
+  }
+
   private def theScan(df: org.apache.spark.sql.DataFrame): GgmlScan =
     df.queryExecution.executedPlan.collectFirst {
       case b: BatchScanExec => b.scan.asInstanceOf[GgmlScan]
