@@ -52,6 +52,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[Ner.type].getName, name),
         (children: Seq[Expression]) => Ner.expressionBuilder(name, Ner.ConfPath)(children)))
     }
+    // ner() is evaluated only by NerEvalExec: the rule moves each call into
+    // a NerEval node, the strategy plans that node
+    ext.injectPreCBORule(_ => graft.ner.ExtractNer)
+    ext.injectPlannerStrategy(_ => graft.ner.NerEval.Strategy)
     kernelBuilders.foreach { case (name, (clazz, builder)) =>
       ext.injectFunction((
         new FunctionIdentifier(name),

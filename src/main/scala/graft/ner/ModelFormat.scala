@@ -100,7 +100,7 @@ final case class NerModel(
   * Any malformed input (bad magic — including the reference's own bundled
   * placeholder whose magic bytes are byte-swapped, `default_model.hpp:7-16` —
   * truncation, absurd sizes) yields `None`: the "no model" state, in which the
-  * engine silently returns empty entity lists. Two checks keep a hostile
+  * engine silently returns empty entity lists. Three checks keep a hostile
   * file from costing more than its own size or failing later:
   *   - bytes left: a record whose payload is longer than the bytes left in
   *     the input (the file length, or the array length for [[loadBytes]])
@@ -109,7 +109,11 @@ final case class NerModel(
   *     kept tensor whose stored dims differ from the table's (compared as
   *     ggml compares shapes) rejects the container — as the reference's
   *     loader rejects a wrongly shaped tensor — so a loaded model always
-  *     builds an encoder.
+  *     builds an encoder;
+  *   - zero-fill: the encoder zero-fills a table tensor the container
+  *     omits, sized by the hparams, so a container whose omitted tensors
+  *     would take more F32 bytes than its own length plus 1 MiB is
+  *     rejected.
   */
 object ModelFormat {
   val Magic = 0x67676d6c
@@ -308,9 +312,15 @@ object ModelFormat {
   def loadBytes(bytes: Array[Byte]): Option[NerModel] =
     load(new java.io.ByteArrayInputStream(bytes), bytes.length)
 
+  /** Bytes of F32 zero-fill a container may cost beyond its own length:
+    * enough for a hand-built container of a few tensors of a test-sized
+    * model, far below what a hostile header can name. */
+  private val ZeroFillSlack = 1L << 20
+
   /** Read a container of `length` bytes, keeping the [[BertTensors]] it
-    * holds; `None` if it is malformed or a kept tensor has other dims than
-    * the table's. */
+    * holds; `None` if it is malformed, a kept tensor has other dims than
+    * the table's, or the absent tensors' F32 zero-fill would take more
+    * than `length` + [[ZeroFillSlack]] bytes. */
   private def load(stream: InputStream, length: Long): Option[NerModel] = {
     val main = Map.newBuilder[String, Int]
     val sub = Map.newBuilder[String, Int]
@@ -348,8 +358,17 @@ object ModelFormat {
           })
           true
       }
-    }.filterNot(_ => misshapen).map(hp => NerModel(hp,
-      NerVocab(main.result(), sub.result(), id2tok.result()), tensors.result()))
+    }.filterNot(_ => misshapen).flatMap { hp =>
+      val kept = tensors.result()
+      // the encoder zero-fills an absent tensor from the hparams: a header
+      // naming a model far larger than its file is no model, not an
+      // allocation the file never paid for
+      val zeroFill = BertTensors.all(hp).filterNot(t => kept.contains(t.name))
+        .map(_.numel * 4L).sum
+      if (zeroFill > length + ZeroFillSlack) None
+      else Some(NerModel(hp,
+        NerVocab(main.result(), sub.result(), id2tok.result()), kept))
+    }
   }
 
   /** Walk the container and return its tensor DIRECTORY without reading a

@@ -37,10 +37,15 @@ final case class NerEntity(entity: String, label: String)
   * its source — the configured path, or the broadcast of
   * [[registerBroadcast]] (the reference equivalently holds one
   * process-global model, `src/ner_extension.cpp:16-22`, but without a lock;
-  * ours synchronizes). Inference is row-parallel across Spark tasks — each task
-  * runs the single-threaded encoder, replacing the reference's 4 ggml threads
-  * per call with inter-row parallelism, which is the right trade at cluster
-  * scale (no oversubscription, linear scaling with cores).
+  * ours synchronizes). A `ner()` call is evaluated only by [[NerEvalExec]],
+  * the way Spark evaluates Python UDFs: [[ExtractNer]] moves each call into
+  * a [[NerEval]] node below the operator that holds it, and the operator
+  * feeds whole partitions through [[evalPartition]]'s token-budgeted
+  * batches. The reference runs each call on 4 ggml threads; we run one
+  * single-threaded encoder per Spark task instead, and [[NerEvalExec]]
+  * spreads a scan narrower than `defaultParallelism` (a one-row-group
+  * parquet file is one partition) over that many tasks, so every core
+  * Spark schedules runs the encoder and none is oversubscribed.
   */
 object Ner {
   val ConfKey = "spark.ner.model_path"
@@ -106,10 +111,20 @@ object Ner {
     cache = null
   }
 
-  /** One row through [[evalPartition]]. */
+  /** One row through [[evalPartition]]: the one-row reference the
+    * batched SQL route must match. */
   private[graft] def evalWith(model: Option[Loaded], text: String,
       truncate: Boolean): Array[NerEntity] =
-    evalPartition(model, Iterator.single(((), text)), truncate).next()._2
+    evalPartition(model, Iterator.single(((), text, truncate))).next()._2
+
+  /** What [[evalPartition]] did: input rows, NULL texts, rows evaluated
+    * without a model, tokens, documents cut at the context window,
+    * encoder calls and the nanoseconds they took. [[NerEvalExec]]
+    * publishes these as SQL metrics. */
+  final class Tally {
+    var rows, nullRows, noModelRows, tokens, truncated, encoderCalls,
+      encoderNs = 0L
+  }
 
   /** Entity extraction from already-computed logits (argmax -> label
     * collapse -> BIO merge, `src/ner_extension.cpp:117-167`).
@@ -131,28 +146,38 @@ object Ner {
 
   /** The row evaluator, mirroring the reference row loop
     * (`src/ner_extension.cpp:99-167`): tokenizes each row, applies the
-    * truncate guard, packs rows into batches of at most one context window
-    * (`nMaxTokens`) of tokens, runs the encoder once per batch
+    * row's truncate guard, packs rows into batches of at most one context
+    * window (`nMaxTokens`) of tokens, runs the encoder once per batch
     * ([[BertEncoder.evalBatch]] — one matmul stream per batch instead of
     * per document; batching never changes a logit bit), then argmax + BIO
     * merge. With no model every row, NULL included, gets `[]`; with a model
-    * NULL maps to NULL. Results stream lazily so a long partition never
-    * materializes beyond one batch of logits.
+    * NULL maps to NULL. Each row is `(key, text, truncate)`. Results stream
+    * lazily so a long partition never materializes beyond one batch of
+    * logits; `tally` counts what was done.
     */
   private[graft] def evalPartition[A](model: Option[Loaded],
-      rows: Iterator[(A, String)], truncate: Boolean)
+      rows: Iterator[(A, String, Boolean)], tally: Tally = new Tally)
       : Iterator[(A, Array[NerEntity])] =
     model match {
-      case None => rows.map { case (a, _) => (a, Array.empty[NerEntity]) }
+      case None => rows.map { case (a, text, _) =>
+        tally.rows += 1
+        tally.noModelRows += 1
+        if (text == null) tally.nullRows += 1
+        (a, Array.empty[NerEntity])
+      }
       case Some(Loaded(m, encoder)) =>
         val hp = m.hparams
-        val tokenized = rows.map { case (a, text) =>
-          if (text == null) (a, null: Array[Int])
+        val tokenized = rows.map { case (a, text, truncate) =>
+          tally.rows += 1
+          if (text == null) { tally.nullRows += 1; (a, null: Array[Int]) }
           else {
             val tokens = WordPiece.tokenize(m.vocab, text, hp.nMaxTokens)
-            if (!truncate && tokens.length >= hp.nMaxTokens)
-              throw new IllegalArgumentException(
+            if (tokens.length >= hp.nMaxTokens) {
+              if (!truncate) throw new IllegalArgumentException(
                 "Input string exceeds model token limit and truncate=false")
+              tally.truncated += 1
+            }
+            tally.tokens += tokens.length
             (a, tokens)
           }
         }
@@ -175,7 +200,15 @@ object Ner {
         }
         batches.flatMap { batch =>
           val live = batch.collect { case (_, t) if t != null => t }.toArray
-          val logits = encoder.evalBatch(live)
+          val logits =
+            if (live.isEmpty) Array.empty[Array[Float]]
+            else {
+              val t0 = System.nanoTime()
+              val out = encoder.evalBatch(live)
+              tally.encoderNs += System.nanoTime() - t0
+              tally.encoderCalls += 1
+              out
+            }
           var i = -1
           batch.map { case (a, tokens) =>
             if (tokens == null) (a, null: Array[NerEntity])
@@ -200,15 +233,18 @@ object Ner {
 
   /** DataFrame-API entry points (native Catalyst expression — no encoder
     * round-trip; see [[NerExtractExpression]]). 1-arg form: truncate
-    * defaults to true (`src/ner_extension.cpp:53`).
+    * defaults to true (`src/ner_extension.cpp:53`). The column is
+    * evaluated by [[NerEvalExec]], so its session needs [[install]]: done
+    * here for the active session, and by [[register]],
+    * [[registerBroadcast]] and `graft.GraftExtensions`.
     */
-  def ner(text: Column): Column =
-    GraftSqlShim.column(NerExtractExpression(
-      GraftSqlShim.expression(text), Literal.TrueLiteral, ConfPath))
-  def ner(text: Column, truncate: Column): Column =
+  def ner(text: Column): Column = ner(text, GraftSqlShim.column(Literal.TrueLiteral))
+  def ner(text: Column, truncate: Column): Column = {
+    SparkSession.getActiveSession.foreach(install)
     GraftSqlShim.column(NerExtractExpression(
       GraftSqlShim.expression(text), GraftSqlShim.expression(truncate),
       ConfPath))
+  }
 
   /** Arity-dispatching builder behind [[register]], [[registerBroadcast]]
     * and `graft.GraftExtensions` — DuckDB `ScalarFunctionSet` overload
@@ -230,8 +266,22 @@ object Ner {
     */
   def register(spark: SparkSession): Unit = bind(spark, ConfPath)
 
-  private def bind(spark: SparkSession, source: ModelSource): Unit =
+  private def bind(spark: SparkSession, source: ModelSource): Unit = {
+    install(spark)
     Seq("ner", "ner_extract").foreach { name =>
       GraftSqlShim.registerBuilder(spark, name, expressionBuilder(name, source))
     }
+  }
+
+  /** Put [[ExtractNer]] and [[NerEval.Strategy]] on the session
+    * (idempotent) — the `experimental` twin of `graft.GraftExtensions`'
+    * injections, as `graft.plans.AsOfJoin.install` does for its join. */
+  def install(spark: SparkSession): Unit = {
+    val opt = spark.experimental.extraOptimizations
+    if (!opt.contains(ExtractNer))
+      spark.experimental.extraOptimizations = opt :+ ExtractNer
+    val strat = spark.experimental.extraStrategies
+    if (!strat.contains(NerEval.Strategy))
+      spark.experimental.extraStrategies = strat :+ NerEval.Strategy
+  }
 }

@@ -1,66 +1,55 @@
 package graft.ner
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{
+  Expression, NamedLambdaVariable, Unevaluable}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for `ner(text[, truncate])` — the step up from
-  * a Scala UDF in the custom-function preference order: no encoder
-  * round-trip, the entity list is written straight as Catalyst
-  * `ArrayData[InternalRow]`.
-  *
-  * Rows go through [[Ner.evalWith]] with the model `source` resolves to
-  * (the session conf path, or a broadcast from [[Ner.registerBroadcast]]):
-  * `[]` (even for NULL input) with no model, NULL passthrough with a model,
-  * the reference's exact truncate-overflow error.
+/** The Catalyst expression `ner(text[, truncate])` binds to. It holds the
+  * call — its arguments and the model `source` (the session conf path, or
+  * a broadcast from [[Ner.registerBroadcast]]) — and is never evaluated
+  * itself: like Spark's `PythonUDF` it is [[Unevaluable]], and
+  * [[ExtractNer]] moves every call into a [[NerEval]] node that
+  * [[NerEvalExec]] runs, whole partitions at a time, through
+  * [[Ner.evalPartition]]: `[]` (even for NULL input) with no model, NULL
+  * passthrough with a model, the reference's exact truncate-overflow
+  * error.
   *
   * Fidelity note: the reference reads the 2-arg `truncate` flag once per
   * 2048-row chunk from row 0 (`src/ner_extension.cpp:54-61`) — passing a
-  * boolean *column* there applies row 0's value to the whole chunk. This
-  * expression evaluates the flag per row, which is strictly more precise;
-  * with the literal arguments the reference's tests and docs use, behavior
-  * is identical.
+  * boolean *column* there applies row 0's value to the whole chunk.
+  * [[NerEvalExec]] carries the flag per row, which is strictly more
+  * precise; with the literal arguments the reference's tests and docs use,
+  * behavior is identical. A NULL flag keeps the default (truncate), like
+  * the reference's row-0 validity check.
   *
-  * Marked [[Nondeterministic]] — the Catalyst analogue of the reference's
-  * `FunctionStability::VOLATILE` (`src/ner_extension.cpp:201-203`): results
-  * depend on the mutable global model, so constant-folding `ner('literal')`
-  * must be blocked. Evaluation falls back to interpreted mode
-  * ([[CodegenFallback]]); the surrounding projection still codegens.
+  * Not deterministic — the Catalyst analogue of the reference's
+  * `FunctionStability::VOLATILE` (`src/ner_extension.cpp:201-203`):
+  * results depend on the mutable global model, so `ner('literal')` is
+  * never constant-folded.
+  *
+  * A call over a lambda variable (`transform(a, x -> ner(x))`) fails
+  * analysis: [[NerEval]] evaluates one call per row, not per array
+  * element.
   */
 case class NerExtractExpression(text: Expression, truncateExpr: Expression,
     source: Ner.ModelSource)
-    extends Expression with Nondeterministic with CodegenFallback {
+    extends Expression with Unevaluable {
 
   override def children: Seq[Expression] = Seq(text, truncateExpr)
 
   override def nullable: Boolean = true
 
+  override lazy val deterministic: Boolean = false
+
   override def dataType: DataType = NerExtractExpression.ResultType
 
-  override protected def initializeInternal(partitionIndex: Int): Unit = ()
-
-  override protected def evalInternal(input: InternalRow): Any = {
-    val t = text.eval(input)
-    val tr = truncateExpr.eval(input)
-    val truncate = tr == null || tr == true // NULL keeps the default, like the reference's row-0 validity check
-    val entities = Ner.evalWith(Ner.modelFor(source),
-      if (t == null) null else t.toString, truncate)
-    if (entities == null) null
-    else {
-      val rows = new Array[Any](entities.length)
-      var i = 0
-      while (i < entities.length) {
-        rows(i) = InternalRow(
-          UTF8String.fromString(entities(i).entity),
-          UTF8String.fromString(entities(i).label))
-        i += 1
-      }
-      new GenericArrayData(rows)
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.exists(_.exists(_.isInstanceOf[NamedLambdaVariable])))
+      TypeCheckResult.TypeCheckFailure("ner() cannot read a lambda " +
+        "variable: it is evaluated once per row, not per array element; " +
+        "explode the array and call ner() on the column")
+    else TypeCheckResult.TypeCheckSuccess
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =

@@ -60,7 +60,8 @@ object NerQueries {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
-        Ner.evalPartition(Some(model()), rows, truncate = true).map {
+        Ner.evalPartition(Some(model()),
+            rows.map { case (id, text) => (id, text, true) }).map {
           case (id, ents) =>
             (id, ents.length, if (ents.isEmpty) null else ents.head.label)
         }

@@ -23,7 +23,7 @@ class BaseGeometrySpec extends AnyFunSuite {
     // -> the multi-doc branch runs
     assert(totalTokens <= loaded.model.hparams.nMaxTokens)
     val batched = Ner.evalPartition(Some(loaded),
-      docs.iterator.map(d => (d, d)), truncate = true).toSeq
+      docs.iterator.map(d => (d, d, true))).toSeq
     assert(batched.map(_._1) == docs)
     docs.zip(batched).foreach { case (d, (_, ents)) =>
       val single = Ner.evalWith(Some(loaded), d, truncate = true)

@@ -39,8 +39,8 @@ class BertEncoderBatchSpec extends AnyFunSuite {
     val rows = Seq[(Long, String)](
       (1L, texts(0)), (2L, null), (3L, texts(3)), (4L, texts(2)),
       (5L, texts(4)))
-    val got = Ner.evalPartition(Some(loaded), rows.iterator, truncate = true)
-      .toSeq
+    val got = Ner.evalPartition(Some(loaded),
+      rows.iterator.map { case (id, t) => (id, t, true) }).toSeq
     assert(got.map(_._1) == Seq(1L, 2L, 3L, 4L, 5L))
     assert(got(1)._2 == null) // with a model, NULL maps to NULL
     val viaSingle = rows.map { case (id, t) =>
@@ -54,16 +54,20 @@ class BertEncoderBatchSpec extends AnyFunSuite {
 
   test("evalPartition with no model yields [] for every row, nulls included") {
     val rows = Seq[(Long, String)]((1L, "abc"), (2L, null))
-    val got = Ner.evalPartition(None, rows.iterator, truncate = true).toSeq
+    val tally = new Ner.Tally
+    val got = Ner.evalPartition(None,
+      rows.iterator.map { case (id, t) => (id, t, true) }, tally).toSeq
     assert(got.forall(_._2.isEmpty))
+    assert((tally.rows, tally.nullRows, tally.noModelRows, tally.encoderCalls) ==
+      (2L, 1L, 2L, 0L))
   }
 
   test("evalPartition enforces the truncate=false guard with the exact message") {
     val long = "a b c " * 200
     val rows = Seq[(Long, String)]((1L, long))
     val e = intercept[IllegalArgumentException] {
-      Ner.evalPartition(Some(loaded), rows.iterator, truncate = false)
-        .toSeq
+      Ner.evalPartition(Some(loaded),
+        rows.iterator.map { case (id, t) => (id, t, false) }).toSeq
     }
     assert(e.getMessage ==
       "Input string exceeds model token limit and truncate=false")
@@ -73,8 +77,25 @@ class BertEncoderBatchSpec extends AnyFunSuite {
     // batches hold at most one context window (nMaxTokens) of tokens; a
     // long stream of long docs still evaluates (one doc per batch minimum)
     val many = (1 to 100).map(i => (i.toLong, texts(4)))
-    val got = Ner.evalPartition(Some(loaded), many.iterator, truncate = true)
-      .toSeq
+    val tally = new Ner.Tally
+    val got = Ner.evalPartition(Some(loaded),
+      many.iterator.map { case (id, t) => (id, t, true) }, tally).toSeq
     assert(got.size == 100 && got.forall(_._2 != null))
+    val perDoc = toks(texts(4)).length
+    assert(tally.rows == 100 && tally.tokens == 100L * perDoc)
+    val perBatch = m.hparams.nMaxTokens / perDoc
+    assert(tally.encoderCalls == (100 + perBatch - 1) / perBatch)
+  }
+
+  test("the truncate flag is read per row") {
+    // over-limit documents allowed to truncate around a short one that is
+    // not: every row evaluates, and only the long ones count as truncated
+    val long = "a b c " * 200
+    val tally = new Ner.Tally
+    val got = Ner.evalPartition(Some(loaded),
+      Iterator((1L, long, true), (2L, texts(0), false), (3L, long, true)),
+      tally).toSeq
+    assert(got.map(_._1) == Seq(1L, 2L, 3L) && got.forall(_._2 != null))
+    assert(tally.rows == 3 && tally.truncated == 2)
   }
 }

@@ -105,4 +105,28 @@ class ModelFormatFuzzSpec extends AnyFunSuite {
     assert(allocated < (1L << 20),
       s"loading a ${bytes.length}-byte container allocated $allocated bytes")
   }
+
+  test("a header whose absent tensors would be zero-filled past the input's length is no model") {
+    // 41 bytes: hparams naming 2 layers of n_embd 1024 and n_intermediate
+    // 4096, one vocab entry, no tensors; building an encoder for it would
+    // zero-fill ~97 MiB of weights and transpose the linears
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    ModelFormat.writeHeader(out, NerHparams(1, 512, 1024, 4096, 16, 2, 0, 9),
+      Iterator.single("a".getBytes(StandardCharsets.UTF_8)))
+    out.close()
+    val bytes = bos.toByteArray
+    assert(bytes.length == 41)
+    val mx = ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    assert(ModelFormat.loadBytes(bytes).isEmpty) // warm up class loading
+    val before = mx.getThreadAllocatedBytes(tid)
+    // what the model cache does with a loaded container
+    val loaded = ModelFormat.loadBytes(bytes).map(new BertEncoder(_))
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(loaded.isEmpty)
+    assert(allocated < (1L << 20),
+      s"loading a ${bytes.length}-byte header allocated $allocated bytes")
+  }
 }

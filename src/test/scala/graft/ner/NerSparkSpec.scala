@@ -1,7 +1,10 @@
 package graft.ner
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLShuffleWriteMetricsReporter
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 import graft.SparkTestBase
 
@@ -9,7 +12,7 @@ import graft.SparkTestBase
   * (`test/sql/ner.test`, FIXTURES.md §1) plus the with-model behaviors the
   * reference left untested.
   */
-class NerSparkSpec extends SparkTestBase {
+class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def tmp(name: String): String =
     Files.createTempDirectory("graft-ner").resolve(name).toString
@@ -24,6 +27,36 @@ class NerSparkSpec extends SparkTestBase {
   }
 
   private def nerRows(sql: String): Seq[Row] = spark.sql(sql).collect().toSeq
+
+  /** The `NerEvalExec` operators `df` ran through (after running it, so an
+    * adaptive plan is final). */
+  private def nerExecs(df: DataFrame): Seq[NerEvalExec] = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case e: NerEvalExec => e }
+  }
+
+  /** `(id, text)` rows in exactly `parts` partitions, with no shuffle. */
+  private def docsIn(parts: Int, docs: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(docs, parts).toDF("id", "text")
+  }
+
+  private def entities(r: Row, i: Int): Seq[(String, String)] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Row](i).map(e => (e.getString(0), e.getString(1)))
+
+  private lazy val documents: Seq[(Long, String)] =
+    spark.read.parquet(s"${sf()}/documents.parquet").select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.take(60) ++
+      Seq((-1L, null: String), (-2L, ""))
+
+  /** The synthetic char-vocabulary model as a container file: every
+    * document tokenizes, and entities vary from row to row. */
+  private def syntheticModel(name: String): String = {
+    val p = tmp(name)
+    ModelFormat.write(SyntheticModel.loaded.model, p)
+    p
+  }
 
   test("stanza 1: calling ner before registration fails analysis") {
     val fresh = spark.newSession()
@@ -130,7 +163,7 @@ class NerSparkSpec extends SparkTestBase {
   test("a known tensor with the wrong size or dims is no model: [] for every row") {
     Ner.register(spark)
     val sql = "SELECT ner(t) AS e FROM VALUES ('duckdb is great'), ('new york'), " +
-      "(CAST(NULL AS STRING)) AS v(t)"
+      "(CAST(NULL AS STRING)) AS v(t) ORDER BY t NULLS LAST"
     val good = tmp("shaped.bin")
     TestModels.writeValid(good, classifierBias = TestModels.biasFor(5))
     setPath(good)
@@ -211,19 +244,15 @@ class NerSparkSpec extends SparkTestBase {
     TestModels.writeValid(p, classifierBias = TestModels.biasFor(5))
     Ner.registerBroadcast(spark, p)
     try {
-      val expr = spark.sql("SELECT ner('duckdb is great') AS e").queryExecution
-        .analyzed.expressions
-        .flatMap(_.collect { case e: NerExtractExpression => e }).head
-      // two tasks each deserialize their own copy of the bound expression
+      val exec = nerExecs(spark.sql("SELECT ner('duckdb is great') AS e")).head
+      // two tasks each deserialize their own copy of the operator
       val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
-      val copies = Seq.fill(2)(
-        ser.deserialize[NerExtractExpression](ser.serialize(expr)))
+      val copies = Seq.fill(2)(ser.deserialize[NerEvalExec](ser.serialize(exec)))
       val resolved = copies.map { c =>
-        c.initialize(0)
-        val out = c.eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        assert(out.numElements() == 3)
-        Ner.modelFor(c.source).get
+        val out = c.evalRows(0,
+          Iterator.single(org.apache.spark.sql.catalyst.InternalRow.empty)).toSeq
+        assert(out.size == 1 && out.head.getArray(0).numElements() == 3)
+        Ner.modelFor(c.call.source).get
       }
       assert(resolved(0) eq resolved(1))
     } finally Ner.register(spark)
@@ -235,5 +264,144 @@ class NerSparkSpec extends SparkTestBase {
     val plan = spark.sql("SELECT ner('DuckDB is great') AS e").queryExecution
       .optimizedPlan.toString
     assert(plan.contains("UDF") || plan.toLowerCase.contains("ner"))
+  }
+
+  test("ner() in a SELECT, a WHERE, an aggregate, Ner.ner and registerBroadcast plans as NerEvalExec") {
+    // neither an aggregate function's argument nor a grouping expression
+    // may hold ner(): it is not deterministic, so Spark rejects both, as
+    // for rand(); an aggregate reads it from a subquery instead
+    Ner.register(spark)
+    unsetPath()
+    docsIn(1, documents).createOrReplaceTempView("ner_docs")
+    def onlyViaExec(df: DataFrame): Unit = {
+      assert(nerExecs(df).nonEmpty, df.queryExecution.executedPlan.toString)
+      val left = df.queryExecution.optimizedPlan.collect {
+        case p if !p.isInstanceOf[NerEval] => p.expressions
+      }.flatten.filter(_.exists(_.isInstanceOf[NerExtractExpression]))
+      assert(left.isEmpty, s"ner() left outside NerEval: $left")
+    }
+    onlyViaExec(spark.sql("SELECT id, ner(text) AS e FROM ner_docs"))
+    onlyViaExec(spark.sql("SELECT id FROM ner_docs WHERE size(ner(text)) = 0"))
+    onlyViaExec(spark.sql("SELECT sum(size(e)) AS n FROM (SELECT ner(text) AS e FROM ner_docs)"))
+    onlyViaExec(spark.sql("SELECT ner(max(text)) AS e, count(*) FROM ner_docs"))
+    onlyViaExec(spark.sql("SELECT text, ner(text) AS e, count(*) FROM ner_docs GROUP BY text"))
+    onlyViaExec(spark.sql("SELECT id, ner(to_json(ner(text)), false) AS e FROM ner_docs"))
+    onlyViaExec(spark.table("ner_docs").select(col("id"), Ner.ner(col("text")).as("e")))
+    val p = tmp("bcast-plan.bin")
+    TestModels.writeValid(p, classifierBias = TestModels.biasFor(5))
+    Ner.registerBroadcast(spark, p)
+    try {
+      val df = spark.sql("SELECT id, ner(text) AS e FROM ner_docs WHERE id = 3")
+      onlyViaExec(df)
+      assert(df.collect().map(entities(_, 1)).forall(_.nonEmpty))
+    } finally Ner.register(spark)
+    // a WHERE on ner() and an aggregate over it give the per-row answers
+    assert(spark.sql("SELECT sum(size(e)) FROM (SELECT ner(text) AS e FROM ner_docs)")
+      .collect().head.getLong(0) == 0)
+    assert(spark.sql("SELECT count(*) FROM ner_docs WHERE size(ner(text)) = 0")
+      .collect().head.getLong(0) == documents.size)
+  }
+
+  test("SQL ner() equals Ner.evalWith row for row at 1, 2, P and 2P child partitions") {
+    Ner.register(spark)
+    setPath(syntheticModel("parity.bin"))
+    val model = Ner.currentModel()
+    assert(model.isDefined)
+    val want = documents.map { case (id, t) =>
+      val e = Ner.evalWith(model, t, truncate = true)
+      id -> (if (e == null) null else e.toSeq.map(x => (x.entity, x.label)))
+    }.toMap
+    assert(want.values.count(e => e != null && e.nonEmpty) > 10)
+    val cores = spark.sparkContext.defaultParallelism
+    for (parts <- Seq(1, 2, cores, 2 * cores)) {
+      val df = docsIn(parts, documents).select(col("id"), Ner.ner(col("text")).as("e"))
+      val got = df.collect().map(r => r.getLong(0) -> entities(r, 1)).toMap
+      assert(got == want, s"$parts child partitions")
+      assert(df.queryExecution.toRdd.getNumPartitions == math.max(parts, cores))
+    }
+    unsetPath()
+  }
+
+  test("a child with at least defaultParallelism partitions gets no extra shuffle") {
+    Ner.register(spark)
+    unsetPath()
+    val cores = spark.sparkContext.defaultParallelism
+    def shuffled(parts: Int): Long = {
+      val exec = nerExecs(docsIn(parts, documents)
+        .select(col("id"), Ner.ner(col("text")).as("e"))).head
+      exec.metrics(SQLShuffleWriteMetricsReporter.SHUFFLE_RECORDS_WRITTEN).value
+    }
+    assert(shuffled(1) == documents.size)
+    assert(shuffled(cores) == 0)
+    assert(shuffled(2 * cores) == 0)
+  }
+
+  test("the truncate flag is read per row: a boolean column of mixed values") {
+    Ner.register(spark)
+    val p = tmp("per-row-truncate.bin")
+    TestModels.writeValid(p, nMaxTokens = 12, weightGen = TestModels.seeded(11))
+    setPath(p)
+    val long = "new york duck is great bob the a spark data new york duck"
+    val rows = Seq((1L, long, Some(true)), (2L, "duck is great", Some(false)),
+      (3L, long, None), (4L, "new york", Some(true)), (5L, long, Some(true)))
+    import spark.implicits._
+    val df = spark.sparkContext.parallelize(rows, 2).toDF("id", "text", "tr")
+      .select(col("id"), Ner.ner(col("text"), col("tr")).as("e"))
+    val got = df.collect().map(r => r.getLong(0) -> entities(r, 1)).toMap
+    val model = Ner.currentModel()
+    rows.foreach { case (id, t, tr) =>
+      assert(got(id) == Ner.evalWith(model, t, tr.getOrElse(true)).toSeq
+        .map(x => (x.entity, x.label)), s"row $id")
+    }
+    val exec = nerExecs(df).head
+    assert(exec.metrics("truncatedDocs").value == 3)
+    // one over-limit row that may not truncate fails the statement
+    val e = intercept[Exception] {
+      spark.sparkContext.parallelize(rows :+ ((6L, long, Some(false))), 2)
+        .toDF("id", "text", "tr").select(Ner.ner(col("text"), col("tr"))).collect()
+    }
+    def chain(t: Throwable): List[String] =
+      if (t == null) Nil else Option(t.getMessage).toList ++ chain(t.getCause)
+    assert(chain(e).exists(_.contains(
+      "Input string exceeds model token limit and truncate=false")))
+    unsetPath()
+  }
+
+  test("NerEvalExec metrics: a bad model path counts every row as no-model") {
+    Ner.register(spark)
+    setPath("/tmp/no/such/model.bin")
+    val bad = nerExecs(docsIn(3, documents).select(Ner.ner(col("text")))).head
+    def value(e: NerEvalExec, k: String) = e.metrics(k).value
+    assert(value(bad, "rows") == documents.size)
+    assert(value(bad, "noModelRows") == documents.size)
+    assert(value(bad, "nullRows") == 1)
+    assert(value(bad, "encoderCalls") == 0 && value(bad, "tokens") == 0)
+    setPath(syntheticModel("metrics.bin"))
+    val good = nerExecs(docsIn(3, documents).select(Ner.ner(col("text")))).head
+    val model = Ner.currentModel().get
+    val tokens = documents.collect { case (_, t) if t != null =>
+      WordPiece.tokenize(model.model.vocab, t, model.model.hparams.nMaxTokens).length
+    }
+    assert(value(good, "rows") == documents.size)
+    assert(value(good, "noModelRows") == 0)
+    assert(value(good, "nullRows") == 1)
+    assert(value(good, "tokens") == tokens.sum)
+    assert(value(good, "truncatedDocs") ==
+      tokens.count(_ >= model.model.hparams.nMaxTokens))
+    assert(value(good, "encoderCalls") >= 1 && value(good, "encoderTime") > 0)
+    unsetPath()
+  }
+
+  test("ner() over a lambda variable fails analysis with a clear message") {
+    Ner.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT transform(array('duckdb is great'), x -> ner(x)) AS e")
+    }
+    assert(e.getMessage.contains("ner() cannot read a lambda variable"), e.getMessage)
+    // a call inside a lambda over an outer column still works
+    unsetPath()
+    val r = nerRows("SELECT transform(array(1, 2), x -> size(ner(t))) AS n " +
+      "FROM VALUES ('duckdb') AS v(t)")
+    assert(r.head.getSeq[Int](0) == Seq(0, 0))
   }
 }
