@@ -7,22 +7,24 @@ package graft.ner
   * build.sbt for all forked runs); otherwise the scalar versions. Chosen
   * once at class-init so the JIT devirtualizes the call sites.
   *
-  * The whole F32 path — [[matmulT]], [[gelu]] and [[softmaxScale]] — is
-  * bit-identical between the scalar and SIMD kernels, so an F32 model's
-  * logits do not depend on which kernel the JVM picked. The weight-native
-  * products [[matmulF16]] and [[matmulQ4]] still differ in the last ulps
-  * (their SIMD overrides accumulate lane-wise and reduce once). All three
-  * products take a block of `rows` activation rows (the encoder makes ONE
-  * call per weight matrix, so register tiles read each weight once per
-  * tile of rows), keep every output element's accumulation order
-  * independent of `rows` and of the tile it lands in, and take
-  * `b == null` as "no bias".
+  * The kernels have one product, [[matmulT]], and it agrees bit for bit
+  * between the scalar and SIMD kernels, as do [[gelu]] and [[softmaxScale]];
+  * so logits do not depend on which kernel the JVM picked. Every linear
+  * layer reaches [[matmulT]] through [[LinearWeight]], which first decodes
+  * a panel of weight rows from its stored form (F32, F16 or Q4_0) exactly
+  * into F32: an F16 or Q4_0 model's logits are those of the F32 encoder on
+  * its decoded weights.
   */
 private[graft] trait DotKernel {
+  /** Outputs per weight panel of a linear layer ([[LinearWeight.apply]]):
+    * the width of the SIMD kernel's register tile, so a full panel is one
+    * tile wide. */
+  def panel: Int
+
   /** A block of `rows` activation rows through a TRANSPOSED-weight linear:
-    * y(yo + r*out + o) = b(o) + sum_i x(xo + r*in + i) * wt(wo + i*ldw + o)
+    * y(yo + r*ldy + o) = b(bo + o) + sum_i x(xo + r*in + i) * wt(wo + i*ldw + o)
     * for r in [0, rows), o in [0, out) — activation rows are `in` apart,
-    * output rows `out` apart; `ldw` is the leading dimension of the
+    * output rows `ldy` apart; `ldw` is the leading dimension of the
     * [in x ldw] transposed panel, `wo` the panel offset (so attention can
     * address one head's block inside a full activation matrix with a
     * `rows = 1` call). A null `b` means no bias.
@@ -32,14 +34,17 @@ private[graft] trait DotKernel {
     * into broadcast-FMA accumulation with no reduction at all; the row
     * block lets one weight-vector load feed every row of a register tile.
     *
+    * A multi-row call may load a full vector of `wt` lanes past `out` when
+    * they lie inside `wt`, and computes but never stores those lanes.
+    *
     * Accumulation contract (every tile shape, every `rows`): each output
     * element is ONE fused multiply-add chain over ascending i, started at
     * its bias (or 0). So a `rows`-row call equals `rows` one-row calls bit
     * for bit, and the scalar and SIMD kernels agree bit for bit.
     */
   def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
-      y: Array[Float], yo: Int): Unit
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float], bo: Int,
+      y: Array[Float], yo: Int, ldy: Int): Unit
   /** In-place ggml_gelu (tanh approximation in sigmoid form) over
     * x[0, len), computed in f32 like ggml's `ggml_gelu_f32`. Both kernels
     * evaluate exp through [[ExpF]] in the same per-element op order, so
@@ -53,13 +58,13 @@ private[graft] trait DotKernel {
 
   /** Outputs [o0, out) of ONE activation row through [[matmulT]], each
     * one ascending-i fma chain from its bias: the scalar kernel's per-row
-    * body and the SIMD kernel's tail past its last full vector. */
+    * body and the SIMD kernel's one-row tail past its last full vector. */
   protected final def matmulTChains(x: Array[Float], xo: Int, in: Int,
       wt: Array[Float], wo: Int, ldw: Int, o0: Int, out: Int,
-      b: Array[Float], y: Array[Float], yo: Int): Unit = {
+      b: Array[Float], bo: Int, y: Array[Float], yo: Int): Unit = {
     var o = o0
     while (o < out) {
-      var acc = if (b != null) b(o) else 0f
+      var acc = if (b != null) b(bo + o) else 0f
       var i = 0
       while (i < in) {
         acc = Math.fma(x(xo + i), wt(wo + i * ldw + o), acc); i += 1
@@ -68,142 +73,103 @@ private[graft] trait DotKernel {
       o += 1
     }
   }
+}
 
-  /** acc0 + the halves [j0, in) of the F16 weight row at `rowOff` times
-    * x(xr + j), as one ascending-j fma chain: the scalar kernel's whole
-    * row and the SIMD kernel's `in % 16` tail. */
-  protected final def f16Chain(acc0: Float, x: Array[Float], xr: Int,
-      wh: Array[Short], rowOff: Int, j0: Int, in: Int): Float = {
-    val lut = F16Lut.table
-    var acc = acc0
-    var j = j0
-    while (j < in) {
-      acc = Math.fma(lut(wh(rowOff + j) & 0xffff), x(xr + j), acc)
-      j += 1
-    }
-    acc
-  }
+/** A linear layer's weight W `[out][in]`, row-major as stored (F32, raw
+  * F16 halves or raw ggml Q4_0 blocks), and the product y = x W^T + b over
+  * it. [[apply]] runs one panel of [[DotKernel.panel]] outputs at a time:
+  * [[pack]] decodes the panel's weight rows into an `[in][panel]` F32
+  * buffer, then ONE [[DotKernel.matmulT]] runs every activation row over
+  * it. Each weight is thus decoded once per call, and the panel stays in
+  * cache while the register tiles stream every row block over it (Goto &
+  * van de Geijn's packing). The decode is exact for every form — a half
+  * widens exactly, a Q4_0 weight d·(q−8) needs at most 15 significant
+  * bits — so every output is the F32 ascending-i fma chain from its bias
+  * over the decoded weights, whatever the form, kernel or row count.
+  * Weights stay in their stored form; nothing is re-laid-out at load.
+  */
+private[graft] sealed abstract class LinearWeight(val in: Int, val out: Int) {
+  /** Rows [o0, o0 + pw) of W decoded to F32 into `dst` as an `[in][ldp]`
+    * panel, dst(i*ldp + c) = W(o0 + c, i), written i-outer so each panel
+    * row is one contiguous run. */
+  def pack(o0: Int, pw: Int, dst: Array[Float], ldp: Int): Unit
 
-  /** A block of `rows` activation rows through a Q4_0-NATIVE linear
-    * (round-7 VERDICT #3 — the reference evaluates quantized weights in
-    * ggml rather than dequantizing the model to F32,
-    * `src/ner_model.cpp:194`):
-    * y(yo + r*out + o) = b(o) + sum_j w[o][j] * x(xo + r*in + j) for
-    * r in [0, rows), o in [0, out), where w is the AS-STORED row-major ggml
-    * Q4_0 weight (`in` must be a multiple of 32; per row, in/32 blocks of
-    * 18 bytes = f16 scale + 16 nibble bytes, low nibbles first;
-    * value = (q - 8) * d).
-    *
-    * Evaluation never materializes the F32 weight row: each block's 32
-    * products accumulate into a block partial that is then scaled once by
-    * the block's f16 scale — ggml's `vec_dot_q4_0` association, which is
-    * ALSO numerically kinder than the dequantized dot (the unscaled partial
-    * stays small). Memory traffic per output is 18 bytes per 32 weights vs
-    * 128 — the weight side of the matmul reads 7.1x less than F32, which is
-    * the whole point on weight-streaming (bert-base-class) models; the row
-    * block decodes each block once for all its rows. Row layout is the
-    * file's own, so the quantized path skips [[BertEncoder]]'s load-time
-    * transposition as well.
-    *
-    * Accumulation contract (every tile shape, every `rows`): per output
-    * element, the scalar kernel runs one chain over blocks (block partial
-    * in ascending j, then `acc += d * s`) started at the bias; the SIMD
-    * kernel accumulates lane-wise over blocks (block partial per lane, then
-    * one fma by the block scale) and adds the bias to ONE final
-    * `reduceLanes`. A `rows`-row call therefore equals `rows` one-row calls
-    * bit for bit. Scalar and SIMD are NOT bit-identical to each other (the
-    * lane-wise association differs in last ulps); the kernel is chosen once
-    * per JVM, batched-vs-single-doc evaluation stays bit-identical either
-    * way (Q4NativeSpec), and the model's oracle surface (q26) is rows-only
-    * by design.
-    */
-  def matmulQ4(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wq: Array[Byte], out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
-    val blocksPerRow = in / 32
-    var r = 0
-    while (r < rows) {
-      val xr = xo + r * in
-      val yr = yo + r * out
-      var o = 0
-      while (o < out) {
-        var acc = if (b != null) b(o) else 0f
-        val rowOff = o * blocksPerRow * 18
-        var blk = 0
-        while (blk < blocksPerRow) {
-          val off = rowOff + blk * 18
-          val d = ModelFormat.f16ToFloat(
-            ((wq(off + 1) & 0xff) << 8) | (wq(off) & 0xff))
-          val xb = xr + blk * 32
-          var s = 0f
-          var j = 0
-          while (j < 16) {
-            val q = wq(off + 2 + j) & 0xff
-            s += ((q & 0xf) - 8) * x(xb + j)
-            s += ((q >>> 4) - 8) * x(xb + 16 + j)
-            j += 1
-          }
-          acc += d * s
-          blk += 1
-        }
-        y(yr + o) = acc
-        o += 1
-      }
-      r += 1
-    }
-  }
-
-  /** A block of `rows` activation rows through an F16-NATIVE linear
-    * (round-8 VERDICT #4 — the symmetric completion of [[matmulQ4]]: the
-    * reference evaluates F16 weights in ggml without widening the model to
-    * F32, `src/ner_model.cpp:194`):
-    * y(yo + r*out + o) = b(o) + sum_j w[o][j] * x(xo + r*in + j) for
-    * r in [0, rows), o in [0, out), where `wh` is the AS-STORED row-major
-    * half-precision weight (raw IEEE 754 binary16 bit patterns in short
-    * lanes).
-    *
-    * Evaluation never materializes the F32 weight row: each half widens in
-    * a register (a table lookup here; a bit-shift + 2^112 exponent rescale
-    * in the SIMD override — exact for every finite half including
-    * subnormals and signed zeros, since a power-of-two multiply is exact)
-    * and feeds a fused MAC; the row block widens each half once for all
-    * its rows. Weight-side memory traffic is half of F32 — the other
-    * weight-streaming lever on bert-base-class models. Row layout is the
-    * file's own, so the F16 path skips [[BertEncoder]]'s load-time
-    * transposition as well.
-    *
-    * Accumulation contract (every tile shape, every `rows`): per output
-    * element, the scalar kernel runs one fma chain over ascending j started
-    * at the bias; the SIMD kernel accumulates lane-wise over the 16-half
-    * chunks, adds the bias to ONE `reduceLanes`, then runs the scalar fma
-    * chain over the `in % 16` tail. A `rows`-row call therefore equals
-    * `rows` one-row calls bit for bit. Like [[matmulQ4]], scalar and SIMD
-    * are NOT bit-identical to each other; additionally, half-precision
-    * Inf/NaN weight values decode to large FINITE floats under the SIMD
-    * rescale — real model weights never carry them, and the scalar path
-    * preserves them.
-    */
-  def matmulF16(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wh: Array[Short], out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      val xr = xo + r * in
-      val yr = yo + r * out
-      var o = 0
-      while (o < out) {
-        y(yr + o) = f16Chain(if (b != null) b(o) else 0f, x, xr, wh, o * in,
-          0, in)
-        o += 1
-      }
-      r += 1
+  /** y(r*out + o) = b(o) + sum_i x(r*in + i) * W(o, i) for r in [0, n), a
+    * null `b` meaning no bias; `buf` holds one panel (`in * kern.panel`
+    * floats). A narrow last panel is packed only as wide as it is; the
+    * SIMD tile computes the lanes past it but never stores them. */
+  final def apply(kern: DotKernel, x: Array[Float], n: Int, b: Array[Float],
+      y: Array[Float], buf: Array[Float]): Unit = {
+    val p = kern.panel
+    var o0 = 0
+    while (o0 < out) {
+      val pw = math.min(p, out - o0)
+      pack(o0, pw, buf, p)
+      kern.matmulT(x, 0, n, in, buf, 0, p, pw, b, o0, y, o0, out)
+      o0 += p
     }
   }
 }
 
-/** All 65536 half-precision values widened once (256 KB), shared by every
-  * kernel: the per-weight decode becomes one indexed load instead of the
-  * branchy [[ModelFormat.f16ToFloat]] bit walk. */
+private[graft] object LinearWeight {
+  /** Row-major F32: the pack is a transposing copy. */
+  final class F32(w: Array[Float], in: Int, out: Int) extends LinearWeight(in, out) {
+    def pack(o0: Int, pw: Int, dst: Array[Float], ldp: Int): Unit = {
+      var i = 0
+      while (i < in) {
+        val d = i * ldp
+        var c = 0
+        while (c < pw) { dst(d + c) = w((o0 + c) * in + i); c += 1 }
+        i += 1
+      }
+    }
+  }
+
+  /** Raw IEEE 754 binary16 bit patterns, widened through [[F16Lut]]
+    * (exact, Inf and NaN included). */
+  final class F16(raw: Array[Short], in: Int, out: Int) extends LinearWeight(in, out) {
+    def pack(o0: Int, pw: Int, dst: Array[Float], ldp: Int): Unit = {
+      val lut = F16Lut.table
+      var i = 0
+      while (i < in) {
+        val d = i * ldp
+        var c = 0
+        while (c < pw) { dst(d + c) = lut(raw((o0 + c) * in + i) & 0xffff); c += 1 }
+        i += 1
+      }
+    }
+  }
+
+  /** Raw ggml Q4_0 blocks with `in` a multiple of 32, so each row is whole
+    * blocks: 18 bytes per 32 weights, an f16 scale d, then 16 bytes whose
+    * low nibbles are weights 0-15 and high nibbles weights 16-31. A weight
+    * decodes as (q - 8) * d, exactly as [[ModelFormat.dequantQ4]]. */
+  final class Q4(raw: Array[Byte], in: Int, out: Int) extends LinearWeight(in, out) {
+    def pack(o0: Int, pw: Int, dst: Array[Float], ldp: Int): Unit = {
+      val lut = F16Lut.table
+      val rowBytes = in / 32 * 18
+      var i = 0
+      while (i < in) {
+        val d = i * ldp
+        val blk = (i >>> 5) * 18
+        val q = 2 + (i & 15)
+        val shift = if ((i & 16) == 0) 0 else 4
+        var c = 0
+        while (c < pw) {
+          val off = (o0 + c) * rowBytes + blk
+          val scale = lut(((raw(off + 1) & 0xff) << 8) | (raw(off) & 0xff))
+          dst(d + c) = (((raw(off + q) >>> shift) & 0xf) - 8) * scale
+          c += 1
+        }
+        i += 1
+      }
+    }
+  }
+}
+
+/** All 65536 half-precision values widened once (256 KB), shared by the
+  * F16 and Q4_0 pack decodes: the per-weight decode becomes one indexed
+  * load instead of the branchy [[ModelFormat.f16ToFloat]] bit walk. */
 private[graft] object F16Lut {
   val table: Array[Float] = Array.tabulate(65536)(ModelFormat.f16ToFloat)
 }
@@ -264,19 +230,20 @@ private[graft] object ExpF {
 }
 
 private[graft] object ScalarKernel extends DotKernel {
+  // any width gives the same bits; 16 floats is one cache line per panel row
+  override val panel: Int = 16
+
   // Math.fma matches the SIMD path's fused rounding (round-2 ADVICE: mixed
   // fused/unfused kernels gave environment-dependent last-ulp logits), and
-  // every F32 loop here runs in the order the SIMD kernel reproduces
-  // lane-wise, so the F32 path agrees with it bit for bit.
+  // every loop here runs in the order the SIMD kernel reproduces lane-wise,
+  // so the two kernels agree bit for bit.
   override def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
-      y: Array[Float], yo: Int): Unit = {
-    // per-output ascending-i fma chain — the exact order the SIMD tile path
-    // produces lane-wise, so the two kernels agree bitwise
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float], bo: Int,
+      y: Array[Float], yo: Int, ldy: Int): Unit = {
     var r = 0
     while (r < rows) {
-      matmulTChains(x, xo + r * in, in, wt, wo, ldw, 0, out, b, y,
-        yo + r * out)
+      matmulTChains(x, xo + r * in, in, wt, wo, ldw, 0, out, b, bo, y,
+        yo + r * ldy)
       r += 1
     }
   }
@@ -313,40 +280,61 @@ private[graft] object ScalarKernel extends DotKernel {
 
 private[graft] object SimdKernel extends DotKernel {
   import jdk.incubator.vector.{FloatVector, VectorOperators}
-  private val sp = FloatVector.SPECIES_PREFERRED
+  // read at every use, not cached in a field: a species read from an object
+  // field is no JIT constant, and the tile's vector stores then failed to
+  // intrinsify; the static final folds to one
+  private def sp = FloatVector.SPECIES_PREFERRED
+  override val panel: Int = 4 * sp.length
 
   // bias lanes at o, or zero when the product has no bias
   private def biasVec(b: Array[Float], o: Int): FloatVector =
     if (b != null) FloatVector.fromArray(sp, b, o) else FloatVector.zero(sp)
 
   override def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
-      y: Array[Float], yo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      val rb = math.min(4, rows - r)
-      if (rb == 1)
-        matmulT1(x, xo + r * in, in, wt, wo, ldw, out, b, y, yo + r * out)
-      else
-        matmulT4(x, xo + r * in, rb, in, wt, wo, ldw, out, b, y, yo + r * out)
-      r += rb
+      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float], bo: Int,
+      y: Array[Float], yo: Int, ldy: Int): Unit =
+    if (rows == 1) matmulT1(x, xo, in, wt, wo, ldw, out, b, bo, y, yo)
+    else {
+      val vl = sp.length
+      var o = 0
+      while (o + 4 * vl <= out) {
+        matmulT4x4(x, xo, rows, in, wt, wo + o, ldw, b, bo + o, y, yo + o, ldy)
+        o += 4 * vl
+      }
+      while (o < out) {
+        val lanes = math.min(vl, out - o)
+        // a full vector of weight lanes must lie inside wt: always true for
+        // a packed panel; otherwise the last columns run as one-row chains
+        if (wo + o + (in - 1) * ldw + vl <= wt.length)
+          matmulT4x1(x, xo, rows, in, wt, wo + o, ldw, lanes, b, bo + o, y,
+            yo + o, ldy)
+        else {
+          var r = 0
+          while (r < rows) {
+            matmulTChains(x, xo + r * in, in, wt, wo, ldw, o, o + lanes, b, bo,
+              y, yo + r * ldy)
+            r += 1
+          }
+        }
+        o += vl
+      }
     }
-  }
 
-  // one row: 4-vector output tile — the whole tile lives in registers
-  // across the i loop (one broadcast of x(i) feeds 4 FMAs on consecutive wt
-  // lanes), so nothing is re-loaded or reduced; each y element accumulates
-  // in ascending-i order, matching the scalar kernel bit-for-bit
+  // one row (attention): 4-vector output tile — the whole tile lives in
+  // registers across the i loop (one broadcast of x(i) feeds 4 FMAs on
+  // consecutive wt lanes), so nothing is re-loaded or reduced; each y
+  // element accumulates in ascending-i order, matching the scalar kernel
+  // bit-for-bit
   private def matmulT1(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
-      wo: Int, ldw: Int, out: Int, b: Array[Float], y: Array[Float],
+      wo: Int, ldw: Int, out: Int, b: Array[Float], bo: Int, y: Array[Float],
       yo: Int): Unit = {
     val vl = sp.length
     var o = 0
     while (o + 4 * vl <= out) {
-      var a0 = biasVec(b, o)
-      var a1 = biasVec(b, o + vl)
-      var a2 = biasVec(b, o + 2 * vl)
-      var a3 = biasVec(b, o + 3 * vl)
+      var a0 = biasVec(b, bo + o)
+      var a1 = biasVec(b, bo + o + vl)
+      var a2 = biasVec(b, bo + o + 2 * vl)
+      var a3 = biasVec(b, bo + o + 3 * vl)
       var i = 0
       while (i < in) {
         val xv = FloatVector.broadcast(sp, x(xo + i))
@@ -364,7 +352,7 @@ private[graft] object SimdKernel extends DotKernel {
       o += 4 * vl
     }
     while (o + vl <= out) {
-      var a0 = biasVec(b, o)
+      var a0 = biasVec(b, bo + o)
       var i = 0
       while (i < in) {
         a0 = FloatVector.fromArray(sp, wt, wo + i * ldw + o)
@@ -374,78 +362,116 @@ private[graft] object SimdKernel extends DotKernel {
       a0.intoArray(y, yo + o)
       o += vl
     }
-    matmulTChains(x, xo, in, wt, wo, ldw, o, out, b, y, yo)
+    matmulTChains(x, xo, in, wt, wo, ldw, o, out, b, bo, y, yo)
   }
 
-  // 2-4 rows: 4-row x 2-vector register tile — each weight-vector load
-  // feeds 4 FMAs (one per row) and 8 independent accumulators hide the FMA
-  // latency. A 2- or 3-row block runs the same tile with its missing rows
-  // aliased to the block's last row (computed, never stored). Each y
-  // element still accumulates in ascending-i order.
-  private def matmulT4(x: Array[Float], xo: Int, rb: Int, in: Int,
-      wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float],
-      y: Array[Float], yo: Int): Unit = {
+  // 4 rows x 4 vectors over output columns [0, 4*vl) of wt/b/y (the caller
+  // offsets them): per i, 4 weight-vector loads and 4 broadcasts feed 16
+  // independent FMAs into 16 accumulators. Row blocks walk all `rows`; a
+  // short last block aliases its missing rows to its last row (computed,
+  // never stored). Each y element accumulates in ascending-i order.
+  private def matmulT4x4(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, b: Array[Float], bo: Int,
+      y: Array[Float], yo: Int, ldy: Int): Unit = {
     val vl = sp.length
-    val x1 = xo + in
-    val x2 = xo + math.min(2, rb - 1) * in
-    val x3 = xo + math.min(3, rb - 1) * in
-    var o = 0
-    while (o + 2 * vl <= out) {
-      var a00 = biasVec(b, o)
-      var a01 = biasVec(b, o + vl)
-      var a10 = a00; var a11 = a01
-      var a20 = a00; var a21 = a01
-      var a30 = a00; var a31 = a01
+    var r = 0
+    while (r < rows) {
+      val rb = math.min(4, rows - r)
+      val x0 = xo + r * in
+      val x1 = x0 + math.min(1, rb - 1) * in
+      val x2 = x0 + math.min(2, rb - 1) * in
+      val x3 = x0 + math.min(3, rb - 1) * in
+      // bias lanes loaded per row block: an accumulator started from a
+      // vector that lives across the row loop stays boxed in the i loop
+      // (measured 30x slower)
+      val b0 = biasVec(b, bo)
+      val b1 = biasVec(b, bo + vl)
+      val b2 = biasVec(b, bo + 2 * vl)
+      val b3 = biasVec(b, bo + 3 * vl)
+      var a00 = b0; var a01 = b1; var a02 = b2; var a03 = b3
+      var a10 = b0; var a11 = b1; var a12 = b2; var a13 = b3
+      var a20 = b0; var a21 = b1; var a22 = b2; var a23 = b3
+      var a30 = b0; var a31 = b1; var a32 = b2; var a33 = b3
       var i = 0
       while (i < in) {
-        val w = wo + i * ldw + o
+        val w = wo + i * ldw
         val w0 = FloatVector.fromArray(sp, wt, w)
         val w1 = FloatVector.fromArray(sp, wt, w + vl)
-        val xv0 = FloatVector.broadcast(sp, x(xo + i))
+        val w2 = FloatVector.fromArray(sp, wt, w + 2 * vl)
+        val w3 = FloatVector.fromArray(sp, wt, w + 3 * vl)
+        val xv0 = FloatVector.broadcast(sp, x(x0 + i))
         a00 = w0.fma(xv0, a00); a01 = w1.fma(xv0, a01)
+        a02 = w2.fma(xv0, a02); a03 = w3.fma(xv0, a03)
         val xv1 = FloatVector.broadcast(sp, x(x1 + i))
         a10 = w0.fma(xv1, a10); a11 = w1.fma(xv1, a11)
+        a12 = w2.fma(xv1, a12); a13 = w3.fma(xv1, a13)
         val xv2 = FloatVector.broadcast(sp, x(x2 + i))
         a20 = w0.fma(xv2, a20); a21 = w1.fma(xv2, a21)
+        a22 = w2.fma(xv2, a22); a23 = w3.fma(xv2, a23)
         val xv3 = FloatVector.broadcast(sp, x(x3 + i))
         a30 = w0.fma(xv3, a30); a31 = w1.fma(xv3, a31)
+        a32 = w2.fma(xv3, a32); a33 = w3.fma(xv3, a33)
         i += 1
       }
-      a00.intoArray(y, yo + o); a01.intoArray(y, yo + o + vl)
-      a10.intoArray(y, yo + out + o); a11.intoArray(y, yo + out + o + vl)
+      val y0 = yo + r * ldy
+      a00.intoArray(y, y0); a01.intoArray(y, y0 + vl)
+      a02.intoArray(y, y0 + 2 * vl); a03.intoArray(y, y0 + 3 * vl)
+      if (rb > 1) {
+        val y1 = y0 + ldy
+        a10.intoArray(y, y1); a11.intoArray(y, y1 + vl)
+        a12.intoArray(y, y1 + 2 * vl); a13.intoArray(y, y1 + 3 * vl)
+      }
       if (rb > 2) {
-        a20.intoArray(y, yo + 2 * out + o)
-        a21.intoArray(y, yo + 2 * out + o + vl)
+        val y2 = y0 + 2 * ldy
+        a20.intoArray(y, y2); a21.intoArray(y, y2 + vl)
+        a22.intoArray(y, y2 + 2 * vl); a23.intoArray(y, y2 + 3 * vl)
       }
       if (rb > 3) {
-        a30.intoArray(y, yo + 3 * out + o)
-        a31.intoArray(y, yo + 3 * out + o + vl)
+        val y3 = y0 + 3 * ldy
+        a30.intoArray(y, y3); a31.intoArray(y, y3 + vl)
+        a32.intoArray(y, y3 + 2 * vl); a33.intoArray(y, y3 + 3 * vl)
       }
-      o += 2 * vl
+      r += rb
     }
-    if (o + vl <= out) {
-      var a0 = biasVec(b, o)
-      var a1 = a0; var a2 = a0; var a3 = a0
+  }
+
+  // 4 rows x 1 vector over output columns [0, lanes) of wt/b/y, lanes <=
+  // vl: the columns past the last 4-vector tile (a narrow panel's, e.g.
+  // the classifier's). Weight lanes past `lanes` read whatever wt holds
+  // there (the caller checked they lie inside it) and are computed but
+  // never stored: bias lanes load from a zero-padded copy and results go
+  // out through a one-vector staging array. Row blocks as in matmulT4x4.
+  private def matmulT4x1(x: Array[Float], xo: Int, rows: Int, in: Int,
+      wt: Array[Float], wo: Int, ldw: Int, lanes: Int, b: Array[Float],
+      bo: Int, y: Array[Float], yo: Int, ldy: Int): Unit = {
+    val vl = sp.length
+    val bp = new Array[Float](vl)
+    if (b != null) System.arraycopy(b, bo, bp, 0, lanes)
+    val t = new Array[Float](vl)
+    var r = 0
+    while (r < rows) {
+      val rb = math.min(4, rows - r)
+      val x0 = xo + r * in
+      val x1 = x0 + math.min(1, rb - 1) * in
+      val x2 = x0 + math.min(2, rb - 1) * in
+      val x3 = x0 + math.min(3, rb - 1) * in
+      val bv = FloatVector.fromArray(sp, bp, 0)
+      var a0 = bv; var a1 = bv; var a2 = bv; var a3 = bv
       var i = 0
       while (i < in) {
-        val w0 = FloatVector.fromArray(sp, wt, wo + i * ldw + o)
-        a0 = w0.fma(FloatVector.broadcast(sp, x(xo + i)), a0)
+        val w0 = FloatVector.fromArray(sp, wt, wo + i * ldw)
+        a0 = w0.fma(FloatVector.broadcast(sp, x(x0 + i)), a0)
         a1 = w0.fma(FloatVector.broadcast(sp, x(x1 + i)), a1)
         a2 = w0.fma(FloatVector.broadcast(sp, x(x2 + i)), a2)
         a3 = w0.fma(FloatVector.broadcast(sp, x(x3 + i)), a3)
         i += 1
       }
-      a0.intoArray(y, yo + o)
-      a1.intoArray(y, yo + out + o)
-      if (rb > 2) a2.intoArray(y, yo + 2 * out + o)
-      if (rb > 3) a3.intoArray(y, yo + 3 * out + o)
-      o += vl
-    }
-    var r = 0
-    while (r < rb) {
-      matmulTChains(x, xo + r * in, in, wt, wo, ldw, o, out, b, y,
-        yo + r * out)
-      r += 1
+      val y0 = yo + r * ldy
+      a0.intoArray(t, 0); System.arraycopy(t, 0, y, y0, lanes)
+      if (rb > 1) { a1.intoArray(t, 0); System.arraycopy(t, 0, y, y0 + ldy, lanes) }
+      if (rb > 2) { a2.intoArray(t, 0); System.arraycopy(t, 0, y, y0 + 2 * ldy, lanes) }
+      if (rb > 3) { a3.intoArray(t, 0); System.arraycopy(t, 0, y, y0 + 3 * ldy, lanes) }
+      r += rb
     }
   }
 
@@ -540,193 +566,6 @@ private[graft] object SimdKernel extends DotKernel {
       i += sp.length
     }
     while (i < len) { x(i) *= inv; i += 1 }
-  }
-
-  // --- Q4_0-native matmul: in-register nibble decode (round-7 VERDICT #3).
-  // The float math MUST run on the SAME species as every other kernel
-  // (SPECIES_PREFERRED): an earlier fixed-SPECIES_256 version made
-  // Float256Vector and Float512Vector hot simultaneously on AVX-512
-  // machines, which polluted the shared FloatVector template call-site
-  // profiles badly enough that C2 recompiled matmulT/gelu WITHOUT vector
-  // intrinsics — the whole F32 encoder ran 5-10x slower via the Java
-  // fallback (lanewiseTemplate/stOp frames in stack samples) for the rest
-  // of the JVM's life. One block's 16 nibble bytes stay a Byte128 vector
-  // (no float-side profile impact: matmulT never touches ByteVector);
-  // they widen B2F into 16/sp.length float parts per nibble half.
-  private val b128 = jdk.incubator.vector.ByteVector.SPECIES_128
-  // preferred species, capped at 16 lanes (one nibble half) — equals sp on
-  // every real machine (max 512-bit = 16 float lanes today)
-  private val qsp =
-    if (sp.length >= 16) FloatVector.SPECIES_512 else sp
-  private val qParts = 16 / qsp.length
-  private val vEight = jdk.incubator.vector.ByteVector.broadcast(b128, 8.toByte)
-  private val vNibble = jdk.incubator.vector.ByteVector.broadcast(b128, 0x0f.toByte)
-  // shared half->float table ([[F16Lut]]): the per-block scale decode
-  // becomes a single indexed load instead of the branchy f16ToFloat bit
-  // walk — one lookup per 32 MACs
-  private val f16Table: Array[Float] = F16Lut.table
-
-  override def matmulQ4(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wq: Array[Byte], out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      val rb = math.min(4, rows - r)
-      matmulQ4x4(x, xo + r * in, rb, in, wq, out, b, y, yo + r * out)
-      r += rb
-    }
-  }
-
-  // 1-4 rows: each block is decoded once and FMA'd into one block partial
-  // per row; per row that is the contract's order (block partial per lane,
-  // one fma by the block scale, one final reduce). A block of fewer than 4
-  // rows aliases its missing rows to its last row (computed, never stored).
-  private def matmulQ4x4(x: Array[Float], xo: Int, rb: Int, in: Int,
-      wq: Array[Byte], out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
-    val blocksPerRow = in / 32
-    val x1 = xo + math.min(1, rb - 1) * in
-    val x2 = xo + math.min(2, rb - 1) * in
-    val x3 = xo + math.min(3, rb - 1) * in
-    var o = 0
-    while (o < out) {
-      val rowOff = o * blocksPerRow * 18
-      var v0 = FloatVector.zero(qsp)
-      var v1 = v0; var v2 = v0; var v3 = v0
-      var blk = 0
-      while (blk < blocksPerRow) {
-        val off = rowOff + blk * 18
-        val d = f16Table(((wq(off + 1) & 0xff) << 8) | (wq(off) & 0xff))
-        val bv = jdk.incubator.vector.ByteVector.fromArray(b128, wq, off + 2)
-        val lo = bv.and(vNibble).sub(vEight)
-        val hi = bv.lanewise(VectorOperators.LSHR, 4).sub(vEight)
-        val xb = blk * 32
-        var t0 = FloatVector.zero(qsp)
-        var t1 = t0; var t2 = t0; var t3 = t0
-        var p = 0
-        while (p < qParts) {
-          val wlo = lo.convertShape(VectorOperators.B2F, qsp, p)
-            .asInstanceOf[FloatVector]
-          val whi = hi.convertShape(VectorOperators.B2F, qsp, p)
-            .asInstanceOf[FloatVector]
-          val jl = xb + p * qsp.length
-          val jh = jl + 16
-          t0 = wlo.fma(FloatVector.fromArray(qsp, x, xo + jl), t0)
-          t0 = whi.fma(FloatVector.fromArray(qsp, x, xo + jh), t0)
-          t1 = wlo.fma(FloatVector.fromArray(qsp, x, x1 + jl), t1)
-          t1 = whi.fma(FloatVector.fromArray(qsp, x, x1 + jh), t1)
-          t2 = wlo.fma(FloatVector.fromArray(qsp, x, x2 + jl), t2)
-          t2 = whi.fma(FloatVector.fromArray(qsp, x, x2 + jh), t2)
-          t3 = wlo.fma(FloatVector.fromArray(qsp, x, x3 + jl), t3)
-          t3 = whi.fma(FloatVector.fromArray(qsp, x, x3 + jh), t3)
-          p += 1
-        }
-        val dv = FloatVector.broadcast(qsp, d)
-        v0 = t0.fma(dv, v0)
-        v1 = t1.fma(dv, v1)
-        v2 = t2.fma(dv, v2)
-        v3 = t3.fma(dv, v3)
-        blk += 1
-      }
-      val bo = if (b != null) b(o) else 0f
-      y(yo + o) = bo + v0.reduceLanes(VectorOperators.ADD)
-      if (rb > 1) y(yo + out + o) = bo + v1.reduceLanes(VectorOperators.ADD)
-      if (rb > 2) y(yo + 2 * out + o) = bo + v2.reduceLanes(VectorOperators.ADD)
-      if (rb > 3) y(yo + 3 * out + o) = bo + v3.reduceLanes(VectorOperators.ADD)
-      o += 1
-    }
-  }
-
-  // --- F16-native matmul (round-8 VERDICT #4): 16 raw halves load as one
-  // Short256 vector (fixed short-side species, like matmulQ4's Byte128 —
-  // no float-side profile impact, the single-FloatVector-species rule
-  // holds) and widen in-register per qsp part: zero-extend S2I, then
-  // f32bits = (sign << 16) | (expmant << 13), reinterpret, and ONE multiply
-  // by 2^112 rebiases the exponent (15 -> 127). Exact for all finite
-  // halves INCLUDING subnormals (a subnormal half becomes an exact tiny
-  // f32 which the power-of-two multiply scales exactly); half Inf/NaN
-  // would decode finite, which real weights never contain (scaladoc'd on
-  // the trait method).
-  private val s256 = jdk.incubator.vector.ShortVector.SPECIES_256
-  private val iqsp = qsp.withLanes(java.lang.Integer.TYPE)
-  private val vF16Sign =
-    jdk.incubator.vector.IntVector.broadcast(iqsp, 0x8000)
-  private val vF16Mag =
-    jdk.incubator.vector.IntVector.broadcast(iqsp, 0x7fff)
-  // 2^112 = intBits 0x77800000 (exponent 239 = 112 + 127, zero mantissa)
-  private val vF16Scale =
-    FloatVector.broadcast(qsp, java.lang.Float.intBitsToFloat(0x77800000))
-
-  override def matmulF16(x: Array[Float], xo: Int, rows: Int, in: Int,
-      wh: Array[Short], out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
-    var r = 0
-    while (r < rows) {
-      val rb = math.min(4, rows - r)
-      matmulF16x4(x, xo + r * in, rb, in, wh, out, b, y, yo + r * out)
-      r += rb
-    }
-  }
-
-  // part p (qsp lanes) of 16 raw halves, widened to floats
-  private def widenF16(hv: jdk.incubator.vector.ShortVector,
-      p: Int): FloatVector = {
-    // signed S2I, not ZERO_EXTEND_S2I: this JDK's zero-extend convertShape
-    // throws ("cannot be represented in ETYPE int") on the 256->512
-    // expansion slow path; the sign bits the widening drags in are cleared
-    // by the two masks below anyway
-    val iv = hv.convertShape(VectorOperators.S2I, iqsp, p)
-      .asInstanceOf[jdk.incubator.vector.IntVector]
-    iv.and(vF16Sign).lanewise(VectorOperators.LSHL, 16)
-      .or(iv.and(vF16Mag).lanewise(VectorOperators.LSHL, 13))
-      .viewAsFloatingLanes().asInstanceOf[FloatVector]
-      .mul(vF16Scale)
-  }
-
-  // 1-4 rows: each 16-half chunk is widened once and FMA'd into one
-  // lane-wise accumulator per row; per row that is one lane-wise chain over
-  // the chunks, one reduce, then the scalar fma chain over the in % 16
-  // tail. A block of fewer than 4 rows aliases its missing rows to its last
-  // row (computed, never stored).
-  private def matmulF16x4(x: Array[Float], xo: Int, rb: Int, in: Int,
-      wh: Array[Short], out: Int, b: Array[Float], y: Array[Float],
-      yo: Int): Unit = {
-    val nv = in & ~15
-    val x1 = xo + math.min(1, rb - 1) * in
-    val x2 = xo + math.min(2, rb - 1) * in
-    val x3 = xo + math.min(3, rb - 1) * in
-    var o = 0
-    while (o < out) {
-      val rowOff = o * in
-      var v0 = FloatVector.zero(qsp)
-      var v1 = v0; var v2 = v0; var v3 = v0
-      var j = 0
-      while (j < nv) {
-        val hv = jdk.incubator.vector.ShortVector.fromArray(s256, wh,
-          rowOff + j)
-        var p = 0
-        while (p < qParts) {
-          val f = widenF16(hv, p)
-          val jp = j + p * qsp.length
-          v0 = f.fma(FloatVector.fromArray(qsp, x, xo + jp), v0)
-          v1 = f.fma(FloatVector.fromArray(qsp, x, x1 + jp), v1)
-          v2 = f.fma(FloatVector.fromArray(qsp, x, x2 + jp), v2)
-          v3 = f.fma(FloatVector.fromArray(qsp, x, x3 + jp), v3)
-          p += 1
-        }
-        j += 16
-      }
-      val bo = if (b != null) b(o) else 0f
-      y(yo + o) = f16Chain(bo + v0.reduceLanes(VectorOperators.ADD),
-        x, xo, wh, rowOff, nv, in)
-      if (rb > 1) y(yo + out + o) = f16Chain(
-        bo + v1.reduceLanes(VectorOperators.ADD), x, x1, wh, rowOff, nv, in)
-      if (rb > 2) y(yo + 2 * out + o) = f16Chain(
-        bo + v2.reduceLanes(VectorOperators.ADD), x, x2, wh, rowOff, nv, in)
-      if (rb > 3) y(yo + 3 * out + o) = f16Chain(
-        bo + v3.reduceLanes(VectorOperators.ADD), x, x3, wh, rowOff, nv, in)
-      o += 1
-    }
   }
 }
 

@@ -15,7 +15,7 @@ import scala.util.Random
   * recommended model class (`dslim/bert-base-NER`, ~110 M params —
   * reference TEST.md:26), where a layer's weight panels (~28 MB) can NEVER
   * be cache-resident and every matmul STREAMS weights from DRAM — the
-  * regime the F16/Q4 kernels exist for. The benchmark's `ner_sql_base`
+  * regime the compact F16/Q4 forms exist for. The benchmark's `ner_sql_base`
   * workload (`perfbench/README.md`) runs its F16 twin end to end.
   */
 object SyntheticModel {
@@ -71,7 +71,7 @@ object SyntheticModel {
   }
 
   /** A twin of `base` whose linear weights are re-encoded by `narrow`, so
-    * the encoder takes that form's native matmul path end-to-end. Entities
+    * the encoder decodes that form panel by panel end-to-end. Entities
     * can differ slightly from the F32 model's (narrowing moves logits) —
     * fine: these variants exist for kernel exercise and profiling; the
     * oracle-facing output stays pinned to the F32 model.
@@ -84,7 +84,7 @@ object SyntheticModel {
   private def withEncoder(model: NerModel): Ner.Loaded =
     Ner.Loaded(model, new BertEncoder(model))
 
-  /** Raw IEEE 754 halves, evaluated by [[DotKernel.matmulF16]] (round-8
+  /** Raw IEEE 754 halves, evaluated through [[LinearWeight.F16]] (round-8
     * VERDICT #4). */
   private def toF16(t: NerTensor): NerTensor =
     NerTensor(t.dims, null, f16raw = t.data.map(v => ModelFormat.floatToF16(v).toShort))
@@ -93,7 +93,7 @@ object SyntheticModel {
   lazy val loaded: Ner.Loaded = withEncoder(buildModel(Hparams))
 
   /** Q4_0 twin of [[loaded]]: linear weights re-quantized to raw ggml
-    * blocks for [[DotKernel.matmulQ4]] (all shapes here are
+    * blocks for [[LinearWeight.Q4]] (all shapes here are
     * %32-compatible: embd 64, intermediate 256) — the profile counterpart
     * for the F32 session (numbers in BASELINE.md).
     */

@@ -76,8 +76,8 @@ object NerQueries {
   private val withModel = withModelOf(() => graft.ner.SyntheticModel.loaded) _
 
   /** q205: [[withModelOf]] against the Q4_0-QUANTIZED twin of the synthetic
-    * model — the quantized-native row-block matmul path
-    * ([[graft.ner.DotKernel.matmulQ4]], round-7 VERDICT #3) exercised
+    * model — the Q4_0 panel decode
+    * ([[graft.ner.LinearWeight.Q4]], round-7 VERDICT #3) exercised
     * end-to-end under Spark parallelism. Its bench time against q26's is
     * the in-situ F32-vs-Q4 throughput readout for a cache-resident model
     * (BASELINE.md records the single-thread story; the weight-streaming
@@ -87,8 +87,8 @@ object NerQueries {
     withModelOf(() => graft.ner.SyntheticModel.loadedQ4) _
 
   /** q208: [[withModelOf]] against the F16 twin of the synthetic model —
-    * the half-native row-block matmul path
-    * ([[graft.ner.DotKernel.matmulF16]], round-8 VERDICT #4) exercised
+    * the F16 panel decode
+    * ([[graft.ner.LinearWeight.F16]], round-8 VERDICT #4) exercised
     * end-to-end under Spark parallelism.
     * q26/q208/q205 bench times together form the F32/F16/Q4
     * weight-precision profile for a cache-resident model (BASELINE.md; the

@@ -35,6 +35,20 @@ class BertEncoderBatchSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"(split, doc) pairs that diverge: $bad")
   }
 
+  test("F32 logits keep their pinned bits (SHA-256 over TileStraddlingDocs)") {
+    // The F32 path is one ascending-i fma chain per output on every kernel,
+    // so one constant holds with and without jdk.incubator.vector; a kernel
+    // or encoder change that moves an F32 logit bit fails here.
+    val logits = enc.evalBatch(TestModels.TileStraddlingDocs)
+    val buf = java.nio.ByteBuffer.allocate(4 * logits.map(_.length).sum)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    logits.foreach(_.foreach(v => buf.putInt(java.lang.Float.floatToRawIntBits(v))))
+    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(buf.array())
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(sha == "b7f27d76d28c82a8059ee40b633bd1181d48d3a7eaebe6ef7266a88170902957",
+      s"F32 logits hash $sha on ${Kernels.best.getClass.getSimpleName}")
+  }
+
   test("evalPartition preserves order, null rows, and row results") {
     val rows = Seq[(Long, String)](
       (1L, texts(0)), (2L, null), (3L, texts(3)), (4L, texts(2)),

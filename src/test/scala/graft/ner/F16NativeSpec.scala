@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the F16-native inference path (round-8 VERDICT #4 — the symmetric
   * completion of the Q4_0 path): a model whose linear weights ship as raw
-  * IEEE 754 halves must evaluate WITHOUT the load-time F32 widening
-  * ([[DotKernel.matmulF16]] consumes the raw shorts), and its logits must
-  * match the F32 reference path running the SAME effective weights
-  * (float→half→float round-trip) within an accumulation-order tolerance.
+  * IEEE 754 halves must evaluate WITHOUT a load-time F32 widening
+  * ([[LinearWeight.F16]] decodes one weight panel at a time from the raw
+  * shorts), and its logits must equal, bit for bit, those of the F32
+  * reference path running the SAME effective weights (float→half→float
+  * round-trip).
   */
 class F16NativeSpec extends AnyFunSuite {
 
@@ -48,33 +49,29 @@ class F16NativeSpec extends AnyFunSuite {
     assert(!m.tensors("classifier.bias").isF16)
   }
 
-  test("SIMD in-register widening agrees with f16ToFloat on every half") {
-    // the bit-shift + 2^112 rescale must reproduce the scalar decode for
-    // every finite half INCLUDING subnormals; exercise it through the
-    // kernel with a full 16-half row (in = 16 — anything shorter falls to
-    // the scalar tail and would test only the lookup table) and a unit
-    // activation selecting the half under test. A -0 weight necessarily
-    // surfaces as +0 after the lane reduce (-0 + +0 = +0 in IEEE), which is
-    // value-identical in any sum — compared with == there, bitwise
-    // everywhere else.
-    Kernels.all.foreach { kern =>
-      val x = new Array[Float](16); x(0) = 1f
-      val row = new Array[Short](16)
-      val y = new Array[Float](1)
-      var h = 0
-      while (h < 0x10000) {
-        val exp = (h >>> 10) & 0x1f
-        if (exp != 0x1f) { // finite halves only (Inf/NaN scaladoc'd apart)
-          row(0) = h.toShort
-          kern.matmulF16(x, 0, 1, 16, row, 1, null, y, 0)
-          val want = ModelFormat.f16ToFloat(h)
-          assert((want == 0f && y(0) == 0f) ||
-            java.lang.Float.floatToIntBits(y(0)) ==
-              java.lang.Float.floatToIntBits(want),
-            f"half 0x$h%04x: kernel ${y(0)} vs f16ToFloat $want")
+  test("pack decode agrees with f16ToFloat on every half") {
+    // every one of the 65536 halves (subnormals, signed zeros, Inf and NaN
+    // included) in a weight whose rows fill whole panels of every kernel
+    // plus a narrow tail panel: each packed float must carry f16ToFloat's
+    // exact bits at its transposed position
+    val in = 16
+    val out = 65536 / in + 9
+    val raw = Array.tabulate(out * in)(k => (k & 0xffff).toShort)
+    val w = new LinearWeight.F16(raw, in, out)
+    Kernels.all.map(_.panel).distinct.foreach { p =>
+      val buf = new Array[Float](in * p)
+      val bad = scala.collection.mutable.ArrayBuffer.empty[Int]
+      for (o0 <- 0 until out by p) {
+        val pw = math.min(p, out - o0)
+        w.pack(o0, pw, buf, p)
+        for (c <- 0 until pw; i <- 0 until in) {
+          val h = raw((o0 + c) * in + i) & 0xffff
+          if (java.lang.Float.floatToRawIntBits(buf(i * p + c)) !=
+              java.lang.Float.floatToRawIntBits(ModelFormat.f16ToFloat(h))) bad += h
         }
-        h += 1
       }
+      assert(bad.isEmpty, s"panel $p: ${bad.size} halves decode differently, first " +
+        bad.take(5).map(h => f"0x$h%04x").mkString(", "))
     }
   }
 
@@ -90,26 +87,13 @@ class F16NativeSpec extends AnyFunSuite {
       Array(1, 13, 14, 2))
     val lh = eh.evalBatch(docs)
     val lf = ef.evalBatch(docs)
-    var maxDelta = 0f
     docs.indices.foreach { d =>
-      assert(lh(d).length == lf(d).length)
-      lh(d).indices.foreach { i =>
-        val delta = math.abs(lh(d)(i) - lf(d)(i))
-        maxDelta = math.max(maxDelta, delta)
-        // identical effective weights, different accumulation association
-        // (row-major lane accumulate + reduce vs transposed FMA chain):
-        // deltas are float-rounding scale
-        assert(delta <= 2e-3f,
-          s"doc $d logit $i: f16=${lh(d)(i)} f32=${lf(d)(i)}")
-      }
-      val nLab = 9
-      (0 until lh(d).length / nLab).foreach { t =>
-        def argmax(a: Array[Float]): Int =
-          (0 until nLab).maxBy(l => a(t * nLab + l))
-        assert(argmax(lh(d)) == argmax(lf(d)), s"doc $d token $t argmax")
-      }
+      // identical effective weights and every linear the same fma chain
+      // over them: the logits carry the same bits
+      assert(lh(d).map(java.lang.Float.floatToRawIntBits).sameElements(
+        lf(d).map(java.lang.Float.floatToRawIntBits)),
+        s"doc $d: f16=${lh(d).mkString(",")} f32=${lf(d).mkString(",")}")
     }
-    info(f"max logit delta F16-native vs F32-effective: $maxDelta%.2e")
   }
 
   test("batched and single-doc F16 evaluation agree bit-identically") {

@@ -103,43 +103,6 @@ class KernelPropertiesSpec extends AnyFunSuite {
     assert(ExpF.expf(0f) == 1f)
   }
 
-  test("matmulQ4: every kernel matches the dequantized-F32 definition") {
-    // property: for random Q4_0 weights and activations, each kernel's
-    // quantized-native output equals the plain dot of the DEQUANTIZED
-    // weights within accumulation-order tolerance — scalar and SIMD decode
-    // the same blocks, so a nibble/scale/lane bug shows up as a gross
-    // mismatch, not a rounding one
-    val genCase = for {
-      blocks <- Gen.choose(1, 4)
-      out <- Gen.choose(1, 7)
-      seed <- Gen.choose(0L, Long.MaxValue)
-    } yield (blocks, out, seed)
-    holds("matmulQ4 vs dequantized reference")(Prop.forAll(genCase) {
-      case (blocks, out, seed) =>
-        val in = blocks * 32
-        val r = new scala.util.Random(seed)
-        val w = Array.fill(out * in)((r.nextFloat() - 0.5f) * 0.4f)
-        val wq = ModelFormat.quantizeQ4(w)
-        val eff = ModelFormat.dequantQ4(wq, w.length)
-        val x = Array.fill(in)((r.nextFloat() - 0.5f) * 2f)
-        val b = Array.fill(out)((r.nextFloat() - 0.5f))
-        val expect = Array.tabulate(out) { o =>
-          var acc = b(o).toDouble
-          var i = 0
-          while (i < in) { acc += eff(o * in + i).toDouble * x(i); i += 1 }
-          acc
-        }
-        Kernels.all.forall { k =>
-          val y = new Array[Float](out)
-          k.matmulQ4(x, 0, 1, in, wq, out, b, y, 0)
-          (0 until out).forall { o =>
-            val tol = 1e-4 * math.max(1.0, math.abs(expect(o)))
-            math.abs(y(o) - expect(o)) <= tol
-          }
-        }
-    })
-  }
-
   // float lanes of the SIMD kernel (8 stands in when only scalar runs)
   private val lanes =
     if (Kernels.all.size > 1) jdk.incubator.vector.FloatVector.SPECIES_PREFERRED.length
@@ -147,14 +110,73 @@ class KernelPropertiesSpec extends AnyFunSuite {
   private def bits(a: Array[Float]): Seq[Int] =
     a.toSeq.map(java.lang.Float.floatToRawIntBits)
 
+  /** A seeded random `[out][in]` weight stored as `form` (F32, F16 or
+    * Q4_0), with the F32 values it decodes to. */
+  private def weightIn(form: String, in: Int, out: Int,
+      r: scala.util.Random): (LinearWeight, Array[Float]) = {
+    val w = Array.fill(out * in)(r.nextGaussian().toFloat * 0.1f)
+    form match {
+      case "F32" => (new LinearWeight.F32(w, in, out), w)
+      case "F16" =>
+        val h = w.map(v => ModelFormat.floatToF16(v).toShort)
+        (new LinearWeight.F16(h, in, out), ModelFormat.widenF16(h))
+      case _ =>
+        val q = ModelFormat.quantizeQ4(w)
+        (new LinearWeight.Q4(q, in, out), ModelFormat.dequantQ4(q, w.length))
+    }
+  }
+
+  /** The product's definition: y(r*out + o) is ONE fma chain over
+    * ascending i of x(r*in + i) * eff(o*in + i), started at b(o) (or 0). */
+  private def fmaChains(x: Array[Float], rows: Int, in: Int,
+      eff: Array[Float], out: Int, b: Array[Float]): Array[Float] =
+    Array.tabulate(rows * out) { k =>
+      val (r, o) = (k / out, k % out)
+      var acc = if (b != null) b(o) else 0f
+      var i = 0
+      while (i < in) { acc = Math.fma(x(r * in + i), eff(o * in + i), acc); i += 1 }
+      acc
+    }
+
+  /** `w` over `rows` rows of `x` through [[LinearWeight.apply]] on `k`. */
+  private def product(k: DotKernel, w: LinearWeight, x: Array[Float],
+      rows: Int, b: Array[Float]): Array[Float] = {
+    val y = new Array[Float](rows * w.out)
+    w(k, x, rows, b, y, new Array[Float](w.in * k.panel))
+    y
+  }
+
+  test("Q4_0 pack: every kernel equals the fma chain over dequantQ4") {
+    // for random Q4_0 weights and activations, each kernel's product over
+    // the packed blocks is bit for bit the fma chain over the DEQUANTIZED
+    // weights: the nibble/scale decode is exact, so any deviation is a
+    // decode or tile bug
+    val genCase = for {
+      blocks <- Gen.choose(1, 4)
+      out <- Gen.choose(1, 7)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (blocks, out, seed)
+    holds("Q4_0 pack vs dequantized chain")(Prop.forAll(genCase) {
+      case (blocks, out, seed) =>
+        val in = blocks * 32
+        val r = new scala.util.Random(seed)
+        val (w, eff) = weightIn("Q4_0", in, out, r)
+        val x = Array.fill(in)((r.nextFloat() - 0.5f) * 2f)
+        val b = Array.fill(out)((r.nextFloat() - 0.5f))
+        val want = bits(fmaChains(x, 1, in, eff, out, b))
+        Kernels.all.forall(k => bits(product(k, w, x, 1, b)) == want)
+    })
+  }
+
   test("F32 path: every kernel is bit-identical on matmulT, gelu, softmaxScale") {
     // the F32 encoder runs only these three kernels, so this is what makes
     // its logits independent of which kernel the JVM picked. Shapes hit
     // every SIMD code path: rows cover the one-row path, full 4-row tiles
-    // and 2-/3-row remainders; out covers the 4-vector (one row) and
-    // 2-vector (row tile) loops, the single-vector loop and the scalar
-    // tail; ldw > out, nonzero offsets, with and without bias; gelu/softmax
-    // lengths leave a scalar tail.
+    // and 1-/2-/3-row remainders; out covers the 4-vector tiles, the
+    // single-vector loop and the partial last vector (one-row chains, or
+    // for a row block a full-vector tile when ldw leaves room and chains
+    // when it does not); ldw > out, ldy >= out, nonzero offsets, with and
+    // without bias; gelu/softmax lengths leave a scalar tail.
     def ragged(n: Int): Int = if (n % lanes == 0) n + 1 else n
     def sameAcrossKernels(run: DotKernel => Array[Float]): Boolean =
       Kernels.all.map(k => bits(run(k))).distinct.size == 1
@@ -166,19 +188,21 @@ class KernelPropertiesSpec extends AnyFunSuite {
       pad <- Gen.choose(1, 9)
       xo <- Gen.choose(1, 7)
       wo <- Gen.choose(1, 7)
+      bo <- Gen.choose(1, 7)
       yo <- Gen.choose(1, 7)
+      ypad <- Gen.choose(0, 5)
       withBias <- Gen.oneOf(true, false)
       seed <- Gen.choose(0L, Long.MaxValue)
-    } yield (rows, in, out, out + pad, xo, wo, yo, withBias, seed)
+    } yield (rows, in, out, out + pad, xo, wo, bo, yo, out + ypad, withBias, seed)
     holds("matmulT bit-identity")(Prop.forAll(genMatmul) {
-      case (rows, in, out, ldw, xo, wo, yo, withBias, seed) =>
+      case (rows, in, out, ldw, xo, wo, bo, yo, ldy, withBias, seed) =>
         val r = new scala.util.Random(seed)
         val x = Array.fill(xo + rows * in)(r.nextGaussian().toFloat)
         val wt = Array.fill(wo + in * ldw)(r.nextGaussian().toFloat * 0.1f)
-        val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
+        val b = if (withBias) Array.fill(bo + out)(r.nextGaussian().toFloat) else null
         sameAcrossKernels { k =>
-          val y = new Array[Float](yo + rows * out)
-          k.matmulT(x, xo, rows, in, wt, wo, ldw, out, b, y, yo)
+          val y = new Array[Float](yo + rows * ldy)
+          k.matmulT(x, xo, rows, in, wt, wo, ldw, out, b, bo, y, yo, ldy)
           y
         }
     })
@@ -200,63 +224,67 @@ class KernelPropertiesSpec extends AnyFunSuite {
     })
   }
 
+  // `out` for a linear layer's product: k full panels of the SIMD kernel
+  // (4 vectors) plus a narrow tail panel, narrower than one vector or
+  // between one and four vectors wide; k = 0 is the classifier's shape
+  private val genOut: Gen[Int] = for {
+    k <- Gen.choose(0, 3)
+    tail <- Gen.oneOf(Gen.choose(1, lanes - 1), Gen.choose(lanes, 4 * lanes - 1))
+  } yield 4 * lanes * k + tail
+
+  private val genLinear = for {
+    rows <- Gen.choose(1, 9)
+    form <- Gen.oneOf("F32", "F16", "Q4_0")
+    blocks <- Gen.choose(1, 4)
+    anyIn <- Gen.choose(1, 70)
+    out <- genOut
+    withBias <- Gen.oneOf(true, false)
+    seed <- Gen.choose(0L, Long.MaxValue)
+  } yield (rows, form, if (form == "Q4_0") 32 * blocks else anyIn, out,
+    withBias, seed)
+
   test("row blocks: one rows-row call equals rows one-row calls bit for bit") {
-    // the encoder calls each linear once per weight matrix with every token
+    // the encoder runs each linear once per weight matrix with every token
     // as the row block; batching may not change a bit, so each kernel's
     // register tiles must keep every output's one-row accumulation order.
     // rows 1-9 hit the one-row path, full 4-row tiles and every remainder;
-    // F16 `in` is never a multiple of 16 (scalar tail after the reduce);
-    // odd `out`; nonzero offsets; bias or none. y starts as a sentinel so
-    // a store outside the block's rows (e.g. an aliased tile row) shows.
-    val genCase = for {
-      rows <- Gen.choose(1, 9)
-      form <- Gen.oneOf("F32", "F16", "Q4_0")
-      k16 <- Gen.choose(0, 5)
-      tail <- Gen.choose(1, 15)
-      blocks <- Gen.choose(1, 4)
-      inF32 <- Gen.choose(1, 70)
-      out <- Gen.choose(0, 3 * lanes).map(2 * _ + 1)
-      pad <- Gen.choose(0, 9)
-      xo <- Gen.choose(1, 7)
-      wo <- Gen.choose(1, 7)
-      yo <- Gen.choose(1, 7)
-      withBias <- Gen.oneOf(true, false)
-      seed <- Gen.choose(0L, Long.MaxValue)
-    } yield {
-      val in = form match {
-        case "F32" => inF32
-        case "F16" => 16 * k16 + tail
-        case _ => 32 * blocks
-      }
-      (rows, form, in, out, out + pad, xo, wo, yo, withBias, seed)
-    }
-    holds("row-block bit-identity")(Prop.forAll(genCase) {
-      case (rows, form, in, out, ldw, xo, wo, yo, withBias, seed) =>
+    // every weight form goes through its pack decode; bias or none. y
+    // carries a sentinel tail so a store past the block's rows (e.g. an
+    // aliased tile row) shows.
+    holds("row-block bit-identity")(Prop.forAll(genLinear) {
+      case (rows, form, in, out, withBias, seed) =>
         val r = new scala.util.Random(seed)
-        val x = Array.fill(xo + rows * in)(r.nextGaussian().toFloat)
+        val (w, _) = weightIn(form, in, out, r)
+        val x = Array.fill(rows * in)(r.nextGaussian().toFloat)
         val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
-        val w = Array.fill(out * in)(r.nextGaussian().toFloat * 0.1f)
-        // (k, x offset, rows, y, y offset) => one product call
-        val call: (DotKernel, Int, Int, Array[Float], Int) => Unit = form match {
-          case "F32" =>
-            val wt = Array.fill(wo + in * ldw)(r.nextGaussian().toFloat * 0.1f)
-            (k, xr, n, y, yr) => k.matmulT(x, xr, n, in, wt, wo, ldw, out, b, y, yr)
-          case "F16" =>
-            val wh = w.map(v => ModelFormat.floatToF16(v).toShort)
-            (k, xr, n, y, yr) => k.matmulF16(x, xr, n, in, wh, out, b, y, yr)
-          case _ =>
-            val wq = ModelFormat.quantizeQ4(w)
-            (k, xr, n, y, yr) => k.matmulQ4(x, xr, n, in, wq, out, b, y, yr)
-        }
         Kernels.all.forall { k =>
-          val block = Array.fill(yo + rows * out + 3)(-7f)
-          call(k, xo, rows, block, yo)
-          val single = Array.fill(yo + rows * out + 3)(-7f)
+          val pack = new Array[Float](in * k.panel)
+          val block = Array.fill(rows * out + 3)(-7f)
+          w(k, x, rows, b, block, pack)
+          val single = Array.fill(rows * out + 3)(-7f)
           (0 until rows).foreach { i =>
-            call(k, xo + i * in, 1, single, yo + i * out)
+            val y = new Array[Float](out)
+            w(k, x.slice(i * in, (i + 1) * in), 1, b, y, pack)
+            System.arraycopy(y, 0, single, i * out, out)
           }
           bits(block) == bits(single)
         }
+    })
+  }
+
+  test("every form through pack + matmulT: SIMD = scalar bit for bit") {
+    // F16 and Q4_0 weights decode exactly into the F32 panel, so for every
+    // form and kernel each output is the fma chain over the decoded
+    // weights: SIMD and scalar agree bit for bit, and an F16/Q4_0 layer
+    // equals the F32 layer on its decoded weights
+    holds("pack + matmulT vs fma chains")(Prop.forAll(genLinear) {
+      case (rows, form, in, out, withBias, seed) =>
+        val r = new scala.util.Random(seed)
+        val (w, eff) = weightIn(form, in, out, r)
+        val x = Array.fill(rows * in)(r.nextGaussian().toFloat)
+        val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
+        val want = bits(fmaChains(x, rows, in, eff, out, b))
+        Kernels.all.forall(k => bits(product(k, w, x, rows, b)) == want)
     })
   }
 
@@ -275,11 +303,9 @@ class KernelPropertiesSpec extends AnyFunSuite {
     // FloatVector template call-site profiles until C2 recompiles every
     // SIMD kernel WITHOUT vector intrinsics — a silent 5-10x slowdown for
     // the JVM's lifetime (BASELINE.md r8). Every FloatVector species
-    // mention in main sources must be SPECIES_PREFERRED, except the single
-    // documented qsp cap in Kernels.scala (SPECIES_512, reachable only when
-    // SPECIES_PREFERRED *is* 512-bit, so no second species ever runs).
-    // Byte/Short/Int-side species are exempt: only the FloatVector
-    // templates carry the hot float kernels.
+    // mention in main sources must be SPECIES_PREFERRED. Other element
+    // types' species are exempt: only the FloatVector templates carry the
+    // hot float kernels.
     val srcRoot = java.nio.file.Paths.get("src/main/scala/graft")
     assert(java.nio.file.Files.isDirectory(srcRoot),
       s"expected to run from the repo root, cwd=${System.getProperty("user.dir")}")
@@ -289,19 +315,12 @@ class KernelPropertiesSpec extends AnyFunSuite {
       if (p.toString.endsWith(".scala")) {
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
         for (m <- speciesRef.findAllMatchIn(text)) {
-          val ok = m.group(1) == "PREFERRED" ||
-            (m.group(1) == "512" && p.getFileName.toString == "Kernels.scala")
-          if (!ok) offenders += s"$p: FloatVector.SPECIES_${m.group(1)}"
+          if (m.group(1) != "PREFERRED") offenders += s"$p: FloatVector.SPECIES_${m.group(1)}"
         }
       }
     }
     assert(offenders.isEmpty,
-      "fixed FloatVector species outside the documented Kernels.scala cap " +
+      "fixed FloatVector species in main sources " +
         s"(de-intrinsification trap, BASELINE.md r8):\n${offenders.mkString("\n")}")
-    // and the cap itself must still be the guarded equals-preferred form
-    val kernels = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/ner/Kernels.scala")), "UTF-8")
-    assert(kernels.contains("if (sp.length >= 16) FloatVector.SPECIES_512 else sp"),
-      "Kernels.scala qsp cap changed shape — re-review the single-species rule")
   }
 }

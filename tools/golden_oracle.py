@@ -3,9 +3,11 @@
 
 Reads src/test/resources/graft/ner/golden_converter_model.bin with its own
 parser (not the Scala loader), runs the BERT token classifier in float64
-numpy, and writes the logits of a few fixed token-id sequences to
-src/test/resources/graft/ner/golden_oracle_logits.txt, which
-GoldenOracleSpec compares the Scala encoder against.
+numpy, and writes the logits of a few fixed token-id sequences, and each
+token's argmax label, to src/test/resources/graft/ner/golden_oracle_logits.txt,
+which GoldenOracleSpec compares the Scala encoder against. A token whose
+two largest logits are closer than LABEL_MARGIN gets no label ("-"): its
+argmax is a rounding decision, not the network's.
 
 The network and its constants come from the reference semantics of the
 encoder (SURVEY.md A1.4, reference src/ner_model.cpp:315-425), not from
@@ -35,6 +37,7 @@ MODEL = os.path.join(RES, "golden_converter_model.bin")
 OUT = os.path.join(RES, "golden_oracle_logits.txt")
 
 LN_EPS = 1e-5
+LABEL_MARGIN = 1e-3
 
 # token ids into the fixture's 16-entry vocab ([CLS] = 2, [SEP] = 3); the
 # last sequence fills the 16-token context window
@@ -141,12 +144,20 @@ def main():
     hp, t = read_model(MODEL)
     lines = ["# float64 logits of golden_converter_model.bin, written by "
              "tools/golden_oracle.py",
-             "# one block per case: 'ids:' then one row of n_labels logits per token"]
+             "# one block per case: 'ids:', one row of n_labels logits per token,",
+             "# then 'labels:' with each token's argmax ('-' where the top two",
+             "# logits are closer than %g)" % LABEL_MARGIN]
     for ids in CASES:
         assert len(ids) <= hp["n_max_tokens"]
         lines.append("ids: " + " ".join(map(str, ids)))
-        for row in forward(hp, t, ids):
+        logits = forward(hp, t, ids)
+        for row in logits:
             lines.append(" ".join("%.9e" % v for v in row))
+        labels = []
+        for row in logits:
+            top2 = np.sort(row)[-2:]
+            labels.append(str(int(np.argmax(row))) if top2[1] - top2[0] >= LABEL_MARGIN else "-")
+        lines.append("labels: " + " ".join(labels))
     with open(OUT, "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote %s (%d cases)" % (OUT, len(CASES)))
