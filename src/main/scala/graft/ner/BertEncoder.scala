@@ -135,10 +135,12 @@ final class BertEncoder(model: NerModel) {
     * task in the executor JVM). Starts at one document (nMaxTokens) and
     * grows to the batch budget the first time [[evalBatch]] sees one.
     *
-    * Retention note (round-2 ADVICE): each pooled executor thread holds one
-    * Scratch per live encoder, and a replaced encoder's scratch lingers
-    * until the encoder itself is GC'd (the ThreadLocal is a field of this
-    * encoder, so it is unreachable as soon as the encoder is).
+    * Retention note: each thread that calls the encoder holds one Scratch
+    * per live encoder, and a replaced encoder's scratch lingers until the
+    * encoder itself is GC'd (the ThreadLocal is a field of this encoder, so
+    * it is unreachable as soon as the encoder is). The [[EncoderPool]]
+    * helpers that run a split call's panels and heads keep no Scratch: only
+    * one pack panel and one scores row each, shared by every encoder.
     */
   private final class Scratch {
     var cap = 0
@@ -179,9 +181,16 @@ final class BertEncoder(model: NerModel) {
     * bit-identical to per-document [[eval]] (no cross-document attention,
     * no padding — ragged rows are simply concatenated).
     */
-  def evalBatch(docs: Array[Array[Int]]): Array[Array[Float]] = {
+  def evalBatch(docs: Array[Array[Int]]): Array[Array[Float]] =
+    if (docs.isEmpty) Array.empty else EncoderPool.withSlot(forward(docs))
+
+  /** [[evalBatch]] of a non-empty batch. Each linear splits its weight
+    * panels, and each layer's attention its (document, head) units, over
+    * the task slots no other task is using ([[EncoderPool.split]]); every
+    * unit computes the same bits on any thread, so no split width changes
+    * a logit. */
+  private def forward(docs: Array[Array[Int]]): Array[Array[Float]] = {
     val nDocs = docs.length
-    if (nDocs == 0) return Array.empty
     val offs = new Array[Int](nDocs + 1)
     var di = 0
     while (di < nDocs) { offs(di + 1) = offs(di) + docs(di).length; di += 1 }
@@ -212,6 +221,8 @@ final class BertEncoder(model: NerModel) {
     layerNorm(h, n, nEmbd, lnEw, lnEb)
 
     val scale = (1.0 / math.sqrt(dHead.toDouble)).toFloat
+    // a layer's attention multiply-adds: scores and softmax.V, all heads
+    val attMacs = docs.map(d => 2L * d.length * d.length * nEmbd).sum
     var li = 0
     while (li < layers.length) {
       val L = layers(li)
@@ -220,7 +231,6 @@ final class BertEncoder(model: NerModel) {
       val v = linear(h, n, L.vw, L.vb, s.v, s)
 
       val att = s.att
-      val scoresF = s.scoresF
       val kern = Kernels.best
       // repack K token-major -> embd-major ([embd][token]): the score pass
       // then reads one head's K block as a [dHead x n] unit-stride panel (a
@@ -236,13 +246,15 @@ final class BertEncoder(model: NerModel) {
         while (e < nEmbd) { kt(e * n + tt) = k(ko + e); e += 1 }
         tt += 1
       }
-      di = 0
-      while (di < nDocs) {
-        val base = offs(di)
-        val segN = offs(di + 1) - base
-        var head = 0
-        while (head < nHead) {
-          val hOff = head * dHead
+      // one unit per (document, head), document-major; each writes only
+      // its head's columns of its document's rows of att
+      EncoderPool.split(nDocs * nHead, attMacs) { (lo, hi, helper) =>
+        val scoresF = if (helper) EncoderPool.helperScores(hp.nMaxTokens) else s.scoresF
+        var u = lo
+        while (u < hi) {
+          val base = offs(u / nHead)
+          val segN = offs(u / nHead + 1) - base
+          val hOff = (u % nHead) * dHead
           var qi = 0
           while (qi < segN) {
             val qo = (base + qi) * nEmbd + hOff
@@ -258,9 +270,8 @@ final class BertEncoder(model: NerModel) {
               nEmbd, dHead, null, 0, att, qo, dHead)
             qi += 1
           }
-          head += 1
+          u += 1
         }
-        di += 1
       }
 
       val attOut = linear(att, n, L.ow, L.ob, s.t1, s)

@@ -85,10 +85,11 @@ private[graft] trait DotKernel {
   * van de Geijn's packing). The decode is exact for every form — a half
   * widens exactly, a Q4_0 weight d·(q−8) needs at most 15 significant
   * bits — so every output is the F32 ascending-i fma chain from its bias
-  * over the decoded weights, whatever the form, kernel or row count.
-  * Weights stay in their stored form; nothing is re-laid-out at load.
+  * over the decoded weights, whatever the form, kernel, row count or
+  * thread that ran its panel. Weights stay in their stored form; nothing
+  * is re-laid-out at load.
   */
-private[graft] sealed abstract class LinearWeight(val in: Int, val out: Int) {
+private[graft] abstract class LinearWeight(val in: Int, val out: Int) {
   /** Rows [o0, o0 + pw) of W decoded to F32 into `dst` as an `[in][ldp]`
     * panel, dst(i*ldp + c) = W(o0 + c, i), written i-outer so each panel
     * row is one contiguous run. */
@@ -97,16 +98,23 @@ private[graft] sealed abstract class LinearWeight(val in: Int, val out: Int) {
   /** y(r*out + o) = b(o) + sum_i x(r*in + i) * W(o, i) for r in [0, n), a
     * null `b` meaning no bias; `buf` holds one panel (`in * kern.panel`
     * floats). A narrow last panel is packed only as wide as it is; the
-    * SIMD tile computes the lanes past it but never stores them. */
+    * SIMD tile computes the lanes past it but never stores them. The
+    * panels are the units of an [[EncoderPool.split]]: idle cores run
+    * contiguous panel ranges on their own pack buffers, and each panel
+    * writes only its own columns of `y`. */
   final def apply(kern: DotKernel, x: Array[Float], n: Int, b: Array[Float],
       y: Array[Float], buf: Array[Float]): Unit = {
     val p = kern.panel
-    var o0 = 0
-    while (o0 < out) {
-      val pw = math.min(p, out - o0)
-      pack(o0, pw, buf, p)
-      kern.matmulT(x, 0, n, in, buf, 0, p, pw, b, o0, y, o0, out)
-      o0 += p
+    EncoderPool.split((out + p - 1) / p, n.toLong * in * out) { (lo, hi, helper) =>
+      val dst = if (helper) EncoderPool.helperPack(in * p) else buf
+      val end = math.min(out, hi * p)
+      var o0 = lo * p
+      while (o0 < end) {
+        val pw = math.min(p, out - o0)
+        pack(o0, pw, dst, p)
+        kern.matmulT(x, 0, n, in, dst, 0, p, pw, b, o0, y, o0, out)
+        o0 += p
+      }
     }
   }
 }

@@ -41,11 +41,14 @@ final case class NerEntity(entity: String, label: String)
   * the way Spark evaluates Python UDFs: [[ExtractNer]] moves each call into
   * a [[NerEval]] node below the operator that holds it, and the operator
   * feeds whole partitions through [[evalPartition]]'s token-budgeted
-  * batches. The reference runs each call on 4 ggml threads; we run one
-  * single-threaded encoder per Spark task instead, and [[NerEvalExec]]
-  * spreads a scan narrower than `defaultParallelism` (a one-row-group
-  * parquet file is one partition) over that many tasks, so every core
-  * Spark schedules runs the encoder and none is oversubscribed.
+  * batches. The reference runs each call on 4 ggml threads. Here
+  * [[NerEvalExec]] spreads a scan narrower than `defaultParallelism` (a
+  * one-row-group parquet file is one partition) over that many tasks, so
+  * every core Spark schedules runs the encoder; and one encoder call
+  * borrows the task slots no other task is using ([[EncoderPool]]): a lone
+  * document's linear panels and attention heads run on every idle core,
+  * while a many-task stage, whose tasks hold every slot, runs one
+  * single-threaded call per task. No core is oversubscribed.
   */
 object Ner {
   val ConfKey = "spark.ner.model_path"
@@ -119,11 +122,12 @@ object Ner {
 
   /** What [[evalPartition]] did: input rows, NULL texts, rows evaluated
     * without a model, tokens, documents cut at the context window,
-    * encoder calls and the nanoseconds they took. [[NerEvalExec]]
+    * encoder calls, the nanoseconds they took and the nanoseconds
+    * [[EncoderPool]] helper threads spent on them. [[NerEvalExec]]
     * publishes these as SQL metrics. */
   final class Tally {
     var rows, nullRows, noModelRows, tokens, truncated, encoderCalls,
-      encoderNs = 0L
+      encoderNs, encoderHelperNs = 0L
   }
 
   /** Entity extraction from already-computed logits (argmax -> label
@@ -203,9 +207,11 @@ object Ner {
           val logits =
             if (live.isEmpty) Array.empty[Array[Float]]
             else {
+              val h0 = EncoderPool.helperNanos
               val t0 = System.nanoTime()
               val out = encoder.evalBatch(live)
               tally.encoderNs += System.nanoTime() - t0
+              tally.encoderHelperNs += EncoderPool.helperNanos - h0
               tally.encoderCalls += 1
               out
             }

@@ -142,6 +142,11 @@ object ExtractNer extends Rule[LogicalPlan] {
   * real partition count at execution, not on the plan, so a wide scan is
   * never shrunk. Spread rows come back in another order, as after
   * `repartition(n)`.
+  *
+  * Each task holds one [[EncoderPool]] slot from its first row to its last,
+  * so its encoder calls borrow only the cores of tasks that have finished
+  * or not yet started: a lone document uses every idle core, and the
+  * `encoderHelperTime` metric reports the helper-thread time it borrowed.
   */
 final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     child: SparkPlan) extends UnaryExecNode {
@@ -161,7 +166,9 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     "tokens" -> SQLMetrics.createMetric(sparkContext, "number of tokens"),
     "truncatedDocs" -> SQLMetrics.createMetric(sparkContext, "number of truncated documents"),
     "encoderCalls" -> SQLMetrics.createMetric(sparkContext, "number of encoder calls"),
-    "encoderTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "encoder time")
+    "encoderTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "encoder time"),
+    "encoderHelperTime" -> SQLMetrics.createNanoTimingMetric(sparkContext,
+      "encoder helper time")
   ) ++ readMetrics ++ writeMetrics
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -184,7 +191,10 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     val joined = new JoinedRow
     val value = new GenericInternalRow(1)
     val tally = new Ner.Tally
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => publish(tally)))
+    Option(TaskContext.get()).foreach { ctx =>
+      val slot = EncoderPool.holdSlot()
+      ctx.addTaskCompletionListener[Unit] { _ => slot.release(); publish(tally) }
+    }
     val Seq(textType, truncateType) = call.children.map(_.dataType)
     val keyed = rows.map { r =>
       val a = args(r)
@@ -203,7 +213,8 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
   private def publish(t: Ner.Tally): Unit = Seq(
     "rows" -> t.rows, "nullRows" -> t.nullRows, "noModelRows" -> t.noModelRows,
     "tokens" -> t.tokens, "truncatedDocs" -> t.truncated,
-    "encoderCalls" -> t.encoderCalls, "encoderTime" -> t.encoderNs
+    "encoderCalls" -> t.encoderCalls, "encoderTime" -> t.encoderNs,
+    "encoderHelperTime" -> t.encoderHelperNs
   ).foreach { case (k, v) => longMetric(k) += v }
 
   override protected def withNewChildInternal(newChild: SparkPlan): NerEvalExec =

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{SparkContext, SparkEnv}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -15,7 +16,8 @@ import org.apache.spark.sql.internal.SQLConf
   *     a builder on the session `FunctionRegistry` instead);
   *   - Column <-> Expression conversion (Spark 4 made `Column` node-based);
   *   - executor-side read of session conf values (`SQLConf.get` works on
-  *     executors via task-propagated local properties).
+  *     executors via task-propagated local properties);
+  *   - the task slots of a JVM, which Spark computes `private[spark]`.
   */
 object GraftSqlShim {
 
@@ -39,4 +41,18 @@ object GraftSqlShim {
     */
   def confString(key: String): Option[String] =
     Option(SQLConf.get.getConfString(key, null))
+
+  /** How many tasks `env`'s JVM runs at once: the cores of a local master
+    * (`local[N]`, `local[*]`) on the driver, `spark.executor.cores` on an
+    * executor (all processors when unset), each divided by
+    * `spark.task.cpus`. */
+  def taskSlots(env: SparkEnv): Int = {
+    val conf = env.conf
+    val procs = Runtime.getRuntime.availableProcessors
+    val cores =
+      if (env.executorId == SparkContext.DRIVER_IDENTIFIER)
+        SparkContext.numDriverCores(conf.get("spark.master", "local"), conf)
+      else conf.getInt("spark.executor.cores", procs)
+    math.max(1, (if (cores > 0) cores else procs) / math.max(1, conf.getInt("spark.task.cpus", 1)))
+  }
 }

@@ -49,6 +49,29 @@ class BertEncoderBatchSpec extends AnyFunSuite {
       s"F32 logits hash $sha on ${Kernels.best.getClass.getSimpleName}")
   }
 
+  test("logits are bit-identical at pool widths 1-4 for F32, F16 and Q4_0") {
+    // a batch of 256 + 100 + 7 tokens: the FFN panels and the layer's
+    // (document, head) attention units deal unevenly over 2-4 workers; the
+    // 9-wide classifier is one panel and Q/K/V/out fall under the hand-off
+    // floor, so they run inline
+    val r = new scala.util.Random(11)
+    val docs = Array(256, 100, 7).map(n =>
+      Array.fill(n)(r.nextInt(TestModels.DefaultVocab.length)))
+    for (form <- Seq("f32", "f16", "q4")) {
+      val enc = TestModels.splitShaped(form).encoder
+      val at = (1 to 4).map { w =>
+        val before = EncoderPool.helperNanos
+        val logits = EncoderPool.withWidth(w)(enc.evalBatch(docs))
+        val borrowed = EncoderPool.helperNanos - before
+        assert((borrowed > 0) == (w > 1), s"$form width $w: $borrowed helper ns")
+        logits
+      }
+      for (w <- 2 to 4; d <- docs.indices)
+        assert(java.util.Arrays.equals(at(w - 1)(d), at(0)(d)),
+          s"$form width $w doc $d on ${Kernels.best.getClass.getSimpleName}")
+    }
+  }
+
   test("evalPartition preserves order, null rows, and row results") {
     val rows = Seq[(Long, String)](
       (1L, texts(0)), (2L, null), (3L, texts(3)), (4L, texts(2)),

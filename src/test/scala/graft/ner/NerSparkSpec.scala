@@ -392,6 +392,42 @@ class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     unsetPath()
   }
 
+  private def encoderHelpers: Int =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .count(_.getName.startsWith("graft-ner-encoder-"))
+
+  test("one document borrows idle slots: at most slots - 1 helpers, no growth over 20 statements") {
+    Ner.register(spark)
+    val p = tmp("split.bin")
+    ModelFormat.write(TestModels.splitShaped("f32").model, p)
+    setPath(p)
+    // the JVM's helpers exist once any call has split (here, one outside
+    // a task): statements must reuse them, never add to them
+    val text = "duckdb is great " * 80
+    Ner.evalWith(Ner.currentModel(), text, truncate = true)
+    val df = () => docsIn(1, Seq((1L, text))).select(Ner.ner(col("text")))
+    val first = nerExecs(df()).head
+    val afterOne = encoderHelpers
+    val rest = (2 to 20).map(_ => nerExecs(df()).head)
+    assert(encoderHelpers == afterOne)
+    // slots - 1 of local[N]; a split outside any session (no SparkEnv)
+    // gates on the JVM's processors instead
+    val slots = math.max(spark.sparkContext.defaultParallelism,
+      Runtime.getRuntime.availableProcessors)
+    assert(afterOne >= 1 && afterOne <= slots - 1, s"$afterOne helper threads")
+    // the lone document's task borrowed the three idle slots at least once
+    val helperNs = (first +: rest).map(_.metrics("encoderHelperTime").value)
+    assert(helperNs.sum > 0, helperNs)
+    unsetPath()
+  }
+
+  test("a session that never calls ner() starts no helper thread") {
+    val before = encoderHelpers
+    spark.range(200000).selectExpr("id % 97 AS k", "id").groupBy("k").count()
+      .join(spark.range(97).withColumnRenamed("id", "k"), "k").collect()
+    assert(encoderHelpers == before)
+  }
+
   test("ner() over a lambda variable fails analysis with a clear message") {
     Ner.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {

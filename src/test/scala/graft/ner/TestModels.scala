@@ -79,6 +79,20 @@ object TestModels {
     Array(1, 10, 11, 12, 2), Array(1, 13, 2), Array(1, 9, 14, 6, 2),
     Array(1, 2))
 
+  /** A seeded model in `form` ("f32", "f16" or "q4") whose layers split
+    * unevenly over 2-4 [[EncoderPool]] workers: the FFN-in linear has 5
+    * SIMD panels on AVX-512 (10 on AVX2, 20 scalar), the FFN-out 2, the
+    * classifier is one 9-wide panel, and a 256-token document puts both
+    * FFN products and each layer's attention above the hand-off floor. */
+  def splitShaped(form: String): Ner.Loaded = {
+    val p = java.nio.file.Files.createTempFile("graft-split", ".bin").toString
+    writeValid(p, nMaxTokens = 256, nEmbd = 128, nIntermediate = 320, nHead = 2,
+      nLayer = 2, weightGen = seeded(7), f16Linears = form == "f16",
+      q4Linears = form == "q4")
+    val m = ModelFormat.loadFile(p).get
+    Ner.Loaded(m, new BertEncoder(m))
+  }
+
   /** Every (split, doc) whose logits from batches of `split` consecutive
     * documents differ in any bit from per-document [[BertEncoder.eval]],
     * for each split from 1 to all documents in one batch (doc -1: the
