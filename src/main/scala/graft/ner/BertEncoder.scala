@@ -62,12 +62,17 @@ final class BertEncoder(model: NerModel) {
     }
   }
 
+  /** A LayerNorm weight or bias widened once to the f64 [[layerNorm]]
+    * applies it in (exact): widening it per element made the normalize
+    * loop 4x slower. */
+  private def reqD(t: BertTensor): Array[Double] = req(t).map(_.toDouble)
+
   import BertTensors._
   private val wordEmb = req(WordEmb.at(hp))
   private val typeEmb = req(TypeEmb.at(hp))
   private val posEmb = req(PosEmb.at(hp))
-  private val lnEw = req(EmbLnW.at(hp))
-  private val lnEb = req(EmbLnB.at(hp))
+  private val lnEw = reqD(EmbLnW.at(hp))
+  private val lnEb = reqD(EmbLnB.at(hp))
   private val clsW = reqLin(ClsW.at(hp))
   private val clsB = req(ClsB.at(hp))
 
@@ -77,14 +82,15 @@ final class BertEncoder(model: NerModel) {
   private final class Layer(i: Int) {
     private def lin(s: Spec) = reqLin(s.at(hp, i))
     private def vec(s: Spec) = req(s.at(hp, i))
+    private def ln(s: Spec) = reqD(s.at(hp, i))
     val qw = lin(QueryW); val qb = vec(QueryB)
     val kw = lin(KeyW); val kb = vec(KeyB)
     val vw = lin(ValueW); val vb = vec(ValueB)
     val ow = lin(AttOutW); val ob = vec(AttOutB)
-    val lnAw = vec(AttLnW); val lnAb = vec(AttLnB)
+    val lnAw = ln(AttLnW); val lnAb = ln(AttLnB)
     val fiW = lin(InterW); val fiB = vec(InterB)
     val foW = lin(OutW); val foB = vec(OutB)
-    val lnOw = vec(OutLnW); val lnOb = vec(OutLnB)
+    val lnOw = ln(OutLnW); val lnOb = ln(OutLnB)
   }
 
   private val layers: Array[Layer] = Array.tabulate(hp.nLayer)(new Layer(_))
@@ -105,7 +111,7 @@ final class BertEncoder(model: NerModel) {
 
   /** In-place LayerNorm per row, ggml_norm semantics (eps 1e-5) then scale+shift. */
   private def layerNorm(x: Array[Float], n: Int, d: Int,
-      w: Array[Float], b: Array[Float]): Unit = {
+      w: Array[Double], b: Array[Double]): Unit = {
     val eps = 1e-5
     var r = 0
     while (r < n) {
@@ -140,13 +146,12 @@ final class BertEncoder(model: NerModel) {
     * encoder itself is GC'd (the ThreadLocal is a field of this encoder, so
     * it is unreachable as soon as the encoder is). The [[EncoderPool]]
     * helpers that run a split call's panels and heads keep no Scratch: only
-    * one pack panel and one scores row each, shared by every encoder.
+    * one pack panel and one scores block each, shared by every encoder.
     */
   private final class Scratch {
     var cap = 0
     var h, q, k, v, kt, att, t1, inter: Array[Float] = null
-    // per-segment attention rows never exceed one document's token cap
-    val scoresF = new Array[Float](hp.nMaxTokens)
+    val scores = new Array[Float](scoresLen)
     // one weight panel of the widest-input linear (LinearWeight.apply)
     val pack = new Array[Float](math.max(nEmbd, nInter) * Kernels.best.panel)
     def ensure(nTokens: Int): Unit = if (nTokens > cap) {
@@ -161,6 +166,9 @@ final class BertEncoder(model: NerModel) {
       inter = new Array[Float](cap * nInter)
     }
   }
+
+  // one block of query rows' scores: a document never exceeds the token cap
+  private val scoresLen = BertEncoder.QBlock * hp.nMaxTokens
 
   private val scratch: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
@@ -221,6 +229,7 @@ final class BertEncoder(model: NerModel) {
     layerNorm(h, n, nEmbd, lnEw, lnEb)
 
     val scale = (1.0 / math.sqrt(dHead.toDouble)).toFloat
+    val attClock = BertEncoder.attention.get()
     // a layer's attention multiply-adds: scores and softmax.V, all heads
     val attMacs = docs.map(d => 2L * d.length * d.length * nEmbd).sum
     var li = 0
@@ -232,47 +241,55 @@ final class BertEncoder(model: NerModel) {
 
       val att = s.att
       val kern = Kernels.best
+      val t0 = System.nanoTime()
       // repack K token-major -> embd-major ([embd][token]): the score pass
       // then reads one head's K block as a [dHead x n] unit-stride panel (a
       // matmulT with ldw = n — broadcast-FMA, no reductions). V needs no
       // repack: token-major V already IS the [n x dHead] panel (ldw = nEmbd)
-      // the softmax.V matmulT reads. The transpose is O(n*embd) — noise
-      // against the O(n^2*dHead) attention math it de-strides.
+      // the softmax.V matmulT reads. Q goes head-major ([head][token][dHead],
+      // into t1, free until the out-projection): a block of one head's query
+      // rows is then one contiguous [rows x dHead] operand. The repacks are
+      // O(n*embd) — noise against the O(n^2*dHead) attention math.
       val kt = s.kt
+      val qh = s.t1
       var tt = 0
       while (tt < n) {
         val ko = tt * nEmbd
         var e = 0
         while (e < nEmbd) { kt(e * n + tt) = k(ko + e); e += 1 }
+        var hd = 0
+        while (hd < nEmbd) {
+          System.arraycopy(q, ko + hd, qh, hd * n + tt * dHead, dHead); hd += dHead
+        }
         tt += 1
       }
       // one unit per (document, head), document-major; each writes only
       // its head's columns of its document's rows of att
       EncoderPool.split(nDocs * nHead, attMacs) { (lo, hi, helper) =>
-        val scoresF = if (helper) EncoderPool.helperScores(hp.nMaxTokens) else s.scoresF
+        val scores = if (helper) EncoderPool.helperScores(scoresLen) else s.scores
         var u = lo
         while (u < hi) {
           val base = offs(u / nHead)
           val segN = offs(u / nHead + 1) - base
           val hOff = (u % nHead) * dHead
-          var qi = 0
-          while (qi < segN) {
-            val qo = (base + qi) * nEmbd + hOff
-            // scores[t] = q_row . k_row_t as ONE matmulT over the head's
-            // transposed K panel; then scale+softmax in f32 through the
-            // vector-math kernel (ggml_soft_max semantics)
-            kern.matmulT(q, qo, 1, dHead, kt, hOff * n + base, n, segN,
-              null, 0, scoresF, 0, segN)
-            kern.softmaxScale(scoresF, segN, scale)
-            // att_row = softmax(scores) . V as ONE matmulT over the head's
-            // token-major V block: segN rows of dHead lanes, ldw = nEmbd
-            kern.matmulT(scoresF, 0, 1, segN, v, base * nEmbd + hOff,
-              nEmbd, dHead, null, 0, att, qo, dHead)
-            qi += 1
+          var q0 = 0
+          while (q0 < segN) {
+            val rows = math.min(BertEncoder.QBlock, segN - q0)
+            // scores [rows x segN] = Q . K^T as ONE matmulT over the head's
+            // transposed K panel, one block softmax (ggml_soft_max
+            // semantics), then att rows = P . V as ONE matmulT over the
+            // head's token-major V block, straight into att's head columns
+            kern.matmulT(qh, hOff * n + (base + q0) * dHead, rows, dHead, kt,
+              hOff * n + base, n, segN, null, 0, scores, 0, segN)
+            kern.softmaxRows(scores, 0, rows, segN, segN, scale)
+            kern.matmulT(scores, 0, rows, segN, v, base * nEmbd + hOff, nEmbd,
+              dHead, null, 0, att, (base + q0) * nEmbd + hOff, nEmbd)
+            q0 += rows
           }
           u += 1
         }
       }
+      attClock(0) += System.nanoTime() - t0
 
       val attOut = linear(att, n, L.ow, L.ob, s.t1, s)
       var i = 0
@@ -297,6 +314,20 @@ final class BertEncoder(model: NerModel) {
         offs(d + 1) * nLabels)
     }
   }
+}
+
+object BertEncoder {
+  /** Query rows per attention block: a block's scores (`QBlock` rows of at
+    * most the token cap, 32 KB on a 128-token model) stay in L2 between
+    * the scores product, the softmax and the P.V product. */
+  private[ner] val QBlock = 64
+
+  private val attention = ThreadLocal.withInitial[Array[Long]](() => new Array[Long](1))
+
+  /** Nanoseconds this thread's encoder calls have spent in attention: each
+    * layer's K and Q repacks and its (document, head) split, helpers'
+    * share included as the wall time the caller waited. */
+  private[graft] def attentionNanos: Long = attention.get()(0)
 }
 
 /** One tensor of a model's directory ([[BertTensors]]): its full name, its

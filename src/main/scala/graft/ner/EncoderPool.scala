@@ -193,8 +193,8 @@ private[graft] object EncoderPool {
     }
   }
 
-  /** A helper thread's buffers: one weight panel and one attention scores
-    * row, grown on demand — never a full encoder scratch. */
+  /** A helper thread's buffers: one weight panel and one block of
+    * attention scores, grown on demand — never a full encoder scratch. */
   private final class HelperBuffers {
     var pack, scores = new Array[Float](0)
   }
@@ -207,7 +207,7 @@ private[graft] object EncoderPool {
     b.pack
   }
 
-  /** This helper thread's scores row of at least `n` floats. */
+  /** This helper thread's scores block of at least `n` floats. */
   def helperScores(n: Int): Array[Float] = {
     val b = helperBuffers.get
     if (b.scores.length < n) b.scores = new Array[Float](n)

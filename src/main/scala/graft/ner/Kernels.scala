@@ -8,7 +8,7 @@ package graft.ner
   * once at class-init so the JIT devirtualizes the call sites.
   *
   * The kernels have one product, [[matmulT]], and it agrees bit for bit
-  * between the scalar and SIMD kernels, as do [[gelu]] and [[softmaxScale]];
+  * between the scalar and SIMD kernels, as do [[gelu]] and [[softmaxRows]];
   * so logits do not depend on which kernel the JVM picked. Every linear
   * layer reaches [[matmulT]] through [[LinearWeight]], which first decodes
   * a panel of weight rows from its stored form (F32, F16 or Q4_0) exactly
@@ -26,15 +26,17 @@ private[graft] trait DotKernel {
     * for r in [0, rows), o in [0, out) — activation rows are `in` apart,
     * output rows `ldy` apart; `ldw` is the leading dimension of the
     * [in x ldw] transposed panel, `wo` the panel offset (so attention can
-    * address one head's block inside a full activation matrix with a
-    * `rows = 1` call). A null `b` means no bias.
+    * read one head's K or V block inside a full activation matrix, and
+    * write one head's columns of its output with `ldy` = the embedding
+    * width). A null `b` means no bias. Every `rows`, one included, runs
+    * through the same register tiles.
     *
     * The transposed layout turns the row-major dot (one horizontal
     * `reduceLanes` per OUTPUT — the dominant overhead at 64-wide layers)
     * into broadcast-FMA accumulation with no reduction at all; the row
     * block lets one weight-vector load feed every row of a register tile.
     *
-    * A multi-row call may load a full vector of `wt` lanes past `out` when
+    * A call may load a full vector of `wt` lanes past `out` when
     * they lie inside `wt`, and computes but never stores those lanes.
     *
     * Accumulation contract (every tile shape, every `rows`): each output
@@ -51,14 +53,51 @@ private[graft] trait DotKernel {
     * scalar and SIMD outputs are bit-identical.
     */
   def gelu(x: Array[Float], len: Int): Unit
-  /** In-place softmax of (x * scale) over x[0, len) in f32 (max-subtracted,
-    * like `ggml_soft_max`): x := exp(x*scale - max) / sum. Both kernels sum
-    * in ascending-i order, so scalar and SIMD outputs are bit-identical. */
-  def softmaxScale(x: Array[Float], len: Int, scale: Float): Unit
+  /** In-place softmax of (x * scale) over each of `rows` rows of `len`
+    * floats, `ld` apart from x(xo), in f32 (max-subtracted, like
+    * `ggml_soft_max`): per row, x := x*scale, m := max, x := exp(x - m) /
+    * sum. Both kernels sum each row in ascending-i order, so scalar and
+    * SIMD outputs are bit-identical; a row holding a NaN comes out all NaN.
+    */
+  final def softmaxRows(x: Array[Float], xo: Int, rows: Int, len: Int,
+      ld: Int, scale: Float): Unit = {
+    // the sums of four rows run interleaved: four independent add chains
+    // where one row's ascending sum is one latency chain
+    var r = 0
+    while (r < rows) {
+      val rb = math.min(4, rows - r)
+      var k = 0
+      while (k < rb) { scaleExp(x, xo + (r + k) * ld, len, scale); k += 1 }
+      // a short last block aliases its missing rows to its last row
+      val o0 = xo + r * ld
+      val o1 = o0 + math.min(1, rb - 1) * ld
+      val o2 = o0 + math.min(2, rb - 1) * ld
+      val o3 = o0 + math.min(3, rb - 1) * ld
+      var s0, s1, s2, s3 = 0f
+      var i = 0
+      while (i < len) {
+        s0 += x(o0 + i); s1 += x(o1 + i); s2 += x(o2 + i); s3 += x(o3 + i)
+        i += 1
+      }
+      mulRow(x, o0, len, 1f / s0)
+      if (rb > 1) mulRow(x, o1, len, 1f / s1)
+      if (rb > 2) mulRow(x, o2, len, 1f / s2)
+      if (rb > 3) mulRow(x, o3, len, 1f / s3)
+      r += rb
+    }
+  }
+
+  /** x[o, o + len) := x*scale, then exp(x - m) through [[ExpF]], m the
+    * max of the scaled row (order-free: a NaN anywhere makes the row all
+    * NaN whichever max it finds). */
+  protected def scaleExp(x: Array[Float], o: Int, len: Int, scale: Float): Unit
+  /** x[o, o + len) *= c. */
+  protected def mulRow(x: Array[Float], o: Int, len: Int, c: Float): Unit
 
   /** Outputs [o0, out) of ONE activation row through [[matmulT]], each
     * one ascending-i fma chain from its bias: the scalar kernel's per-row
-    * body and the SIMD kernel's one-row tail past its last full vector. */
+    * body, and the SIMD kernel's for the last columns when a full vector
+    * of them would run past `wt`. */
   protected final def matmulTChains(x: Array[Float], xo: Int, in: Int,
       wt: Array[Float], wo: Int, ldw: Int, o0: Int, out: Int,
       b: Array[Float], bo: Int, y: Array[Float], yo: Int): Unit = {
@@ -268,21 +307,19 @@ private[graft] object ScalarKernel extends DotKernel {
     }
   }
 
-  override def softmaxScale(x: Array[Float], len: Int, scale: Float): Unit = {
+  protected def scaleExp(x: Array[Float], o: Int, len: Int, scale: Float): Unit = {
     var m = Float.NegativeInfinity
     var i = 0
     while (i < len) {
-      val v = x(i) * scale; x(i) = v; if (v > m) m = v; i += 1
+      val v = x(o + i) * scale; x(o + i) = v; if (v > m) m = v; i += 1
     }
-    var sum = 0f
     i = 0
-    while (i < len) {
-      val e = ExpF.expf(x(i) - m); x(i) = e; sum += e
-      i += 1
-    }
-    val inv = 1f / sum
-    i = 0
-    while (i < len) { x(i) *= inv; i += 1 }
+    while (i < len) { x(o + i) = ExpF.expf(x(o + i) - m); i += 1 }
+  }
+
+  protected def mulRow(x: Array[Float], o: Int, len: Int, c: Float): Unit = {
+    var i = 0
+    while (i < len) { x(o + i) *= c; i += 1 }
   }
 }
 
@@ -300,77 +337,30 @@ private[graft] object SimdKernel extends DotKernel {
 
   override def matmulT(x: Array[Float], xo: Int, rows: Int, in: Int,
       wt: Array[Float], wo: Int, ldw: Int, out: Int, b: Array[Float], bo: Int,
-      y: Array[Float], yo: Int, ldy: Int): Unit =
-    if (rows == 1) matmulT1(x, xo, in, wt, wo, ldw, out, b, bo, y, yo)
-    else {
-      val vl = sp.length
-      var o = 0
-      while (o + 4 * vl <= out) {
-        matmulT4x4(x, xo, rows, in, wt, wo + o, ldw, b, bo + o, y, yo + o, ldy)
-        o += 4 * vl
-      }
-      while (o < out) {
-        val lanes = math.min(vl, out - o)
-        // a full vector of weight lanes must lie inside wt: always true for
-        // a packed panel; otherwise the last columns run as one-row chains
-        if (wo + o + (in - 1) * ldw + vl <= wt.length)
-          matmulT4x1(x, xo, rows, in, wt, wo + o, ldw, lanes, b, bo + o, y,
-            yo + o, ldy)
-        else {
-          var r = 0
-          while (r < rows) {
-            matmulTChains(x, xo + r * in, in, wt, wo, ldw, o, o + lanes, b, bo,
-              y, yo + r * ldy)
-            r += 1
-          }
-        }
-        o += vl
-      }
-    }
-
-  // one row (attention): 4-vector output tile — the whole tile lives in
-  // registers across the i loop (one broadcast of x(i) feeds 4 FMAs on
-  // consecutive wt lanes), so nothing is re-loaded or reduced; each y
-  // element accumulates in ascending-i order, matching the scalar kernel
-  // bit-for-bit
-  private def matmulT1(x: Array[Float], xo: Int, in: Int, wt: Array[Float],
-      wo: Int, ldw: Int, out: Int, b: Array[Float], bo: Int, y: Array[Float],
-      yo: Int): Unit = {
+      y: Array[Float], yo: Int, ldy: Int): Unit = {
     val vl = sp.length
     var o = 0
     while (o + 4 * vl <= out) {
-      var a0 = biasVec(b, bo + o)
-      var a1 = biasVec(b, bo + o + vl)
-      var a2 = biasVec(b, bo + o + 2 * vl)
-      var a3 = biasVec(b, bo + o + 3 * vl)
-      var i = 0
-      while (i < in) {
-        val xv = FloatVector.broadcast(sp, x(xo + i))
-        val w0 = wo + i * ldw + o
-        a0 = FloatVector.fromArray(sp, wt, w0).fma(xv, a0)
-        a1 = FloatVector.fromArray(sp, wt, w0 + vl).fma(xv, a1)
-        a2 = FloatVector.fromArray(sp, wt, w0 + 2 * vl).fma(xv, a2)
-        a3 = FloatVector.fromArray(sp, wt, w0 + 3 * vl).fma(xv, a3)
-        i += 1
-      }
-      a0.intoArray(y, yo + o)
-      a1.intoArray(y, yo + o + vl)
-      a2.intoArray(y, yo + o + 2 * vl)
-      a3.intoArray(y, yo + o + 3 * vl)
+      matmulT4x4(x, xo, rows, in, wt, wo + o, ldw, b, bo + o, y, yo + o, ldy)
       o += 4 * vl
     }
-    while (o + vl <= out) {
-      var a0 = biasVec(b, bo + o)
-      var i = 0
-      while (i < in) {
-        a0 = FloatVector.fromArray(sp, wt, wo + i * ldw + o)
-          .fma(FloatVector.broadcast(sp, x(xo + i)), a0)
-        i += 1
+    while (o < out) {
+      val lanes = math.min(vl, out - o)
+      // a full vector of weight lanes must lie inside wt: always true for
+      // a packed panel; otherwise the last columns run as one-row chains
+      if (wo + o + (in - 1) * ldw + vl <= wt.length)
+        matmulT4x1(x, xo, rows, in, wt, wo + o, ldw, lanes, b, bo + o, y,
+          yo + o, ldy)
+      else {
+        var r = 0
+        while (r < rows) {
+          matmulTChains(x, xo + r * in, in, wt, wo, ldw, o, o + lanes, b, bo,
+            y, yo + r * ldy)
+          r += 1
+        }
       }
-      a0.intoArray(y, yo + o)
       o += vl
     }
-    matmulTChains(x, xo, in, wt, wo, ldw, o, out, b, bo, y, yo)
   }
 
   // 4 rows x 4 vectors over output columns [0, 4*vl) of wt/b/y (the caller
@@ -485,39 +475,27 @@ private[graft] object SimdKernel extends DotKernel {
 
   // vectorized ExpF.expf: the same fma/floor/bit-reassembly sequence per
   // lane, so every element matches the scalar kernel bit-for-bit no matter
-  // how it was batched into vectors (and no matter what the JIT did)
-  private val vMinX = FloatVector.broadcast(sp, ExpF.MinX)
-  private val vMaxX = FloatVector.broadcast(sp, ExpF.MaxX)
-  private val vLog2e = FloatVector.broadcast(sp, ExpF.Log2e)
-  private val vNC1 = FloatVector.broadcast(sp, -ExpF.C1)
-  private val vNC2 = FloatVector.broadcast(sp, -ExpF.C2)
-  private val vMagic = FloatVector.broadcast(sp, ExpF.Magic)
-  private val vMagicBits = jdk.incubator.vector.IntVector.broadcast(
-    jdk.incubator.vector.IntVector.SPECIES_PREFERRED, ExpF.MagicBits)
-  private val vP0 = FloatVector.broadcast(sp, ExpF.P0)
-  private val vP1 = FloatVector.broadcast(sp, ExpF.P1)
-  private val vP2 = FloatVector.broadcast(sp, ExpF.P2)
-  private val vP3 = FloatVector.broadcast(sp, ExpF.P3)
-  private val vP4 = FloatVector.broadcast(sp, ExpF.P4)
-  private val vP5 = FloatVector.broadcast(sp, ExpF.P5)
-  private val vOne = FloatVector.broadcast(sp, 1f)
-
+  // how it was batched into vectors (and no matter what the JIT did). The
+  // constants are broadcast here, not kept in vector fields: an object's
+  // field is no JIT constant, and re-loading each one made the exp 1.25x
+  // slower
   private def vexp(x0: FloatVector): FloatVector = {
-    val x = x0.max(vMinX).min(vMaxX)
+    def c(v: Float) = FloatVector.broadcast(sp, v)
+    val x = x0.max(ExpF.MinX).min(ExpF.MaxX)
     // magic-number round-to-nearest: u's low mantissa bits ARE the integer
     // n, so the 2^n reassembly is all bit views — no per-lane converts
-    val u = x.mul(vLog2e).add(vMagic)
-    val nf = u.sub(vMagic)
-    var r = nf.fma(vNC1, x)
-    r = nf.fma(vNC2, r)
-    var y = vP0
-    y = y.fma(r, vP1)
-    y = y.fma(r, vP2)
-    y = y.fma(r, vP3)
-    y = y.fma(r, vP4)
-    y = y.fma(r, vP5)
-    val z = y.fma(r.mul(r), r).add(vOne)
-    val pow2 = u.reinterpretAsInts().sub(vMagicBits).add(127)
+    val u = x.mul(ExpF.Log2e).add(ExpF.Magic)
+    val nf = u.sub(ExpF.Magic)
+    var r = nf.fma(c(-ExpF.C1), x)
+    r = nf.fma(c(-ExpF.C2), r)
+    var y = c(ExpF.P0)
+    y = y.fma(r, c(ExpF.P1))
+    y = y.fma(r, c(ExpF.P2))
+    y = y.fma(r, c(ExpF.P3))
+    y = y.fma(r, c(ExpF.P4))
+    y = y.fma(r, c(ExpF.P5))
+    val z = y.fma(r.mul(r), r).add(1f)
+    val pow2 = u.reinterpretAsInts().sub(ExpF.MagicBits).add(127)
       .lanewise(VectorOperators.LSHL, 23)
       .viewAsFloatingLanes().asInstanceOf[FloatVector]
     z.mul(pow2)
@@ -533,7 +511,7 @@ private[graft] object SimdKernel extends DotKernel {
       val v = FloatVector.fromArray(sp, x, i)
       val y2 = v.mul(v).mul(v).fma(gv, v).mul(cv)
       val e = vexp(y2.neg())
-      v.div(e.add(vOne)).intoArray(x, i)
+      v.div(e.add(1f)).intoArray(x, i)
       i += sp.length
     }
     while (i < len) {
@@ -544,36 +522,39 @@ private[graft] object SimdKernel extends DotKernel {
     }
   }
 
-  override def softmaxScale(x: Array[Float], len: Int, scale: Float): Unit = {
-    // max and sum are computed SCALAR-ORDER (ascending i) even though the
-    // exp itself is vectorized: a lane-wise reduce would order-shift the
-    // f32 sum and break scalar/SIMD bit-identity. max is order-free, but
-    // the sum is not; len is a document's token count, so the scalar sum
-    // loop is noise next to the exp work it follows.
-    var m = Float.NegativeInfinity
+  // scale, max and exp in vectors; the scalar kernel's loops on the tail
+  protected def scaleExp(x: Array[Float], o: Int, len: Int, scale: Float): Unit = {
+    val vl = sp.length
+    val upper = sp.loopBound(len)
+    val sv = FloatVector.broadcast(sp, scale)
+    var mv = FloatVector.broadcast(sp, Float.NegativeInfinity)
     var i = 0
+    while (i < upper) {
+      val v = FloatVector.fromArray(sp, x, o + i).mul(sv)
+      v.intoArray(x, o + i); mv = mv.max(v); i += vl
+    }
+    var m = mv.reduceLanes(VectorOperators.MAX)
     while (i < len) {
-      val v = x(i) * scale; x(i) = v; if (v > m) m = v; i += 1
+      val v = x(o + i) * scale; x(o + i) = v; if (v > m) m = v; i += 1
     }
     val mb = FloatVector.broadcast(sp, m)
+    i = 0
+    while (i < upper) {
+      vexp(FloatVector.fromArray(sp, x, o + i).sub(mb)).intoArray(x, o + i)
+      i += vl
+    }
+    while (i < len) { x(o + i) = ExpF.expf(x(o + i) - m); i += 1 }
+  }
+
+  protected def mulRow(x: Array[Float], o: Int, len: Int, c: Float): Unit = {
     val upper = sp.loopBound(len)
-    i = 0
+    val cv = FloatVector.broadcast(sp, c)
+    var i = 0
     while (i < upper) {
-      vexp(FloatVector.fromArray(sp, x, i).sub(mb)).intoArray(x, i)
+      FloatVector.fromArray(sp, x, o + i).mul(cv).intoArray(x, o + i)
       i += sp.length
     }
-    while (i < len) { x(i) = ExpF.expf(x(i) - m); i += 1 }
-    var sum = 0f
-    i = 0
-    while (i < len) { sum += x(i); i += 1 }
-    val inv = 1f / sum
-    val iv = FloatVector.broadcast(sp, inv)
-    i = 0
-    while (i < upper) {
-      FloatVector.fromArray(sp, x, i).mul(iv).intoArray(x, i)
-      i += sp.length
-    }
-    while (i < len) { x(i) *= inv; i += 1 }
+    while (i < len) { x(o + i) *= c; i += 1 }
   }
 }
 

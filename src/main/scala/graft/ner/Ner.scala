@@ -122,12 +122,13 @@ object Ner {
 
   /** What [[evalPartition]] did: input rows, NULL texts, rows evaluated
     * without a model, tokens, documents cut at the context window,
-    * encoder calls, the nanoseconds they took and the nanoseconds
-    * [[EncoderPool]] helper threads spent on them. [[NerEvalExec]]
+    * encoder calls, the nanoseconds they took, the nanoseconds
+    * [[EncoderPool]] helper threads spent on them and the nanoseconds of
+    * them spent in attention ([[BertEncoder.attentionNanos]]). [[NerEvalExec]]
     * publishes these as SQL metrics. */
   final class Tally {
     var rows, nullRows, noModelRows, tokens, truncated, encoderCalls,
-      encoderNs, encoderHelperNs = 0L
+      encoderNs, encoderHelperNs, encoderAttentionNs = 0L
   }
 
   /** Entity extraction from already-computed logits (argmax -> label
@@ -208,10 +209,12 @@ object Ner {
             if (live.isEmpty) Array.empty[Array[Float]]
             else {
               val h0 = EncoderPool.helperNanos
+              val a0 = BertEncoder.attentionNanos
               val t0 = System.nanoTime()
               val out = encoder.evalBatch(live)
               tally.encoderNs += System.nanoTime() - t0
               tally.encoderHelperNs += EncoderPool.helperNanos - h0
+              tally.encoderAttentionNs += BertEncoder.attentionNanos - a0
               tally.encoderCalls += 1
               out
             }

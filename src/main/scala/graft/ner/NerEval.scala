@@ -147,6 +147,7 @@ object ExtractNer extends Rule[LogicalPlan] {
   * so its encoder calls borrow only the cores of tasks that have finished
   * or not yet started: a lone document uses every idle core, and the
   * `encoderHelperTime` metric reports the helper-thread time it borrowed.
+  * `encoderAttentionTime` is the part of `encoderTime` spent in attention.
   */
 final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     child: SparkPlan) extends UnaryExecNode {
@@ -168,7 +169,9 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     "encoderCalls" -> SQLMetrics.createMetric(sparkContext, "number of encoder calls"),
     "encoderTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "encoder time"),
     "encoderHelperTime" -> SQLMetrics.createNanoTimingMetric(sparkContext,
-      "encoder helper time")
+      "encoder helper time"),
+    "encoderAttentionTime" -> SQLMetrics.createNanoTimingMetric(sparkContext,
+      "encoder attention time")
   ) ++ readMetrics ++ writeMetrics
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -214,7 +217,8 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     "rows" -> t.rows, "nullRows" -> t.nullRows, "noModelRows" -> t.noModelRows,
     "tokens" -> t.tokens, "truncatedDocs" -> t.truncated,
     "encoderCalls" -> t.encoderCalls, "encoderTime" -> t.encoderNs,
-    "encoderHelperTime" -> t.encoderHelperNs
+    "encoderHelperTime" -> t.encoderHelperNs,
+    "encoderAttentionTime" -> t.encoderAttentionNs
   ).foreach { case (k, v) => longMetric(k) += v }
 
   override protected def withNewChildInternal(newChild: SparkPlan): NerEvalExec =

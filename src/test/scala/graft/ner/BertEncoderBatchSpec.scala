@@ -35,16 +35,20 @@ class BertEncoderBatchSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"(split, doc) pairs that diverge: $bad")
   }
 
+  /** SHA-256 over every logit's raw bits, document by document. */
+  private def sha256(logits: Array[Array[Float]]): String = {
+    val buf = java.nio.ByteBuffer.allocate(4 * logits.map(_.length).sum)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    logits.foreach(_.foreach(v => buf.putInt(java.lang.Float.floatToRawIntBits(v))))
+    java.security.MessageDigest.getInstance("SHA-256").digest(buf.array())
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
   test("F32 logits keep their pinned bits (SHA-256 over TileStraddlingDocs)") {
     // The F32 path is one ascending-i fma chain per output on every kernel,
     // so one constant holds with and without jdk.incubator.vector; a kernel
     // or encoder change that moves an F32 logit bit fails here.
-    val logits = enc.evalBatch(TestModels.TileStraddlingDocs)
-    val buf = java.nio.ByteBuffer.allocate(4 * logits.map(_.length).sum)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    logits.foreach(_.foreach(v => buf.putInt(java.lang.Float.floatToRawIntBits(v))))
-    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(buf.array())
-      .map(b => f"${b & 0xff}%02x").mkString
+    val sha = sha256(enc.evalBatch(TestModels.TileStraddlingDocs))
     assert(sha == "b7f27d76d28c82a8059ee40b633bd1181d48d3a7eaebe6ef7266a88170902957",
       s"F32 logits hash $sha on ${Kernels.best.getClass.getSimpleName}")
   }
@@ -69,6 +73,41 @@ class BertEncoderBatchSpec extends AnyFunSuite {
       for (w <- 2 to 4; d <- docs.indices)
         assert(java.util.Arrays.equals(at(w - 1)(d), at(0)(d)),
           s"$form width $w doc $d on ${Kernels.best.getClass.getSimpleName}")
+    }
+  }
+
+  test("attention block and tile edges: batched = per-document, pool widths 1-4 agree") {
+    // segments of 1, 3, 4 and 5 tokens straddle the 4-row tiles and the
+    // softmax's 4-row sums; QBlock - 1, QBlock and QBlock + 1 end a
+    // document's query rows in a 63-, 64- and 1-row block; 128 is two
+    // whole blocks. The tiny model's 32-wide heads take the P.V product's
+    // one-vector tiles, the split-shaped model's 64-wide heads its 4-vector
+    // tiles (on AVX-512). Three copies of the segments put each layer's
+    // attention above the hand-off floor, so widths 2-4 split its heads.
+    val q = BertEncoder.QBlock
+    val lens = Seq(1, 3, 4, 5, q - 1, q, q + 1, 128)
+    def docsFor(m: NerModel): Array[Array[Int]] = {
+      val r = new scala.util.Random(5)
+      lens.map(n => Array.fill(n)(r.nextInt(m.hparams.nVocab))).toArray
+    }
+    // an oracle for the block offsets, which batching cannot see: the
+    // constant is the tiny model's logits from an attention loop that ran
+    // one query row at a time
+    val sha = sha256(enc.evalBatch(docsFor(m)))
+    assert(sha == "f6660147829a158a87a6e3056ce6b14e2bc4a6a11d9ad7b332af322b2d231073",
+      s"F32 block-edge logits hash $sha on ${Kernels.best.getClass.getSimpleName}")
+    val models = ("tiny f32" -> loaded) +:
+      Seq("f32", "f16", "q4").map(f => s"split-shaped $f" -> TestModels.splitShaped(f))
+    for ((name, l) <- models) {
+      val enc = l.encoder
+      val docs = docsFor(l.model)
+      val bad = TestModels.batchedVsSingleMismatches(enc, docs)
+      assert(bad.isEmpty, s"$name: (split, doc) pairs that diverge: $bad")
+      val batch = docs ++ docs ++ docs
+      val at = (1 to 4).map(w => EncoderPool.withWidth(w)(enc.evalBatch(batch)))
+      for (w <- 2 to 4; d <- batch.indices)
+        assert(java.util.Arrays.equals(at(w - 1)(d), at(0)(d)),
+          s"$name width $w doc $d on ${Kernels.best.getClass.getSimpleName}")
     }
   }
 

@@ -168,15 +168,16 @@ class KernelPropertiesSpec extends AnyFunSuite {
     })
   }
 
-  test("F32 path: every kernel is bit-identical on matmulT, gelu, softmaxScale") {
+  test("F32 path: every kernel is bit-identical on matmulT, gelu, softmaxRows") {
     // the F32 encoder runs only these three kernels, so this is what makes
     // its logits independent of which kernel the JVM picked. Shapes hit
-    // every SIMD code path: rows cover the one-row path, full 4-row tiles
-    // and 1-/2-/3-row remainders; out covers the 4-vector tiles, the
-    // single-vector loop and the partial last vector (one-row chains, or
-    // for a row block a full-vector tile when ldw leaves room and chains
-    // when it does not); ldw > out, ldy >= out, nonzero offsets, with and
-    // without bias; gelu/softmax lengths leave a scalar tail.
+    // every SIMD code path: rows cover one row (aliased tile rows), full
+    // 4-row tiles and 1-/2-/3-row remainders; out covers the 4-vector
+    // tiles, the single-vector tiles and the partial last vector (a
+    // full-vector tile when ldw leaves room, one-row chains when it does
+    // not); ldw > out, ldy >= out, nonzero offsets, with and
+    // without bias; gelu/softmax lengths leave a scalar tail (the block
+    // softmax's row shapes and special values have their own property).
     def ragged(n: Int): Int = if (n % lanes == 0) n + 1 else n
     def sameAcrossKernels(run: DotKernel => Array[Float]): Boolean =
       Kernels.all.map(k => bits(run(k))).distinct.size == 1
@@ -212,14 +213,65 @@ class KernelPropertiesSpec extends AnyFunSuite {
       scale <- Gen.choose(0.01f, 4f)
       seed <- Gen.choose(0L, Long.MaxValue)
     } yield (len, scale, seed)
-    holds("gelu/softmaxScale bit-identity")(Prop.forAll(genVec) {
+    holds("gelu/softmaxRows bit-identity")(Prop.forAll(genVec) {
       case (len, scale, seed) =>
         val r = new scala.util.Random(seed)
         val x = Array.fill(len)(r.nextGaussian().toFloat * 4f)
         sameAcrossKernels { k =>
           val y = x.clone(); k.gelu(y, len); y
         } && sameAcrossKernels { k =>
-          val y = x.clone(); k.softmaxScale(y, len, scale); y
+          val y = x.clone(); k.softmaxRows(y, 0, 1, len, len, scale); y
+        }
+    })
+  }
+
+  /** The one-row softmax definition: x*scale, its max, exp(x - max)
+    * through [[ExpF]], the f32 sum in ascending i, times 1/sum. */
+  private def softmaxRow(x: Array[Float], o: Int, len: Int, scale: Float): Unit = {
+    val v = Array.tabulate(len)(i => x(o + i) * scale)
+    var m = Float.NegativeInfinity
+    v.foreach(a => if (a > m) m = a)
+    val e = v.map(a => ExpF.expf(a - m))
+    var sum = 0f
+    e.foreach(sum += _)
+    val inv = 1f / sum
+    for (i <- 0 until len) x(o + i) = e(i) * inv
+  }
+
+  test("softmaxRows: every kernel equals the one-row definition, specials included") {
+    // rows 1-9 hit full 4-row sum blocks and every remainder; len covers
+    // whole vectors and a scalar tail; rows sit ld > len apart with a
+    // sentinel gap a stray store would overwrite; a row may hold -Inf,
+    // +/-large values (x*scale may overflow) and NaN, and a NaN row must
+    // come out all NaN. NaNs compare as NaN, not by payload.
+    val specials = Array(Float.NegativeInfinity, 1e30f, -1e30f, 3e38f,
+      -3e38f, Float.NaN, 0f, -0f)
+    val genRows = for {
+      rows <- Gen.choose(1, 9)
+      len <- Gen.choose(1, 3 * lanes + 5)
+      pad <- Gen.choose(1, 5)
+      xo <- Gen.choose(0, 5)
+      scale <- Gen.oneOf(Gen.choose(0.01f, 4f), Gen.const(0.17677669f))
+      special <- Gen.oneOf(0, 2, 10)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (rows, len, len + pad, xo, scale, special, seed)
+    def canon(a: Array[Float]): Seq[Int] = a.toSeq.map(java.lang.Float.floatToIntBits)
+    holds("softmaxRows vs one-row definition")(Prop.forAll(genRows) {
+      case (rows, len, ld, xo, scale, special, seed) =>
+        val r = new scala.util.Random(seed)
+        val x = Array.tabulate(xo + rows * ld) { _ =>
+          if (r.nextInt(100) < special) specials(r.nextInt(specials.length))
+          else r.nextGaussian().toFloat * 8f
+        }
+        val want = x.clone()
+        for (row <- 0 until rows) softmaxRow(want, xo + row * ld, len, scale)
+        val nanRows = (0 until rows).filter(row =>
+          (0 until len).exists(i => x(xo + row * ld + i).isNaN))
+        Kernels.all.forall { k =>
+          val y = x.clone()
+          k.softmaxRows(y, xo, rows, len, ld, scale)
+          canon(y) == canon(want) && nanRows.forall(row =>
+            (0 until len).forall(i => y(xo + row * ld + i).isNaN))
         }
     })
   }
@@ -247,7 +299,7 @@ class KernelPropertiesSpec extends AnyFunSuite {
     // the encoder runs each linear once per weight matrix with every token
     // as the row block; batching may not change a bit, so each kernel's
     // register tiles must keep every output's one-row accumulation order.
-    // rows 1-9 hit the one-row path, full 4-row tiles and every remainder;
+    // rows 1-9 hit one row, full 4-row tiles and every remainder;
     // every weight form goes through its pack decode; bias or none. y
     // carries a sentinel tail so a store past the block's rows (e.g. an
     // aliased tile row) shows.

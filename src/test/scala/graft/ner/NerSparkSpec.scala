@@ -392,6 +392,16 @@ class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     unsetPath()
   }
 
+  test("NerEvalExec encoderAttentionTime: the tiny model's attention is part of encoderTime") {
+    Ner.register(spark)
+    setPath(syntheticModel("attention.bin"))
+    val exec = nerExecs(docsIn(3, documents).select(Ner.ner(col("text")))).head
+    val attention = exec.metrics("encoderAttentionTime").value
+    val encoder = exec.metrics("encoderTime").value
+    assert(attention > 0 && attention <= encoder, s"attention $attention ns of $encoder")
+    unsetPath()
+  }
+
   private def encoderHelpers: Int =
     Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
       .count(_.getName.startsWith("graft-ner-encoder-"))
