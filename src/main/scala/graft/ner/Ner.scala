@@ -33,9 +33,8 @@ final case class NerEntity(entity: String, label: String)
   *     a call on a literal — the analogue of `FunctionStability::VOLATILE`
   *     (`src/ner_extension.cpp:201-203`).
   *
-  * Scale notes: the model is loaded once per executor JVM and cached keyed by
-  * its source — the configured path, or the broadcast of
-  * [[registerBroadcast]] (the reference equivalently holds one
+  * Scale notes: a conf-path or [[registerBroadcast]] model is loaded once
+  * per executor JVM and cached keyed by its source (the reference holds one
   * process-global model, `src/ner_extension.cpp:16-22`, but without a lock;
   * ours synchronizes). A `ner()` call is evaluated only by [[NerEvalExec]],
   * the way Spark evaluates Python UDFs: [[ExtractNer]] moves each call into
@@ -68,6 +67,13 @@ object Ner {
     */
   final case class BroadcastModel(bytes: Broadcast[Array[Byte]],
       id: java.util.UUID) extends ModelSource
+
+  /** The [[SyntheticModel]] twin whose linear weights are stored as
+    * `ftype` ([[ModelFormat.F32]], [[ModelFormat.F16]] or
+    * [[ModelFormat.Q4_0]]; any other code is no model). The executor
+    * resolves it to the twin's per-JVM lazy val, so no model travels with
+    * a task and the model cache is never touched. */
+  final case class Synthetic(ftype: Int) extends ModelSource
 
   /** Per-JVM model cache keyed by the source currently in effect: the conf
     * path (`Option[String]`) or a broadcast's [[BroadcastModel.id]].
@@ -105,6 +111,10 @@ object Ner {
         cached(path)(path.flatMap(ModelFormat.loadFile))
       case BroadcastModel(bytes, id) =>
         cached(id)(ModelFormat.loadBytes(bytes.value))
+      case Synthetic(ModelFormat.F32) => Some(SyntheticModel.loaded)
+      case Synthetic(ModelFormat.F16) => Some(SyntheticModel.loadedF16)
+      case Synthetic(ModelFormat.Q4_0) => Some(SyntheticModel.loadedQ4)
+      case Synthetic(_) => None
     }
 
   private[graft] def currentModel(): Option[Loaded] = modelFor(ConfPath)
@@ -241,18 +251,17 @@ object Ner {
   }
 
   /** DataFrame-API entry points (native Catalyst expression — no encoder
-    * round-trip; see [[NerExtractExpression]]). 1-arg form: truncate
-    * defaults to true (`src/ner_extension.cpp:53`). The column is
+    * round-trip; see [[NerExtractExpression]]). `truncate` defaults to true
+    * (`src/ner_extension.cpp:53`), `source` to [[ConfPath]]. The column is
     * evaluated by [[NerEvalExec]], so its session needs [[install]]: done
     * here for the active session, and by [[register]],
     * [[registerBroadcast]] and `graft.GraftExtensions`.
     */
   def ner(text: Column): Column = ner(text, GraftSqlShim.column(Literal.TrueLiteral))
-  def ner(text: Column, truncate: Column): Column = {
+  def ner(text: Column, truncate: Column, source: ModelSource = ConfPath): Column = {
     SparkSession.getActiveSession.foreach(install)
     GraftSqlShim.column(NerExtractExpression(
-      GraftSqlShim.expression(text), GraftSqlShim.expression(truncate),
-      ConfPath))
+      GraftSqlShim.expression(text), GraftSqlShim.expression(truncate), source))
   }
 
   /** Arity-dispatching builder behind [[register]], [[registerBroadcast]]

@@ -2,12 +2,13 @@ package graft.ner
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{
-  Expression, NamedLambdaVariable, Unevaluable}
+  Expression, NamedLambdaVariable, Unevaluable, UserDefinedExpression}
 import org.apache.spark.sql.types._
 
 /** The Catalyst expression `ner(text[, truncate])` binds to. It holds the
-  * call — its arguments and the model `source` (the session conf path, or
-  * a broadcast from [[Ner.registerBroadcast]]) — and is never evaluated
+  * call — its arguments and the model `source` (the session conf path, a
+  * broadcast from [[Ner.registerBroadcast]], or a [[SyntheticModel]] twin
+  * named through [[Ner.ner]]) — and is never evaluated
   * itself: like Spark's `PythonUDF` it is [[Unevaluable]], and
   * [[ExtractNer]] moves every call into a [[NerEval]] node that
   * [[NerEvalExec]] runs, whole partitions at a time, through
@@ -26,7 +27,9 @@ import org.apache.spark.sql.types._
   * Not deterministic — the Catalyst analogue of the reference's
   * `FunctionStability::VOLATILE` (`src/ner_extension.cpp:201-203`):
   * results depend on the mutable global model, so `ner('literal')` is
-  * never constant-folded.
+  * never constant-folded. Like Spark's UDFs it is a
+  * [[UserDefinedExpression]], so the analyzer pulls it out of a `GROUP BY`
+  * into a projection; an aggregate's argument rejects it, as `rand()`.
   *
   * A call over a lambda variable (`transform(a, x -> ner(x))`) fails
   * analysis: [[NerEval]] evaluates one call per row, not per array
@@ -34,7 +37,9 @@ import org.apache.spark.sql.types._
   */
 case class NerExtractExpression(text: Expression, truncateExpr: Expression,
     source: Ner.ModelSource)
-    extends Expression with Unevaluable {
+    extends Expression with Unevaluable with UserDefinedExpression {
+
+  override def name: String = "ner"
 
   override def children: Seq[Expression] = Seq(text, truncateExpr)
 

@@ -252,8 +252,9 @@ object Sources {
     * introspection the reference's loader performs implicitly on every
     * load (`src/ner_model.cpp:162-290`), surfaced as a relation.
     *
-    * Rows-only by necessity, like the other model-bound queries (q26/q205/
-    * q208): DuckDB has no GGML reader, so no oracle SQL exists; content is
+    * Rows-only by necessity, like the `ner()` queries that name these twins
+    * as their model source (q26/q205/q208, [[graft.ner.Ner.Synthetic]]):
+    * DuckDB has no GGML reader, so no oracle SQL exists; content is
     * pinned by `GgmlTensorSourceSpec` (schema, directory parity vs
     * [[graft.ner.ModelFormat.scanFile]], filter/column pushdown, and
     * write→scan round-trip against the in-memory model).

@@ -40,7 +40,7 @@ object Tables {
   }
 
   /** Ensure at least `defaultParallelism` partitions before CPU-bound
-    * per-row work (hashing, inference). Parquet can't split a single row
+    * per-row work (hashing, tokenizing). Parquet can't split a single row
     * group, so a small-but-compute-heavy input otherwise runs on one core;
     * on a cluster-scale scan the split count already exceeds the core count
     * and this is a no-op (no shuffle inserted).

@@ -266,26 +266,33 @@ class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(plan.contains("UDF") || plan.toLowerCase.contains("ner"))
   }
 
+  /** `df` ran through a `NerEvalExec`, and no `ner()` call is left
+    * outside a `NerEval` node. */
+  private def onlyViaExec(df: DataFrame): Unit = {
+    assert(nerExecs(df).nonEmpty, df.queryExecution.executedPlan.toString)
+    val left = df.queryExecution.optimizedPlan.collect {
+      case p if !p.isInstanceOf[NerEval] => p.expressions
+    }.flatten.filter(_.exists(_.isInstanceOf[NerExtractExpression]))
+    assert(left.isEmpty, s"ner() left outside NerEval: $left")
+  }
+
   test("ner() in a SELECT, a WHERE, an aggregate, Ner.ner and registerBroadcast plans as NerEvalExec") {
-    // neither an aggregate function's argument nor a grouping expression
-    // may hold ner(): it is not deterministic, so Spark rejects both, as
-    // for rand(); an aggregate reads it from a subquery instead
+    // an aggregate function's argument may not hold ner(): it is not
+    // deterministic, so Spark rejects it there, as for rand(), and an
+    // aggregate reads it from a subquery instead; a GROUP BY on ner() is
+    // pulled into a projection below the aggregate
     Ner.register(spark)
     unsetPath()
     docsIn(1, documents).createOrReplaceTempView("ner_docs")
-    def onlyViaExec(df: DataFrame): Unit = {
-      assert(nerExecs(df).nonEmpty, df.queryExecution.executedPlan.toString)
-      val left = df.queryExecution.optimizedPlan.collect {
-        case p if !p.isInstanceOf[NerEval] => p.expressions
-      }.flatten.filter(_.exists(_.isInstanceOf[NerExtractExpression]))
-      assert(left.isEmpty, s"ner() left outside NerEval: $left")
-    }
     onlyViaExec(spark.sql("SELECT id, ner(text) AS e FROM ner_docs"))
     onlyViaExec(spark.sql("SELECT id FROM ner_docs WHERE size(ner(text)) = 0"))
     onlyViaExec(spark.sql("SELECT sum(size(e)) AS n FROM (SELECT ner(text) AS e FROM ner_docs)"))
     onlyViaExec(spark.sql("SELECT ner(max(text)) AS e, count(*) FROM ner_docs"))
     onlyViaExec(spark.sql("SELECT text, ner(text) AS e, count(*) FROM ner_docs GROUP BY text"))
     onlyViaExec(spark.sql("SELECT id, ner(to_json(ner(text)), false) AS e FROM ner_docs"))
+    val grouped = spark.sql(
+      "SELECT ner(text) AS e, count(*) AS n FROM ner_docs GROUP BY ner(text)")
+    onlyViaExec(grouped)
     onlyViaExec(spark.table("ner_docs").select(col("id"), Ner.ner(col("text")).as("e")))
     val p = tmp("bcast-plan.bin")
     TestModels.writeValid(p, classifierBias = TestModels.biasFor(5))
@@ -300,6 +307,49 @@ class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       .collect().head.getLong(0) == 0)
     assert(spark.sql("SELECT count(*) FROM ner_docs WHERE size(ner(text)) = 0")
       .collect().head.getLong(0) == documents.size)
+    // with no model every row, NULL included, is one [] group
+    assert(grouped.collect().map(r => (entities(r, 0), r.getLong(1))).toSeq ==
+      Seq((Seq.empty, documents.size.toLong)))
+  }
+
+  test("the catalog's ner() queries plan as NerEvalExec") {
+    Ner.register(spark)
+    unsetPath()
+    for (q <- Seq("q24_ner_flagship", "q25_ner_extract_sql",
+        "q26_ner_with_model", "q205_ner_q4_native", "q208_ner_f16_native"))
+      withClue(q) { onlyViaExec(graft.SparkEntry.queries(q)(spark, sf())) }
+  }
+
+  test("a Synthetic source resolves to its twin and leaves the model cache alone") {
+    setPath(syntheticModel("cache-kept.bin"))
+    try {
+      val confModel = Ner.currentModel().get
+      assert(Ner.modelFor(Ner.Synthetic(ModelFormat.F32)).get eq SyntheticModel.loaded)
+      assert(Ner.modelFor(Ner.Synthetic(ModelFormat.F16)).get eq SyntheticModel.loadedF16)
+      assert(Ner.modelFor(Ner.Synthetic(ModelFormat.Q4_0)).get eq SyntheticModel.loadedQ4)
+      assert(Ner.modelFor(Ner.Synthetic(99)).isEmpty)
+      assert(Ner.currentModel().get eq confModel)
+    } finally unsetPath()
+  }
+
+  test("q26/q205/q208 rows equal Ner.evalWith with their synthetic twin") {
+    Ner.register(spark)
+    unsetPath()
+    val docs = graft.queries.Tables.documents(spark, sf())
+      .select("doc_id", "text").collect().map(r => (r.getLong(0), r.getString(1)))
+    for ((q, twin) <- Seq(
+        "q26_ner_with_model" -> SyntheticModel.loaded,
+        "q205_ner_q4_native" -> SyntheticModel.loadedQ4,
+        "q208_ner_f16_native" -> SyntheticModel.loadedF16)) {
+      val want = docs.sortBy(_._1).map { case (id, text) =>
+        val e = Ner.evalWith(Some(twin), text, truncate = true)
+        (id, e.length, e.headOption.map(_.label).orNull)
+      }.toSeq
+      val got = graft.SparkEntry.queries(q)(spark, sf()).collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
+      assert(got == want, q)
+      assert(want.count(_._2 > 0) > want.size / 2, s"$q: too few entities to pin")
+    }
   }
 
   test("SQL ner() equals Ner.evalWith row for row at 1, 2, P and 2P child partitions") {
