@@ -62,7 +62,7 @@ final class BertEncoder(model: NerModel) {
     }
   }
 
-  /** A LayerNorm weight or bias widened once to the f64 [[layerNorm]]
+  /** A LayerNorm weight or bias widened once to the f64 [[addNorm]]
     * applies it in (exact): widening it per element made the normalize
     * loop 4x slower. */
   private def reqD(t: BertTensor): Array[Double] = req(t).map(_.toDouble)
@@ -95,29 +95,21 @@ final class BertEncoder(model: NerModel) {
 
   private val layers: Array[Layer] = Array.tabulate(hp.nLayer)(new Layer(_))
 
-  /** y[n x out] = x[n x in] * W^T + b into `y`: ONE pass per weight
-    * matrix with all n rows as the row block — each panel of W is decoded
-    * into the thread's pack buffer once, then the kernel's register tiles
-    * stream every row over it ([[LinearWeight.apply]]), the reference's one
-    * ggml `mul_mat` over all tokens (`src/ner_model.cpp:315-425`). Each
-    * output's accumulation order is independent of the row count, so
-    * batching never changes a bit.
-    */
-  private def linear(x: Array[Float], n: Int, w: LinearWeight,
-      b: Array[Float], y: Array[Float], s: Scratch): Array[Float] = {
-    w(Kernels.best, x, n, b, y, s.pack)
-    y
-  }
-
-  /** In-place LayerNorm per row, ggml_norm semantics (eps 1e-5) then scale+shift. */
-  private def layerNorm(x: Array[Float], n: Int, d: Int,
-      w: Array[Double], b: Array[Double]): Unit = {
+  /** x += r (no add when `r` is null), then LayerNorm per row in place,
+    * ggml_norm semantics (eps 1e-5) then scale+shift; timed as a norm stage
+    * on `ws`'s clock. */
+  private def addNorm(x: Array[Float], r: Array[Float], n: Int,
+      w: Array[Double], b: Array[Double], ws: EncoderPool.Workspace): Unit = {
+    val t0 = System.nanoTime()
+    val d = nEmbd
+    var i = 0
+    if (r != null) while (i < n * d) { x(i) += r(i); i += 1 }
     val eps = 1e-5
-    var r = 0
-    while (r < n) {
-      val off = r * d
+    var row = 0
+    while (row < n) {
+      val off = row * d
       var mean = 0.0
-      var i = 0
+      i = 0
       while (i < d) { mean += x(off + i); i += 1 }
       mean /= d
       var variance = 0.0
@@ -130,8 +122,9 @@ final class BertEncoder(model: NerModel) {
         x(off + i) = (((x(off + i) - mean) * inv) * w(i) + b(i)).toFloat
         i += 1
       }
-      r += 1
+      row += 1
     }
+    ws.time(EncoderPool.Clock.Norm, t0)
   }
 
   /** Per-thread scratch, sized for a token-count capacity and grown on
@@ -144,16 +137,14 @@ final class BertEncoder(model: NerModel) {
     * Retention note: each thread that calls the encoder holds one Scratch
     * per live encoder, and a replaced encoder's scratch lingers until the
     * encoder itself is GC'd (the ThreadLocal is a field of this encoder, so
-    * it is unreachable as soon as the encoder is). The [[EncoderPool]]
-    * helpers that run a split call's panels and heads keep no Scratch: only
-    * one pack panel and one scores block each, shared by every encoder.
+    * it is unreachable as soon as the encoder is). The pack panel and the
+    * attention scores block are not here: every thread that runs a split
+    * unit, caller or [[EncoderPool]] helper, takes them from its own
+    * [[EncoderPool.Workspace]], shared by every encoder.
     */
   private final class Scratch {
     var cap = 0
     var h, q, k, v, kt, att, t1, inter: Array[Float] = null
-    val scores = new Array[Float](scoresLen)
-    // one weight panel of the widest-input linear (LinearWeight.apply)
-    val pack = new Array[Float](math.max(nEmbd, nInter) * Kernels.best.panel)
     def ensure(nTokens: Int): Unit = if (nTokens > cap) {
       cap = Integer.highestOneBit(math.max(nTokens, hp.nMaxTokens) * 2 - 1)
       h = new Array[Float](cap * nEmbd)
@@ -203,9 +194,12 @@ final class BertEncoder(model: NerModel) {
     var di = 0
     while (di < nDocs) { offs(di + 1) = offs(di) + docs(di).length; di += 1 }
     val n = offs(nDocs)
+    val ws = EncoderPool.workspace
+    val kern = Kernels.best
     val s = scratch.get()
     s.ensure(n)
     val h = s.h
+    var t0 = System.nanoTime()
     di = 0
     while (di < nDocs) {
       val tokens = docs(di)
@@ -226,22 +220,21 @@ final class BertEncoder(model: NerModel) {
       }
       di += 1
     }
-    layerNorm(h, n, nEmbd, lnEw, lnEb)
+    ws.time(EncoderPool.Clock.Norm, t0)
+    addNorm(h, null, n, lnEw, lnEb, ws)
 
     val scale = (1.0 / math.sqrt(dHead.toDouble)).toFloat
-    val attClock = BertEncoder.attention.get()
     // a layer's attention multiply-adds: scores and softmax.V, all heads
     val attMacs = docs.map(d => 2L * d.length * d.length * nEmbd).sum
+    val (q, k, v, att, attOut, inter) = (s.q, s.k, s.v, s.att, s.t1, s.inter)
     var li = 0
     while (li < layers.length) {
       val L = layers(li)
-      val q = linear(h, n, L.qw, L.qb, s.q, s)
-      val k = linear(h, n, L.kw, L.kb, s.k, s)
-      val v = linear(h, n, L.vw, L.vb, s.v, s)
+      L.qw(kern, h, n, L.qb, q)
+      L.kw(kern, h, n, L.kb, k)
+      L.vw(kern, h, n, L.vb, v)
 
-      val att = s.att
-      val kern = Kernels.best
-      val t0 = System.nanoTime()
+      t0 = System.nanoTime()
       // repack K token-major -> embd-major ([embd][token]): the score pass
       // then reads one head's K block as a [dHead x n] unit-stride panel (a
       // matmulT with ldw = n — broadcast-FMA, no reductions). V needs no
@@ -265,8 +258,8 @@ final class BertEncoder(model: NerModel) {
       }
       // one unit per (document, head), document-major; each writes only
       // its head's columns of its document's rows of att
-      EncoderPool.split(nDocs * nHead, attMacs) { (lo, hi, helper) =>
-        val scores = if (helper) EncoderPool.helperScores(scoresLen) else s.scores
+      EncoderPool.split(nDocs * nHead, attMacs) { (lo, hi) =>
+        val scores = EncoderPool.workspace.scores(scoresLen)
         var u = lo
         while (u < hi) {
           val base = offs(u / nHead)
@@ -289,30 +282,31 @@ final class BertEncoder(model: NerModel) {
           u += 1
         }
       }
-      attClock(0) += System.nanoTime() - t0
+      ws.time(EncoderPool.Clock.Attention, t0)
 
-      val attOut = linear(att, n, L.ow, L.ob, s.t1, s)
-      var i = 0
-      val nd = n * nEmbd
-      while (i < nd) { attOut(i) += h(i); i += 1 }
-      layerNorm(attOut, n, nEmbd, L.lnAw, L.lnAb)
+      L.ow(kern, att, n, L.ob, attOut)
+      addNorm(attOut, h, n, L.lnAw, L.lnAb, ws)
 
-      val inter = linear(attOut, n, L.fiW, L.fiB, s.inter, s)
+      L.fiW(kern, attOut, n, L.fiB, inter)
+      t0 = System.nanoTime()
       kern.gelu(inter, n * nInter)
+      ws.time(EncoderPool.Clock.Norm, t0)
       // FFN output overwrites h (not read again this layer), then residual
-      val ffOut = linear(inter, n, L.foW, L.foB, h, s)
-      i = 0
-      while (i < nd) { ffOut(i) += attOut(i); i += 1 }
-      layerNorm(ffOut, n, nEmbd, L.lnOw, L.lnOb)
+      L.foW(kern, inter, n, L.foB, h)
+      addNorm(h, attOut, n, L.lnOw, L.lnOb, ws)
 
       li += 1
     }
 
-    val logits = linear(h, n, clsW, clsB, new Array[Float](n * nLabels), s)
-    Array.tabulate(nDocs) { d =>
+    val logits = new Array[Float](n * nLabels)
+    clsW(kern, h, n, clsB, logits)
+    t0 = System.nanoTime()
+    val out = Array.tabulate(nDocs) { d =>
       java.util.Arrays.copyOfRange(logits, offs(d) * nLabels,
         offs(d + 1) * nLabels)
     }
+    ws.time(EncoderPool.Clock.Norm, t0)
+    out
   }
 }
 
@@ -321,13 +315,6 @@ object BertEncoder {
     * most the token cap, 32 KB on a 128-token model) stay in L2 between
     * the scores product, the softmax and the P.V product. */
   private[ner] val QBlock = 64
-
-  private val attention = ThreadLocal.withInitial[Array[Long]](() => new Array[Long](1))
-
-  /** Nanoseconds this thread's encoder calls have spent in attention: each
-    * layer's K and Q repacks and its (document, head) split, helpers'
-    * share included as the wall time the caller waited. */
-  private[graft] def attentionNanos: Long = attention.get()(0)
 }
 
 /** One tensor of a model's directory ([[BertTensors]]): its full name, its

@@ -17,13 +17,13 @@ import org.apache.spark.sql.graft.GraftSqlShim
   * call ([[withSlot]]). Inside the call, [[split]] `tryAcquire`s the free
   * permits, up to one per work unit, and deals the units out as contiguous
   * ranges: the caller runs the first and `slots − 1` named daemon helper
-  * threads run the rest, each on its own helper buffers ([[helperPack]],
-  * [[helperScores]]). Nobody ever waits for a permit: with every slot busy
-  * (a many-task stage) a call runs inline exactly as on one core, and a
-  * caller holding no permit never splits. The units are independent and
-  * each is computed the same way whichever thread runs it, so a split never
-  * changes a bit of the result — the morsel-driven scheme of Leis et al.
-  * (SIGMOD 2014) applied inside one operator call.
+  * threads run the rest. Nobody ever waits for a permit: with every slot
+  * busy (a many-task stage) a call runs inline exactly as on one core, and
+  * a caller holding no permit never splits. A unit takes only its range and
+  * its scratch from the running thread's [[Workspace]], so it is computed
+  * the same way whichever thread runs it and a split never changes a bit of
+  * the result — the morsel-driven scheme of Leis et al. (SIGMOD 2014)
+  * applied inside one operator call.
   */
 private[graft] object EncoderPool {
 
@@ -36,9 +36,47 @@ private[graft] object EncoderPool {
     * many-task stage's tail they cost `ner_sql_tiny` 7-14 %. */
   val HandoffFloorMacs: Long = 1L << 23
 
-  /** Units [lo, hi) of a split; `helper` says whether the range runs on a
-    * helper thread, which must use the helper buffers. */
-  trait Work { def apply(lo: Int, hi: Int, helper: Boolean): Unit }
+  /** Units [lo, hi) of a split, run on whichever thread claims them. */
+  trait Work { def apply(lo: Int, hi: Int): Unit }
+
+  /** The slots of a [[Workspace.clock]]: nanoseconds of the linears
+    * ([[LinearWeight.apply]]), of attention (the K and Q repacks and the
+    * (document, head) split), of the norm stages (embeddings, LayerNorms,
+    * residual adds, GELU, the logits copy), each the calling thread's wall
+    * time, and of the helper threads this thread's splits borrowed. */
+  object Clock {
+    final val Linear = 0; final val Attention = 1; final val Norm = 2; final val Helper = 3
+    final val Slots = 4
+  }
+
+  /** One thread's encoder state: its pack panel and attention scores
+    * block, grown on demand; the task slot it holds ([[holdSlot]]); and
+    * its stage [[clock]]. Every encoder shares it: safe because a forward
+    * pass never re-enters one (nothing it calls runs an encoder), and a
+    * unit uses the buffers only within its own range. */
+  final class Workspace private[EncoderPool] {
+    private var packBuf, scoresBuf = new Array[Float](0)
+    private[EncoderPool] var held: Slot = null
+    /** Nanoseconds by [[Clock]] slot, summed over this thread's calls. */
+    val clock = new Array[Long](Clock.Slots)
+
+    /** Adds the nanoseconds since `t0` to clock slot `k`. */
+    def time(k: Int, t0: Long): Unit = clock(k) += System.nanoTime() - t0
+
+    /** This thread's pack buffer of at least `n` floats. */
+    def pack(n: Int): Array[Float] = { if (packBuf.length < n) packBuf = new Array(n); packBuf }
+
+    /** This thread's scores block of at least `n` floats. */
+    def scores(n: Int): Array[Float] = { if (scoresBuf.length < n) scoresBuf = new Array(n); scoresBuf }
+
+    /** The live slot this thread holds, else null. */
+    private[EncoderPool] def holding: Slot = if (held != null && held.live) held else null
+  }
+
+  private val workspaces = ThreadLocal.withInitial[Workspace](() => new Workspace)
+
+  /** The running thread's [[Workspace]]. */
+  def workspace: Workspace = workspaces.get
 
   /** One permit per task slot of the SparkEnv `env` (null outside Spark). */
   private final class Gate(val env: SparkEnv, val slots: Int) {
@@ -65,25 +103,20 @@ private[graft] object EncoderPool {
     }
   }
 
-  private val held = new ThreadLocal[Slot]
-
-  private def holding: Slot = {
-    val s = held.get
-    if (s != null && s.live) s else null
-  }
-
   private val NoSlot = { val s = new Slot(null); s.live = false; s }
 
   /** This thread's permit if it holds none yet and one is free, for a task
     * to keep from its first row to its last; else a slot that holds
     * nothing. */
-  def holdSlot(): Slot =
-    if (holding != null) NoSlot
+  def holdSlot(): Slot = {
+    val ws = workspace
+    if (ws.holding != null) NoSlot
     else {
       val g = currentGate()
-      if (g.permits.tryAcquire()) { val s = new Slot(g); held.set(s); s }
+      if (g.permits.tryAcquire()) { val s = new Slot(g); ws.held = s; s }
       else NoSlot
     }
+  }
 
   /** `body` holding a permit: this thread's own, or one taken for the
     * call when a permit is free (released after it). */
@@ -106,28 +139,25 @@ private[graft] object EncoderPool {
     * thread holds no permit or no other permit is free; else over as many
     * helpers as free permits allow (up to one per unit). Returns after
     * every range has run; the first exception any range threw is rethrown
-    * here. */
+    * here. The helper-thread time a split borrows goes to this thread's
+    * [[Clock.Helper]]. */
   def split(units: Int, macs: Long)(work: Work): Unit = {
-    val own = if (units < 2 || macs < HandoffFloorMacs) null else holding
+    val ws = workspace
+    val own = if (units < 2 || macs < HandoffFloorMacs) null else ws.holding
     val g = if (own == null) null else own.gate
     var k = 0
     if (g != null)
       while (k < math.min(units, g.slots) - 1 && g.permits.tryAcquire()) k += 1
-    if (k == 0) work(0, units, helper = false)
+    if (k == 0) work(0, units)
     else try {
       Helpers.ensure(g.slots - 1)
       val job = new Split(units, k + 1, work)
       var i = 0
       while (i < k) { Helpers.queue.add(job); i += 1 }
       job.runCaller()
-      borrowed.get()(0) += job.helperNs.get
+      ws.clock(Clock.Helper) += job.helperNs.get
     } finally g.permits.release(k)
   }
-
-  private val borrowed = ThreadLocal.withInitial[Array[Long]](() => new Array[Long](1))
-
-  /** Helper-thread nanoseconds this thread's splits have borrowed. */
-  def helperNanos: Long = borrowed.get()(0)
 
   /** `units` dealt into `ranges` contiguous ranges; range 0 is the
     * caller's, the others go to whoever claims them first, the caller
@@ -139,14 +169,13 @@ private[graft] object EncoderPool {
     private val failure = new AtomicReference[Throwable]
     val helperNs = new AtomicLong
 
-    private def range(r: Int, helper: Boolean): Unit =
-      work((r.toLong * units / ranges).toInt,
-        ((r + 1).toLong * units / ranges).toInt, helper)
+    private def range(r: Int): Unit =
+      work((r.toLong * units / ranges).toInt, ((r + 1).toLong * units / ranges).toInt)
 
-    private def drain(helper: Boolean): Unit = {
+    private def drain(): Unit = {
       var r = next.getAndIncrement()
       while (r < ranges && failure.get == null) {
-        range(r, helper)
+        range(r)
         r = next.getAndIncrement()
       }
     }
@@ -155,12 +184,12 @@ private[graft] object EncoderPool {
 
     def run(): Unit = {
       val t0 = System.nanoTime()
-      try drain(helper = true) catch { case t: Throwable => fail(t) }
+      try drain() catch { case t: Throwable => fail(t) }
       finally { helperNs.addAndGet(System.nanoTime() - t0); running.countDown() }
     }
 
     def runCaller(): Unit = {
-      try { range(0, helper = false); drain(helper = false) }
+      try { range(0); drain() }
       catch { case t: Throwable => fail(t) }
       // the helpers write the caller's output: wait for them even when
       // interrupted (each range is bounded), then restore the interrupt
@@ -191,26 +220,5 @@ private[graft] object EncoderPool {
         started += 1
       }
     }
-  }
-
-  /** A helper thread's buffers: one weight panel and one block of
-    * attention scores, grown on demand — never a full encoder scratch. */
-  private final class HelperBuffers {
-    var pack, scores = new Array[Float](0)
-  }
-  private val helperBuffers = ThreadLocal.withInitial[HelperBuffers](() => new HelperBuffers)
-
-  /** This helper thread's pack buffer of at least `n` floats. */
-  def helperPack(n: Int): Array[Float] = {
-    val b = helperBuffers.get
-    if (b.pack.length < n) b.pack = new Array[Float](n)
-    b.pack
-  }
-
-  /** This helper thread's scores block of at least `n` floats. */
-  def helperScores(n: Int): Array[Float] = {
-    val b = helperBuffers.get
-    if (b.scores.length < n) b.scores = new Array[Float](n)
-    b.scores
   }
 }

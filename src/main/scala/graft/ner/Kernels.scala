@@ -135,17 +135,19 @@ private[graft] abstract class LinearWeight(val in: Int, val out: Int) {
   def pack(o0: Int, pw: Int, dst: Array[Float], ldp: Int): Unit
 
   /** y(r*out + o) = b(o) + sum_i x(r*in + i) * W(o, i) for r in [0, n), a
-    * null `b` meaning no bias; `buf` holds one panel (`in * kern.panel`
-    * floats). A narrow last panel is packed only as wide as it is; the
-    * SIMD tile computes the lanes past it but never stores them. The
-    * panels are the units of an [[EncoderPool.split]]: idle cores run
-    * contiguous panel ranges on their own pack buffers, and each panel
-    * writes only its own columns of `y`. */
+    * null `b` meaning no bias. A narrow last panel is packed only as wide
+    * as it is; the SIMD tile computes the lanes past it but never stores
+    * them. The panels are the units of an [[EncoderPool.split]]: each
+    * range packs into the running thread's workspace and writes only its
+    * own columns of `y`. The call's wall time goes to the calling thread's
+    * [[EncoderPool.Clock.Linear]]. */
   final def apply(kern: DotKernel, x: Array[Float], n: Int, b: Array[Float],
-      y: Array[Float], buf: Array[Float]): Unit = {
+      y: Array[Float]): Unit = {
     val p = kern.panel
-    EncoderPool.split((out + p - 1) / p, n.toLong * in * out) { (lo, hi, helper) =>
-      val dst = if (helper) EncoderPool.helperPack(in * p) else buf
+    val ws = EncoderPool.workspace
+    val t0 = System.nanoTime()
+    EncoderPool.split((out + p - 1) / p, n.toLong * in * out) { (lo, hi) =>
+      val dst = EncoderPool.workspace.pack(in * p)
       val end = math.min(out, hi * p)
       var o0 = lo * p
       while (o0 < end) {
@@ -155,6 +157,7 @@ private[graft] abstract class LinearWeight(val in: Int, val out: Int) {
         o0 += p
       }
     }
+    ws.time(EncoderPool.Clock.Linear, t0)
   }
 }
 

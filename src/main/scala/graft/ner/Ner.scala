@@ -132,13 +132,15 @@ object Ner {
 
   /** What [[evalPartition]] did: input rows, NULL texts, rows evaluated
     * without a model, tokens, documents cut at the context window,
-    * encoder calls, the nanoseconds they took, the nanoseconds
-    * [[EncoderPool]] helper threads spent on them and the nanoseconds of
-    * them spent in attention ([[BertEncoder.attentionNanos]]). [[NerEvalExec]]
-    * publishes these as SQL metrics. */
+    * encoder calls, the nanoseconds they took, and those calls' share of
+    * the calling thread's stage clock ([[EncoderPool.Clock]]: linear,
+    * attention and norm nanoseconds, and the nanoseconds [[EncoderPool]]
+    * helper threads spent on them). [[NerEvalExec]] publishes these as SQL
+    * metrics. */
   final class Tally {
     var rows, nullRows, noModelRows, tokens, truncated, encoderCalls,
-      encoderNs, encoderHelperNs, encoderAttentionNs = 0L
+      encoderNs = 0L
+    val clockNs = new Array[Long](EncoderPool.Clock.Slots)
   }
 
   /** Entity extraction from already-computed logits (argmax -> label
@@ -218,13 +220,12 @@ object Ner {
           val logits =
             if (live.isEmpty) Array.empty[Array[Float]]
             else {
-              val h0 = EncoderPool.helperNanos
-              val a0 = BertEncoder.attentionNanos
+              val clock = EncoderPool.workspace.clock
+              val c0 = clock.clone()
               val t0 = System.nanoTime()
               val out = encoder.evalBatch(live)
               tally.encoderNs += System.nanoTime() - t0
-              tally.encoderHelperNs += EncoderPool.helperNanos - h0
-              tally.encoderAttentionNs += BertEncoder.attentionNanos - a0
+              c0.indices.foreach(k => tally.clockNs(k) += clock(k) - c0(k))
               tally.encoderCalls += 1
               out
             }

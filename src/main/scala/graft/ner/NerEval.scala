@@ -147,7 +147,11 @@ object ExtractNer extends Rule[LogicalPlan] {
   * so its encoder calls borrow only the cores of tasks that have finished
   * or not yet started: a lone document uses every idle core, and the
   * `encoderHelperTime` metric reports the helper-thread time it borrowed.
-  * `encoderAttentionTime` is the part of `encoderTime` spent in attention.
+  * `encoderLinearTime`, `encoderAttentionTime` and `encoderNormTime` are
+  * the parts of `encoderTime` spent in the linears, in attention and in
+  * the norm stages (embeddings, LayerNorms, residual adds, GELU, the
+  * logits copy), each read from the task thread's stage clock
+  * ([[EncoderPool.Clock]]); together they cover nearly all of it.
   */
 final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     child: SparkPlan) extends UnaryExecNode {
@@ -167,12 +171,9 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     "tokens" -> SQLMetrics.createMetric(sparkContext, "number of tokens"),
     "truncatedDocs" -> SQLMetrics.createMetric(sparkContext, "number of truncated documents"),
     "encoderCalls" -> SQLMetrics.createMetric(sparkContext, "number of encoder calls"),
-    "encoderTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "encoder time"),
-    "encoderHelperTime" -> SQLMetrics.createNanoTimingMetric(sparkContext,
-      "encoder helper time"),
-    "encoderAttentionTime" -> SQLMetrics.createNanoTimingMetric(sparkContext,
-      "encoder attention time")
-  ) ++ readMetrics ++ writeMetrics
+    "encoderTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "encoder time")
+  ) ++ NerEvalExec.ClockMetrics.map { case (k, d) =>
+    k -> SQLMetrics.createNanoTimingMetric(sparkContext, d) } ++ readMetrics ++ writeMetrics
 
   override protected def doExecute(): RDD[InternalRow] = {
     val input = child.execute()
@@ -213,19 +214,23 @@ final case class NerEvalExec(call: NerExtractExpression, result: Attribute,
     }
   }
 
-  private def publish(t: Ner.Tally): Unit = Seq(
+  private def publish(t: Ner.Tally): Unit = (Seq(
     "rows" -> t.rows, "nullRows" -> t.nullRows, "noModelRows" -> t.noModelRows,
     "tokens" -> t.tokens, "truncatedDocs" -> t.truncated,
-    "encoderCalls" -> t.encoderCalls, "encoderTime" -> t.encoderNs,
-    "encoderHelperTime" -> t.encoderHelperNs,
-    "encoderAttentionTime" -> t.encoderAttentionNs
-  ).foreach { case (k, v) => longMetric(k) += v }
+    "encoderCalls" -> t.encoderCalls, "encoderTime" -> t.encoderNs
+  ) ++ NerEvalExec.ClockMetrics.map(_._1).zip(t.clockNs))
+    .foreach { case (k, v) => longMetric(k) += v }
 
   override protected def withNewChildInternal(newChild: SparkPlan): NerEvalExec =
     copy(child = newChild)
 }
 
 object NerEvalExec {
+  /** The SQL metric (name, description) of each [[EncoderPool.Clock]] slot. */
+  private val ClockMetrics = Seq("encoderLinearTime" -> "encoder linear time",
+    "encoderAttentionTime" -> "encoder attention time",
+    "encoderNormTime" -> "encoder norm time", "encoderHelperTime" -> "encoder helper time")
+
   /** Entities as Catalyst `ArrayData` of `(entity, label)` rows; NULL stays NULL. */
   private def arrayOf(entities: Array[NerEntity]): GenericArrayData =
     if (entities == null) null

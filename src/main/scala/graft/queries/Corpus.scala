@@ -653,6 +653,7 @@ object Corpus {
         count(lit(1)).as("n_terms_hit"))
   }
 
+  /** q131: BM25 top 20, every document scored against the fixed three-term query. */
   private def q131(s: SparkSession, d: String): DataFrame =
     bm25Scored(s, d)
       .orderBy(col("bm25").desc, col("doc_id"))
@@ -1620,6 +1621,8 @@ object Corpus {
                          concat(acc, x), concat(acc, '|', x)))"""))
     .select(col("wc"), col("syms"))
 
+  /** q172: BPE vocabulary induction, three rounds of merging the most
+    * frequent adjacent symbol pair. */
   private def q172(s: SparkSession, d: String): DataFrame = {
     // corpus-scale histogram; persisted — all three rounds and the final
     // union re-derive from it (scoped release after the consuming action)
@@ -2703,6 +2706,7 @@ object Corpus {
     */
   private val DeltaMarkers = 8
 
+  /** q314: Burrows' Delta between every pair of sources over the corpus's most frequent words. */
   private def q314(s: SparkSession, d: String): DataFrame = {
     val tf = documents(s, d)
       .select(col("source"), explode(wsCol).as("w"))
@@ -2799,6 +2803,8 @@ object Corpus {
   private val MmrPool = 20
   private val MmrK = 5
 
+  /** q317: MMR re-ranking of the BM25 candidate pool, relevance traded
+    * against Jaccard redundancy. */
   private def q317(s: SparkSession, d: String): DataFrame = {
     val cand = bm25Scored(s, d)
       .orderBy(col("bm25").desc, col("doc_id")).limit(MmrPool)

@@ -769,6 +769,8 @@ object Dedup {
     */
   private val DupGramN = 5
 
+  /** q132: duplicate n-gram ratio, the share of each document's distinct word
+    * 5-grams that also occur in another document. */
   private def q132(s: SparkSession, d: String): DataFrame = {
     val grams = parallelize(s, documents(s, d))
       .withColumn("ws", split(trim(col("text")), "\\s+"))
@@ -842,6 +844,8 @@ object Dedup {
           .as(Seq("seg_idx", "seg")))
       .withColumn("okey", struct(col("doc_id"), col("seg_idx")))
 
+  /** q141: segment-grain exact dedup, each distinct 10-word segment kept only
+    * at its first occurrence, reported per document. */
   private def q141(s: SparkSession, d: String): DataFrame = {
     val segs = segmentStream(s, d)
     val firsts = segs.groupBy(col("seg"))
@@ -1160,6 +1164,8 @@ object Dedup {
     (pairs, sig, sh)
   }
 
+  /** q143: MinHash accuracy audit, each LSH candidate pair's estimated
+    * against its exact shingle Jaccard. */
   private def q143(s: SparkSession, d: String): DataFrame = {
     val (pairs, sig, sh) = candJaccard(s, d)
     val out = pairs

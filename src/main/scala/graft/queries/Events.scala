@@ -846,6 +846,8 @@ object Events {
            round(f.diff, 8) AS diff, f.exceeds, p.n_exceed, p.p_perm
     FROM flagged f, p ORDER BY f.b"""
 
+  /** q187: A/B experiment readout, each arm's conversion rate and the pooled
+    * two-proportion z-statistic between the arms. */
   private def q187(s: SparkSession, d: String): DataFrame = {
     val users = events(s, d)
       .groupBy(col("user_id"))
@@ -3837,6 +3839,7 @@ object Events {
             .cast("double")), 6).as("acf"))
   }
 
+  /** q283: autocorrelation at lags 1-7 of each event type's daily count series. */
   private def q283(s: SparkSession, d: String): DataFrame =
     acfFrame(s, d, AcfMaxLag).orderBy(col("event_type"), col("lag"))
 
@@ -4819,6 +4822,8 @@ object Events {
     math.round(math.log((1.0 - SprtP1) / (1.0 - SprtP0)) * 1e6)
   private[graft] val SprtUp = math.round(math.log(19.0) * 1e6)
 
+  /** q318: SPRT monitoring walk, each arm's cumulative daily log-likelihood
+    * ratio with its accept or continue decision. */
   private def q318(s: SparkSession, d: String): DataFrame = {
     val dayUs = 86400000000L
     val ud = events(s, d)

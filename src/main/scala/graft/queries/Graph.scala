@@ -76,6 +76,8 @@ object Graph {
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= minSupport)
 
+  /** q136: exact triangle count of the co-ordered-parts graph by the oriented
+    * wedge-close algorithm. */
   private def q136(s: SparkSession, d: String): DataFrame = {
     val e = supportPairs(s, d, TriangleSupport).select(col("a"), col("b"))
     val deg = e.select(col("a").as("v"))
@@ -154,6 +156,8 @@ object Graph {
     */
   private val CopurchaseCap = 40
 
+  /** q137: co-purchase customer similarity, the top 20 customer pairs by
+    * overlap of their purchased-part sets. */
   private def q137(s: SparkSession, d: String): DataFrame = {
     val inc = lineitem(s, d)
       .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
@@ -396,6 +400,8 @@ object Graph {
   private val KCoreK = 3
   private val KCoreRounds = 5
 
+  /** q310: k-core peeling trajectory of the co-purchase graph, the vertices
+    * and edges left after each round. */
   private def q310(s: SparkSession, d: String): DataFrame = {
     val e0 = supportPairs(s, d, TriangleSupport).select(col("a"), col("b"))
     val edges = e0
@@ -487,6 +493,8 @@ object Graph {
   private val HitsRounds = 2
   private val HitsTopK = 15
 
+  /** q313: HITS hub and authority scores on the customer → part purchase
+    * graph, iterated exactly in int64. */
   private def q313(s: SparkSession, d: String): DataFrame = {
     val inc = lineitem(s, d)
       .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
@@ -622,6 +630,8 @@ object Graph {
     (edges, verts, rounds.result())
   }
 
+  /** q315: synchronous label propagation on the support graph, the label
+    * census after each round. */
   private def q315(s: SparkSession, d: String): DataFrame = {
     val (_, verts, rounds) = lpaRun(s, d)
     def census(r: Int, labels: DataFrame): DataFrame =

@@ -466,6 +466,8 @@ object Sketches {
     */
   private val KmvK = 64
 
+  /** q280: KMV distinct-count sketch per source, with mergeable unions and
+    * Jaccard estimates between sources. */
   private def q280(s: SparkSession, d: String): DataFrame = {
     val toks = parallelize(s, documents(s, d))
       .select(col("source"),

@@ -259,7 +259,7 @@ object Sources {
     * [[graft.ner.ModelFormat.scanFile]], filter/column pushdown, and
     * write→scan round-trip against the in-memory model).
     */
-  def q277(s: SparkSession, dir: String): DataFrame = {
+  private def q277(s: SparkSession, dir: String): DataFrame = {
     val out = sinkDir(s, "q277_models")
     new java.io.File(out).mkdirs()
     graft.ner.ModelFormat.write(

@@ -94,6 +94,8 @@ object TextOps {
           .when(col("s_db") >= col("s_etl"), "db")
           .otherwise("etl"))
 
+  /** q32: per-document language ID, the marker scores of each class and their
+    * argmax label, ordered by doc_id. */
   private def q32(s: SparkSession, d: String): DataFrame =
     langPred(s, d).orderBy(col("doc_id"))
 

@@ -582,6 +582,8 @@ object Variety {
     SELECT nk, root, CAST(depth AS INT) AS depth
     FROM anc ORDER BY nk, root"""
 
+  /** q100: ancestor chains over the synthetic nation parent edge through
+    * Spark's WITH RECURSIVE, the same SQL text DuckDB runs. */
   private def q100(s: SparkSession, d: String): DataFrame = {
     nation(s, d).createOrReplaceTempView("graft_nation_rec")
     s.sql(recursiveSql("graft_nation_rec"))

@@ -544,6 +544,8 @@ object Vec {
     */
   private val SemDedupTau = 0.3
 
+  /** q130: semantic dedup, near-duplicate embedding pairs found only inside
+    * each IVF cell and the higher vec_id of each pruned. */
   private def q130(s: SparkSession, d: String): DataFrame = {
     // vector norms are per-VECTOR, not per-pair — compute them once before
     // the self-join so each candidate pair evaluates one dot product, not
@@ -619,6 +621,8 @@ object Vec {
     if (hex.charAt(0) <= '7') 1 else -1
   }
 
+  /** q134: Johnson–Lindenstrauss audit, how well pairwise cosine survives a
+    * 64 → 16 dim ±1 sign projection, banded by the true cosine. */
   private def q134(s: SparkSession, d: String): DataFrame = {
     // the sign matrix as ONE typedLit literal + an interpreted HOF fold:
     // the unrolled alternative (16 sums of 64 element_at*sign terms) builds
@@ -695,6 +699,9 @@ object Vec {
   private val PqSub = Dim / PqM
   private val PqK = 8
 
+  /** q135: product quantization with asymmetric-distance search, each vector
+    * coded as four sub-centroid ids and ranked against the query's distance
+    * tables. */
   private def q135(s: SparkSession, d: String): DataFrame = {
     val e = parallelize(s, embeddings(s, d))
     val cb = e.filter(col("vec_id") < PqK)
@@ -1279,6 +1286,8 @@ object Vec {
       .select(col("qid"), explode(col("top")).as("e"))
       .select(col("qid"), col("e.key").as("vec_id"))
 
+  /** q331: binary quantization recall, Hamming top-k over 64-bit sign words
+    * against the exact cosine top-k. */
   private def q331(s: SparkSession, d: String): DataFrame = {
     val (q, scored) = binScored(s, d)
     def topk(df: DataFrame, score: Column): DataFrame =
@@ -2924,6 +2933,8 @@ object Vec {
       .select(col(grp), col("e.key").as(other), col("e.score").as("cs"),
         (col("pos") + 1).as("rk"))
 
+  /** q217: margin-based parallel-pair mining, candidate pairs scored by
+    * cosine over the mean cosine of each endpoint's nearest neighbours. */
   private def q217(s: SparkSession, d: String): DataFrame = {
     val pairs = bitextPairs(s, d)
     // r15: neighborhood means ride the NATIVE k-bounded topk_score_avg
@@ -3522,6 +3533,8 @@ object Vec {
         floor(element_at(col("p"), 2) / lit(DbEps)).cast("long").as("cy"))
   }
 
+  /** q278: grid-cell DBSCAN over the 2-D sign projection of the embeddings,
+    * dense cells as cores and the rest as border or noise. */
   private def q278(s: SparkSession, d: String): DataFrame = {
     val pts = dbPts(s, d).localCheckpoint(true)
     val core = pts.groupBy(col("cx"), col("cy"))
@@ -3699,6 +3712,8 @@ object Vec {
     */
   private val KcSteps = 5
 
+  /** q279: k-center greedy coreset, farthest-point sampling of the embeddings
+    * for a fixed number of steps. */
   private def q279(s: SparkSession, d: String): DataFrame = {
     val base = embeddings(s, d)
       .select(col("vec_id"), col("label").cast("long").as("label"),

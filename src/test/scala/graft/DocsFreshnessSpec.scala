@@ -31,6 +31,16 @@ class DocsFreshnessSpec extends AnyFunSuite {
         s"stale=${stale.toSeq.sorted.mkString(",")}")
   }
 
+  test("every docs/QUERIES.md row has a Summary") {
+    // the generator leaves the cell empty when the query's method has no
+    // scaladoc directly above it
+    val empty = rows.filter(_.split("\\|", -1).lift(4).forall(_.trim.isEmpty))
+      .map(_.split("\\|")(1).trim)
+    assert(empty.isEmpty,
+      s"rows with no Summary - give each method a scaladoc and re-run " +
+        s"tools/gen_queries_md.py: ${empty.mkString(", ")}")
+  }
+
   test("every docs/QUERIES.md file:line is its QueryDef or the def it names") {
     val row = """\| (q\w+) \|[^|]*\| `([^`:]+):(\d+)` \|.*""".r
     val files = scala.collection.mutable.Map.empty[String, Vector[String]]

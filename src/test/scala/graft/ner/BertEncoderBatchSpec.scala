@@ -63,10 +63,11 @@ class BertEncoderBatchSpec extends AnyFunSuite {
       Array.fill(n)(r.nextInt(TestModels.DefaultVocab.length)))
     for (form <- Seq("f32", "f16", "q4")) {
       val enc = TestModels.splitShaped(form).encoder
+      val clock = EncoderPool.workspace.clock
       val at = (1 to 4).map { w =>
-        val before = EncoderPool.helperNanos
+        val before = clock(EncoderPool.Clock.Helper)
         val logits = EncoderPool.withWidth(w)(enc.evalBatch(docs))
-        val borrowed = EncoderPool.helperNanos - before
+        val borrowed = clock(EncoderPool.Clock.Helper) - before
         assert((borrowed > 0) == (w > 1), s"$form width $w: $borrowed helper ns")
         logits
       }

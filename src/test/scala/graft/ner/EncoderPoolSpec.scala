@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EncoderPoolSpec extends AnyFunSuite {
 
-  /** Helper-thread time this thread's splits borrowed: it moves exactly
-    * when a split handed work to a helper. */
-  private def borrowed: Long = EncoderPool.helperNanos
+  /** Helper-thread time this thread's splits borrowed, its clock's helper
+    * slot: it moves exactly when a split handed work to a helper. */
+  private def borrowed: Long = EncoderPool.workspace.clock(EncoderPool.Clock.Helper)
 
   /** An F32 weight with `panels` panels of the kernel's width, an uneven
     * count over 2-4 workers, seeded; and 256 activation rows over it, above
@@ -30,11 +30,10 @@ class EncoderPoolSpec extends AnyFunSuite {
   test("a linear product is the same bits at widths 1-4 on every kernel") {
     for (kern <- Kernels.all; panels <- Seq(1, 5, 7)) {
       val (w, x, n, b) = shape(kern, panels)
-      val buf = new Array[Float](w.in * kern.panel)
       val at = (1 to 4).map { width =>
         val y = new Array[Float](n * w.out)
         val before = borrowed
-        EncoderPool.withWidth(width)(EncoderPool.withSlot(w(kern, x, n, b, y, buf)))
+        EncoderPool.withWidth(width)(EncoderPool.withSlot(w(kern, x, n, b, y)))
         assert((borrowed > before) == (width > 1 && panels > 1),
           s"${kern.getClass.getSimpleName} $panels panels width $width")
         y
@@ -101,16 +100,15 @@ class EncoderPoolSpec extends AnyFunSuite {
           good.pack(o0, pw, dst, ldp)
         }
     }
-    val buf = new Array[Float](good.in * kern.panel)
     val y = new Array[Float](n * good.out)
     EncoderPool.withWidth(4) {
       val e = intercept[IllegalStateException] {
-        EncoderPool.withSlot(failing(kern, x, n, b, y, buf))
+        EncoderPool.withSlot(failing(kern, x, n, b, y))
       }
       assert(e.getMessage == "pack failed on a helper")
       assert(EncoderPool.freePermits == 4)
       val before = borrowed
-      EncoderPool.withSlot(good(kern, x, n, b, y, buf))
+      EncoderPool.withSlot(good(kern, x, n, b, y))
       assert(borrowed > before)
       assert(EncoderPool.freePermits == 4)
     }

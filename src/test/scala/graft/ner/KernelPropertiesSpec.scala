@@ -142,7 +142,7 @@ class KernelPropertiesSpec extends AnyFunSuite {
   private def product(k: DotKernel, w: LinearWeight, x: Array[Float],
       rows: Int, b: Array[Float]): Array[Float] = {
     val y = new Array[Float](rows * w.out)
-    w(k, x, rows, b, y, new Array[Float](w.in * k.panel))
+    w(k, x, rows, b, y)
     y
   }
 
@@ -310,13 +310,12 @@ class KernelPropertiesSpec extends AnyFunSuite {
         val x = Array.fill(rows * in)(r.nextGaussian().toFloat)
         val b = if (withBias) Array.fill(out)(r.nextGaussian().toFloat) else null
         Kernels.all.forall { k =>
-          val pack = new Array[Float](in * k.panel)
           val block = Array.fill(rows * out + 3)(-7f)
-          w(k, x, rows, b, block, pack)
+          w(k, x, rows, b, block)
           val single = Array.fill(rows * out + 3)(-7f)
           (0 until rows).foreach { i =>
             val y = new Array[Float](out)
-            w(k, x.slice(i * in, (i + 1) * in), 1, b, y, pack)
+            w(k, x.slice(i * in, (i + 1) * in), 1, b, y)
             System.arraycopy(y, 0, single, i * out, out)
           }
           bits(block) == bits(single)

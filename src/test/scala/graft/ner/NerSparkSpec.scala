@@ -294,6 +294,11 @@ class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "SELECT ner(text) AS e, count(*) AS n FROM ner_docs GROUP BY ner(text)")
     onlyViaExec(grouped)
     onlyViaExec(spark.table("ner_docs").select(col("id"), Ner.ner(col("text")).as("e")))
+    val inAggregate = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT sum(size(ner(text))) AS n FROM ner_docs")
+    }
+    assert(inAggregate.getCondition == "AGGREGATE_FUNCTION_WITH_NONDETERMINISTIC_EXPRESSION",
+      inAggregate.getMessage)
     val p = tmp("bcast-plan.bin")
     TestModels.writeValid(p, classifierBias = TestModels.biasFor(5))
     Ner.registerBroadcast(spark, p)
@@ -442,13 +447,15 @@ class NerSparkSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     unsetPath()
   }
 
-  test("NerEvalExec encoderAttentionTime: the tiny model's attention is part of encoderTime") {
+  test("NerEvalExec stage times: linear, attention and norm are each part of encoderTime") {
     Ner.register(spark)
-    setPath(syntheticModel("attention.bin"))
+    setPath(syntheticModel("stages.bin"))
     val exec = nerExecs(docsIn(3, documents).select(Ner.ner(col("text")))).head
-    val attention = exec.metrics("encoderAttentionTime").value
+    val stages = Seq("encoderLinearTime", "encoderAttentionTime", "encoderNormTime")
+      .map(k => k -> exec.metrics(k).value)
     val encoder = exec.metrics("encoderTime").value
-    assert(attention > 0 && attention <= encoder, s"attention $attention ns of $encoder")
+    assert(stages.forall(_._2 > 0) && stages.map(_._2).sum <= encoder,
+      s"$stages of $encoder ns")
     unsetPath()
   }
 
